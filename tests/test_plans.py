@@ -5,7 +5,9 @@ from silently decaying):
 - dictionary lookups partition-prune to driver-computed buckets,
 - WAND's block-metadata aggregation never reads the posting payload
   columns (parquet column pruning),
-- result assembly joins broadcast the <=k side (no sort-merge join),
+- result assembly runs a fixed number of jobs past the ranking, each a
+  doc_id / term_id literal-filtered scan (no per-query shuffle or full
+  scan of a stored table), and returns a local frame,
 - the index-free proximity scan is shuffle-free,
 - the blocks serving path is pure JVM (zero Python eval nodes).
 """
@@ -65,13 +67,57 @@ def test_wand_metadata_agg_skips_payload_columns(spark, built_index):
     assert "max_wtf" in rs and "min_len_d" in rs
 
 
-def test_assembly_broadcasts_result_side(spark, built_index):
-    """_assemble streams the docs table past the broadcast <=k result set;
-    a sort-merge join here would shuffle the whole docs table per query."""
+# lookup jobs the assembly adds to a query: two rounds of two scans
+ASSEMBLY_JOBS = 4
+
+
+def test_assembly_is_literal_filtered_scans(spark, built_index, monkeypatch):
+    """_assemble runs the ranking once and then only scans stored tables
+    with the <=k doc ids (or their keyword term ids) pushed into the
+    parquet reader: a fixed number of jobs past the ranking, no Exchange
+    (shuffle or broadcast) in any lookup, and a local result frame.
+    Joining the lazy top-k frame instead would re-run the ranking plan
+    once per broadcast and, with AQE pinned off on the serving path, can
+    plan a full shuffle of the forward index per query."""
+    import uuid
+
+    sc = spark.sparkContext
     qe = QueryEngine(spark, built_index["storage"], mode="blocks")
-    plan = _plan(qe.search('searching "engines retrieval"', k=5))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    q = 'searching "engines retrieval"'
+    qe.search(q, k=5).collect()  # warm the term and phrase caches
+
+    def jobs(fn):
+        group = f"plans-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    ranking = jobs(lambda: qe.search(q, k=5, assemble=False).collect())
+    assembled = jobs(lambda: qe.search(q, k=5).collect())
+    assert assembled <= ranking + ASSEMBLY_JOBS, (ranking, assembled)
+
+    scans: dict = {}
+    orig = QueryEngine._collect_concurrently
+
+    def spy(engine, frames):
+        scans.update(frames)
+        return orig(engine, frames)
+
+    monkeypatch.setattr(QueryEngine, "_collect_concurrently", spy)
+    out = qe.search(q, k=5)
+    assert out.count() > 0
+    assert set(scans) == {"top", "edges", "docs", "terms"}
+    for name, key in (("top", "doc_id"), ("edges", "doc_id"),
+                      ("docs", "doc_id"), ("terms", "term_id")):
+        plan = _plan(scans[name])
+        assert "Exchange" not in plan, f"{name} lookup shuffles or broadcasts"
+        pushed = plan.split("PushedFilters:")[1].split("\n")[0]
+        assert key in pushed, f"{name} scan: {key} not pushed ({pushed})"
+    plan = _plan(out)
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
 
 
 def test_proximity_adhoc_is_shuffle_free(spark):

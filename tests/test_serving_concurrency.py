@@ -183,6 +183,41 @@ def test_candidate_block_skipping_lossless_and_engaged(spark, tmp_path):
     assert stats_p["decoded_blocks"] < stats_p["candidate_blocks"]
 
 
+def test_wide_prune_with_candidates_seeds_from_surviving_blocks(
+        spark, tmp_path, monkeypatch):
+    """ADVICE r5 high: the wide prune layout picked its seed blocks among
+    those holding each term's GLOBAL max_wtf, after candidate skipping had
+    removed them, and returned 0 rows.  Here every query term's global-max
+    blocks sit in 40 early docs (high tf, no phrase); only the last 4 of
+    160 later docs hold the phrase, so candidate skipping keeps none of the
+    global-max blocks.  Wide must return the same 4 rows as narrow and
+    columnar, and report its evidence."""
+    from web_based_search_engine_spark.operators import wand as W
+
+    rows = [("r/a", f"a{i:03d}.py", "c1", "py",
+             "haystack haystack haystack needle needle needle common common common")
+            for i in range(40)]
+    rows += [("r/a", f"b{i:03d}.py", "c1", "py",
+              "common needle haystack" if i >= 156 else f"common filler{i}")
+             for i in range(160)]
+    storage = ParquetIndexStorage(tmp_path / "idx")
+    IndexBuilder(spark, storage, _CFG).build(_mini(spark, rows))
+    q = 'common "needle haystack"'
+
+    narrow = _rows(QueryEngine(spark, storage, mode="blocks", wand_prune=True)
+                   .search(q, k=20, assemble=False))
+    columnar = _rows(QueryEngine(spark, storage, mode="columnar")
+                     .search(q, k=20, assemble=False))
+    monkeypatch.setattr(W, "WIDE_PRUNE_CROSSOVER", 0)
+    stats: dict = {}
+    wide = _rows(QueryEngine(spark, storage, mode="blocks", wand_prune=True)
+                 .search(q, k=20, assemble=False, wand_stats=stats))
+    assert len(columnar) == 4
+    assert wide == narrow == columnar
+    assert stats["pruned"] is True
+    assert 0 < stats["decoded_blocks"] < stats["candidate_blocks"], stats
+
+
 def test_vacuum_drop_abandoned_tables(spark, tmp_path):
     """ADVICE r4 low: a tables/ directory dropped from (or never committed
     to) the manifest is reclaimed only under drop_abandoned=True."""

@@ -23,10 +23,10 @@ sys.path.insert(0, "/root/repo")
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def plan_of(df) -> str:
+def plan_of(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+        df.explain(mode)
     return buf.getvalue()
 
 
@@ -100,16 +100,36 @@ def main() -> None:
             "stay unread.",
             plan_of(qe_blocks.search("merge_sort searching", assemble=False)),
         ))
+        # the assembly's lookup scans, recorded as _assemble runs them
+        scans: dict = {}
+        collect_all = qe_blocks._collect_concurrently
+
+        def record(frames):
+            scans.update(frames)
+            return collect_all(frames)
+
+        qe_blocks._collect_concurrently = record
+        try:
+            assembled = qe_blocks.search('merge_sort "searching engines"', k=5)
+        finally:
+            del qe_blocks._collect_concurrently
         sections.append((
-            "Query (blocks): assembled SearchResult plan (top-k + metadata "
-            "+ keywords + links)",
-            "Every join streams a BIG stored table (docs, forward, vocab, "
-            "links) past a BroadcastExchange of the <=k-derived side — "
-            "BroadcastHashJoins only; a SortMergeJoin here would shuffle "
-            "the forward index per query (the round-4 regression "
-            "tests/test_plans.py now guards against, with AQE pinned off "
-            "on the serving path there is no runtime rescue).",
-            plan_of(qe_blocks.search('merge_sort "searching engines"', k=5)),
+            "Query (blocks): assembled SearchResult lookups (top-k + "
+            "metadata + keywords + links)",
+            "No join plan: `_assemble` collects the ranking's <=k (doc_id, "
+            "score) rows once, then runs two rounds of concurrent lookups, "
+            "each a parquet scan with the ids pushed in as a literal IN-list "
+            "(PushedFilters): forward top-5 keyword ids (`top`) and link "
+            "edges (`edges`) keyed by the result ids, then the docs "
+            "metadata of the results and their neighbors (`docs`) and the "
+            "keyword terms (`terms`).  No Exchange anywhere — nothing is "
+            "shuffled or broadcast, and the ranking plan runs once instead "
+            "of once per broadcast.  The returned frame is a LocalTableScan "
+            "(collecting it runs no job); tests/test_plans.py guards the "
+            "shape.",
+            "".join(f"-- {name} lookup\n{plan_of(df, 'simple')}\n"
+                    for name, df in scans.items())
+            + f"-- returned frame\n{plan_of(assembled, 'simple')}",
         ))
         # two-pass phrase: force the plan regardless of the df crossover so
         # the pass-2 shape (block semi-join prune -> positional decode ->

@@ -55,6 +55,17 @@ def lookup_terms(
     return [r.asDict() for r in rows]
 
 
+def df_of_term(term_rows: list[dict]):
+    """Catalyst column: the df of each row's ``term_id``, from a literal
+    term_id -> df map over the query's resolved vocab rows.  Callers apply
+    it to postings already filtered to those term ids, so every lookup
+    hits.  A literal map, not a joined driver-built frame: the frame
+    would be a LogicalRDD whose broadcast costs its own job per query."""
+    return F.create_map(
+        *[F.lit(int(x)).cast("long") for r in term_rows for x in (r["term_id"], r["df"])]
+    )[F.col("term_id")]
+
+
 def weighted_tf(title_weight: float = 0.9):
     return title_weight * F.col("title_tf") + (1.0 - title_weight) * F.col("body_tf")
 
@@ -110,11 +121,7 @@ def score_query_terms(
         # terms' partitions are read at all
         cand = cand.where(F.col("bucket").isin(sorted({r["bucket"] for r in qt})))
 
-    # df lookup: tiny (|query| rows) -> broadcast literal join
-    df_map = spark.createDataFrame(
-        [(r["term_id"], r["df"]) for r in qt], "term_id long, df long"
-    )
-    cand = cand.join(F.broadcast(df_map), "term_id")
+    cand = cand.withColumn("df", df_of_term(qt))
 
     if cfg.scorer == "reference":
         if "doc_norm" not in docs.columns:

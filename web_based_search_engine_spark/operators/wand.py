@@ -37,13 +37,13 @@ cosine normalization breaks additivity), so WAND is bm25-only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..config import ScoringConfig
 from . import blocks as B
-from .scoring import bm25_term_score, lookup_terms, top_k
+from .scoring import bm25_term_score, df_of_term, lookup_terms, top_k
 
 # Candidate-set block skipping (VERDICT r4 directive 4): above this many
 # candidate docs the exact per-block containment semi-join (a broadcast
@@ -74,10 +74,13 @@ class PersistPool:
     holds the most recent ``capacity`` pinned frames under a lock: with
     capacity >= the server's concurrency no in-flight frame is ever
     evicted, and total pinned storage stays bounded at ``capacity``
-    queries' pinned frames (since r5 those are stats-only block-metadata
-    projections — a few columns per candidate block, payloads never
-    cached).  ``evictions`` instruments the no-mid-flight-
-    unpersist claim for tests."""
+    queries' pinned frames.  What a frame holds depends on the prune
+    layout (see wand_top_k): the narrow layout pins the full candidate
+    block frame, payload columns included (at most WIDE_PRUNE_CROSSOVER
+    blocks by the driver-side estimate); the wide layout pins only the
+    block-metadata projection, a few scalars per candidate block.
+    ``evictions`` instruments the no-mid-flight-unpersist claim for
+    tests."""
 
     def __init__(self, capacity: int = 8):
         import threading
@@ -108,7 +111,7 @@ class PersistPool:
 def _score_decoded(
     decoded: DataFrame,
     docs: DataFrame,
-    df_map: DataFrame,
+    df_col: Column,
     n_docs: int,
     avg_doc_len: float,
     cfg: ScoringConfig,
@@ -119,7 +122,7 @@ def _score_decoded(
         # docs so the final top-k is the top-k of the FILTERED ranking
         # (phrase filters before limit, Indexer.java:270-276)
         decoded = decoded.join(candidates.select("doc_id"), "doc_id", "left_semi")
-    cand = decoded.join(F.broadcast(df_map), "term_id").join(
+    cand = decoded.withColumn("df", df_col).join(
         docs.select("doc_id", (F.col("title_len") + F.col("body_len")).alias("len_d")),
         "doc_id",
     )
@@ -181,8 +184,9 @@ def wand_top_k(
     bounded registry — the serving engine's choice) or a legacy
     caller-owned list (serial semantics: this call first unpersists and
     removes whatever is in it, then appends its own frame — AT MOST one
-    query's pruned block METADATA stays pinned — payload columns are never
-    cached by the prune path).
+    query's pinned frame stays).  The pinned frame is the full candidate
+    block frame, payloads included, in the narrow layout, and the
+    block-metadata projection alone in the wide layout.
     ``k``: result size (defaults to cfg.top_k) — both the pruning
     threshold (k-th seed score) and the final cut honor it, so callers
     requesting k > cfg.top_k are not silently capped.
@@ -199,14 +203,22 @@ def wand_top_k(
     counts cost two extra count jobs over the already-persisted candidate
     metadata, paid only when requested; candidate_blocks counts blocks
     BEFORE candidate-range skipping, decoded_blocks what actually
-    decodes)."""
+    decodes).  Every return path fills it, the empty ones included."""
     cfg = cfg or ScoringConfig()
     k = cfg.top_k if k is None else k  # explicit k=0 means 0 rows, not default
     assert cfg.scorer == "bm25", "WAND upper bounds require the additive BM25 scorer"
+
+    def empty(pruned: bool = False, counted: DataFrame | None = None) -> DataFrame:
+        # every early return still reports its (empty) evidence
+        if stats is not None:
+            stats.update({"pruned": pruned, "decoded_blocks": 0, "tau": None,
+                          "candidate_blocks": counted.count() if counted is not None else 0})
+        return blocks.sparkSession.createDataFrame([], "doc_id long, score double")
+
     if k <= 0:
         # short-circuit BEFORE the prune path: with k=0 the seed pass
         # collects an empty list and `kth[-1]` below would IndexError
-        return blocks.sparkSession.createDataFrame([], "doc_id long, score double")
+        return empty()
     if isinstance(persist_registry, list) and persist_registry:
         # legacy serial registry: previous query's pruned block set is by
         # now either materialized (its result was collected) or abandoned —
@@ -214,10 +226,9 @@ def wand_top_k(
         for prev in persist_registry:
             prev.unpersist(blocking=False)
         persist_registry.clear()
-    spark = blocks.sparkSession
     qt = term_rows if term_rows is not None else lookup_terms(vocab, terms)
     if not qt:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty()
 
     term_ids = [r["term_id"] for r in qt]
     buckets = sorted({r["bucket"] for r in qt})
@@ -242,9 +253,7 @@ def wand_top_k(
                 & (F.col("_cand_doc") <= F.col("last_doc_id")),
                 "left_semi",
             )
-    df_map = spark.createDataFrame(
-        [(r["term_id"], r["df"]) for r in qt], "term_id long, df long"
-    )
+    df_col = df_of_term(qt)
 
     # Small-query shortcut ("auto" only; tests force True/False): the vocab
     # lookup already gives df per term, so the block count is known
@@ -270,7 +279,7 @@ def wand_top_k(
             )
         return top_k(
             _score_decoded(
-                B.decode_blocks(cand), docs, df_map, n_docs, avg_doc_len, cfg, candidates
+                B.decode_blocks(cand), docs, df_col, n_docs, avg_doc_len, cfg, candidates
             ),
             k,
         )
@@ -336,38 +345,33 @@ def wand_top_k(
     elif persist_registry is not None:
         persist_registry.append(meta)
 
-    # threshold pass: one seed block per term, chosen as the best
-    # query-time ub AMONG blocks holding the term's global max_wtf.  Any
-    # decoded subset yields a valid (lossless) threshold — partial sums
-    # never exceed true scores — so restricting the pick to max_wtf == gw
-    # blocks trades nothing, and it makes the payload fetch PUSHABLE:
-    # (term_id = t AND max_wtf = gw_t AND block_id = b) is a plain
-    # conjunction of comparisons parquet row-group stats can skip on,
-    # where a bare block_id literal cannot skip when row groups span the
-    # term's whole block range.  The tiny collect (one row per query term)
-    # doubles as the meta persist's materialization job.
+    # threshold pass: one seed block per term, the best query-time ub
+    # among the term's SURVIVING candidate blocks (candidate skipping may
+    # have removed the blocks holding its global max_wtf).  Any decoded
+    # subset yields a valid (lossless) threshold — partial sums never
+    # exceed true scores.  The wide layout fetches each seed's payload
+    # through a PUSHABLE conjunction (term_id = t AND max_wtf >= w_b AND
+    # block_id = b, with w_b the chosen block's own max_wtf): parquet
+    # row-group stats can skip on it, where a bare block_id literal cannot
+    # skip when row groups span the term's whole block range.  The tiny
+    # collect (one row per query term) doubles as the meta persist's
+    # materialization job.
     w = Window.partitionBy("term_id").orderBy(F.desc(ub), "block_id")
     if wide:
-        seed_pick = None
-        for tid in term_ids:
-            gw_t = bounds[tid][0]
-            clause = (F.col("term_id") == tid) & (F.col("max_wtf") >= F.lit(gw_t))
-            seed_pick = clause if seed_pick is None else (seed_pick | clause)
         best = (
-            meta.where(seed_pick)
-            .withColumn("_rn", F.row_number().over(w))
+            meta.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
-            .select("term_id", "block_id", "first_doc_id", "last_doc_id")
+            .select("term_id", "block_id", "max_wtf", "first_doc_id", "last_doc_id")
             .collect()
         )
         if not best:
-            return spark.createDataFrame([], "doc_id long, score double")
+            # no candidate block survived skipping: nothing can match
+            return empty(True, cand_pre_skip)
         seed_filter = None
         for r in best:
-            gw_t = bounds[r["term_id"]][0]
             clause = (
                 (F.col("term_id") == r["term_id"])
-                & (F.col("max_wtf") >= F.lit(gw_t))
+                & (F.col("max_wtf") >= F.lit(r["max_wtf"]))
                 & (F.col("block_id") == r["block_id"])
             )
             seed_filter = clause if seed_filter is None else (seed_filter | clause)
@@ -396,7 +400,7 @@ def wand_top_k(
         seed_docs_side = docs
     seed_scores = _score_decoded(
         B.decode_blocks(seed_src), seed_docs_side,
-        df_map, n_docs, avg_doc_len, cfg, candidates,
+        df_col, n_docs, avg_doc_len, cfg, candidates,
     )
     kth = (
         seed_scores.orderBy(F.desc("score")).limit(k).collect()
@@ -472,6 +476,6 @@ def wand_top_k(
              else keep.count(), "tau": tau}
         )
     scored = _score_decoded(
-        B.decode_blocks(keep), docs_f, df_map, n_docs, avg_doc_len, cfg, candidates
+        B.decode_blocks(keep), docs_f, df_col, n_docs, avg_doc_len, cfg, candidates
     )
     return top_k(scored, k)

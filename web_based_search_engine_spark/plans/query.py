@@ -4,21 +4,28 @@ Pipeline: parse -> stem/encode (driver-side, read-only dictionary lookup;
 fixes Appendix C-W2) -> partition-pruned posting scan -> score (BM25 WAND
 over compressed blocks, or Catalyst scoring over columnar postings) ->
 phrase semi-join filter (scores unchanged — filter only,
-Indexer.java:270-276) -> deterministic top-k -> result assembly joins.
+Indexer.java:270-276) -> deterministic top-k -> result assembly.
 
 The reference assembled full SearchResults for every matching doc and
 limited afterwards (JavalinServer.java:67-74); the rebuild takes top-k
-first and assembles <=50 rows via broadcast joins (SURVEY §3 EP2 note).
+first (SURVEY §3 EP2 note), collects those <=50 (doc_id, score) rows, and
+assembles them from scans of docs, forward, links and vocab with the ids
+pushed in as literal IN-lists.  The assembled result is a local frame.
 """
 
 from __future__ import annotations
 
 import re
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.util import inheritable_thread_target
 
 from ..config import MAX_KEYWORD_COUNT, AnalysisConfig, ScoringConfig
 from ..functions.analysis import analyze_text_py
@@ -87,6 +94,23 @@ class _SnapshotState:
             base.unpersist(blocking=False)
         if self.persist_pool is not None:
             self.persist_pool.release_all()
+
+
+def _result_schema(st: _SnapshotState, meta_cols: list[str]) -> pa.Schema:
+    """Arrow schema of the assembled rows: the docs metadata columns as
+    stored, the score, and the keyword / link columns the snapshot can
+    fill (tests/test_assemble.py pins the names, order and Spark types)."""
+    fields = [st.docs.schema[c] for c in meta_cols]
+    fields.append(T.StructField("score", T.DoubleType()))
+    if st.forward is not None:
+        tf_type = st.forward.schema["term_tfs"].dataType.elementType["tf"].dataType
+        keyword = T.StructType([T.StructField("tf", tf_type), T.StructField("term", T.StringType())])
+        fields.append(T.StructField("keywords", T.ArrayType(keyword, containsNull=False)))
+    if st.links is not None:
+        for side in ("parent", "child"):
+            fields.append(T.StructField(f"{side}_ids", T.ArrayType(T.LongType())))
+            fields.append(T.StructField(f"{side}_paths", T.ArrayType(T.StringType())))
+    return to_arrow_schema(T.StructType(fields))
 
 
 def parse_query(query: str, cfg: AnalysisConfig | None = None) -> ParsedQuery:
@@ -167,6 +191,9 @@ class QueryEngine:
         # in-flight query's blocks are evicted while concurrency stays
         # at or below it
         self._persist_pool_capacity = 8
+        # threads for the assembly's concurrent lookups: a query runs the
+        # first scan of each round itself and hands the other to this pool
+        self._lookup_pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="assemble")
         self._state = self._build_state()
 
     def _build_state(self) -> _SnapshotState:
@@ -304,6 +331,12 @@ class QueryEngine:
     def search(self, query: str, k: int | None = None, assemble: bool = True,
                wand_stats: dict | None = None) -> DataFrame:
         """Free-text search; supports one quoted phrase (EP2).
+
+        ``assemble=True`` returns SearchResult rows (see ``_assemble``):
+        the ranking and the assembly lookups run inside this call, and
+        the returned frame is local, so collecting it runs no Spark job.
+        ``assemble=False`` returns the lazy ranking plan of (doc_id,
+        score) rows; nothing runs until it is collected.
         ``wand_stats``: optional dict receiving blocks-mode pruning
         evidence (see wand_top_k) — bench's --wand-prune artifact."""
         pq = parse_query(query, self.analysis)
@@ -504,111 +537,123 @@ class QueryEngine:
             scored = scored.join(cand.frame, "doc_id", "left_semi")
         return scored
 
+    def _collect_concurrently(self, frames: dict[str, DataFrame]) -> dict[str, list]:
+        """Collect every frame at once: the first on the calling thread,
+        the others on the engine's lookup pool.
+
+        Spark job groups and tags are thread-local, so each pool task runs
+        under the calling thread's local properties (job group, job tags)
+        and session tags, via ``inheritable_thread_target``: its jobs count
+        toward the caller's group and are cancelled with the caller's tag.
+        The task clears its session tags afterwards, so a reused pool
+        thread never carries one query's tags into the next."""
+        spark, names = self.spark, list(frames)
+        wrap = inheritable_thread_target(spark)
+        futures = {}
+        for name in names[1:]:
+            # (with pinned-thread mode off there is no thread-local state
+            # to carry, and the helper hands back the session itself)
+            run = wrap(frames[name].collect) if wrap is not spark else frames[name].collect
+
+            def task(run=run):
+                try:
+                    return run()
+                finally:
+                    spark.clearTags()
+
+            futures[name] = self._lookup_pool.submit(task)
+        out = {names[0]: frames[names[0]].collect()} if names else {}
+        out.update({name: f.result() for name, f in futures.items()})
+        return out
+
     def _assemble(self, st: _SnapshotState, topk: DataFrame) -> DataFrame:
-        """Result assembly (#31): <=k rows, broadcast joins only.
+        """Result assembly (#31): SearchResult rows for the <=k ranked docs.
+
+        Runs the ranking plan once (one collect of the <=k (doc_id, score)
+        rows), then reads only the rows those ids reach, in two rounds of
+        concurrent scans: the result docs' top-5 keyword ids (forward) and
+        link edges, then the docs metadata of the results and their
+        neighbors plus the keyword terms (vocab).  Each scan carries its
+        doc_id / term_id IN-list as a pushed parquet filter, and no stored
+        table is shuffled or broadcast per query.  Returns a local frame
+        (a LocalRelation: collecting it runs no job) ordered by (score
+        desc, doc_id asc).
 
         Columns mirror SearchResult.java: rank metadata, doc identity,
-        title/len metadata, and the top-5 keywords with frequencies
-        (SearchResult.java:33-44; deterministic tiebreak term_id asc)."""
-        # broadcast the <=k result side, stream the docs table past it
+        title/len metadata, the top-5 keywords with frequencies (chosen by
+        tf desc, term_id asc; listed by tf desc, term desc —
+        SearchResult.java:33-44), and parent/child links (LinkIndexer
+        getParentLinks/getChildLinks, LinkIndexer.java:100-121) as sorted
+        neighbor ids with their paths aligned, like buildSearchResult's
+        docId->URL decode (Indexer.java:194-231); null when a doc has no
+        keywords or no neighbors."""
         meta_cols = [
             "doc_id", "repo", "path", "commit", "lang",
             "title_len", "body_len", "sha256",
         ]
         if "size_bytes" in st.docs.columns:  # Metadata.pageSize analog
             meta_cols.append("size_bytes")
-        out = st.docs.select(*meta_cols).join(F.broadcast(topk), "doc_id")
+        schema = _result_schema(st, meta_cols)
+        ranked = topk.collect()
+        if not ranked:
+            return self.spark.createDataFrame(schema.empty_table())
+        ids = [r["doc_id"] for r in ranked]
+
+        hop1 = {}
         if st.forward is not None:
-            # top-5 keywords: sort struct(tf desc, term_id asc), slice 5
-            kw = st.forward.select(
+            # top-5 keyword ids: sort struct(tf, -term_id) desc, slice 5
+            hop1["top"] = st.forward.where(F.col("doc_id").isin(ids)).select(
                 "doc_id",
                 F.slice(
-                    F.reverse(
-                        F.array_sort(
-                            F.transform(
-                                "term_tfs",
-                                lambda s: F.struct(
-                                    s["tf"].alias("tf"), (-s["term_id"]).alias("neg_id")
-                                ),
-                            )
-                        )
-                    ),
-                    1,
-                    MAX_KEYWORD_COUNT,
-                ).alias("_top"),
-            ).select(
-                "doc_id",
-                F.transform(
-                    "_top",
-                    lambda s: F.struct(
-                        (-s["neg_id"]).cast("long").alias("term_id"), s["tf"].alias("tf")
-                    ),
-                ).alias("_top"),
+                    F.reverse(F.array_sort(F.transform(
+                        "term_tfs",
+                        lambda s: F.struct(s["tf"].alias("tf"), (-s["term_id"]).alias("neg_id")),
+                    ))),
+                    1, MAX_KEYWORD_COUNT,
+                ).alias("top"),
             )
-            # broadcast discipline (serving runs with AQE OFF, so no runtime
-            # rescue): every join here streams a BIG stored table (forward,
-            # vocab) past a broadcast of the <=k-derived side — without the
-            # hints these planned as SortMergeJoins, i.e. a full
-            # forward-index shuffle per query at cluster scale
-            exploded = (
-                kw.join(F.broadcast(topk.select("doc_id")), "doc_id")
-                .select("doc_id", F.explode("_top").alias("kwent"))
-                .select("doc_id", F.col("kwent.term_id").alias("term_id"), F.col("kwent.tf").alias("tf"))
-            )
-            exploded = (
-                st.vocab.select("term_id", "term")
-                .join(F.broadcast(exploded), "term_id")
-                .groupBy("doc_id")
-                .agg(
-                    F.reverse(
-                        F.array_sort(F.collect_list(F.struct("tf", "term")))
-                    ).alias("keywords")
-                )
-            )
-            out = out.join(F.broadcast(exploded), "doc_id", "left")
         if st.links is not None:
-            # parent/child link lists (SearchResult parity via LinkIndexer
-            # getParentLinks/getChildLinks, LinkIndexer.java:100-121): the
-            # edge scan is filtered to the <=k result docs first, so each
-            # side is a broadcast semi-join + tiny agg.  Neighbor ids are
-            # then decoded to paths, matching buildSearchResult's docId->URL
-            # decode of parent/child links (Indexer.java:194-231): the tiny
-            # filtered edge set is the broadcast side, the docs table is
-            # streamed past it — no docs shuffle.
-            ids = topk.select("doc_id")
-            nbr_paths = st.docs.select(
-                F.col("doc_id").alias("_nbr_id"), F.col("path").alias("_nbr_path")
-            )
+            hop1["edges"] = st.links.where(
+                F.col("src_doc_id").isin(ids) | F.col("dst_doc_id").isin(ids)
+            ).select("src_doc_id", "dst_doc_id")
+        got = self._collect_concurrently(hop1)
+        top = {r["doc_id"]: [(-e["neg_id"], e["tf"]) for e in r["top"] or []]
+               for r in got.get("top", [])}
+        parents: dict[int, set] = {}
+        children: dict[int, set] = {}
+        id_set = set(ids)
+        for src, dst in got.get("edges", []):
+            if dst in id_set:
+                parents.setdefault(dst, set()).add(src)
+            if src in id_set:
+                children.setdefault(src, set()).add(dst)
+        nbrs = set().union(*parents.values(), *children.values())
+        term_ids = sorted({tid for kws in top.values() for tid, _ in kws})
 
-            def neighbor_lists(key_col: str, nbr_col: str, prefix: str) -> DataFrame:
-                edges = st.links.join(
-                    F.broadcast(ids.withColumnRenamed("doc_id", key_col)), key_col
-                )
-                return (
-                    F.broadcast(edges)
-                    .join(nbr_paths, F.col(nbr_col) == F.col("_nbr_id"))
-                    .groupBy(F.col(key_col).alias("doc_id"))
-                    .agg(
-                        F.sort_array(
-                            F.collect_set(
-                                F.struct(
-                                    F.col(nbr_col).alias("id"),
-                                    F.col("_nbr_path").alias("path"),
-                                )
-                            )
-                        ).alias("_n")
-                    )
-                    .select(
-                        "doc_id",
-                        F.transform("_n", lambda s: s["id"]).alias(f"{prefix}_ids"),
-                        F.transform("_n", lambda s: s["path"]).alias(f"{prefix}_paths"),
-                    )
-                )
+        hop2 = {"docs": st.docs.where(F.col("doc_id").isin(sorted(id_set | nbrs)))
+                .select(*meta_cols)}
+        if term_ids:
+            hop2["terms"] = st.vocab.where(F.col("term_id").isin(term_ids)).select("term_id", "term")
+        got = self._collect_concurrently(hop2)
+        meta = {r["doc_id"]: r for r in got["docs"]}
+        term_of = dict(got.get("terms", []))
 
-            parents = neighbor_lists("dst_doc_id", "src_doc_id", "parent")
-            children = neighbor_lists("src_doc_id", "dst_doc_id", "child")
-            out = (
-                out.join(F.broadcast(parents), "doc_id", "left")
-                .join(F.broadcast(children), "doc_id", "left")
-            )
-        return out.orderBy(F.desc("score"), F.asc("doc_id"))
+        def neighbors(ns) -> tuple:
+            # neighbors absent from docs drop out, as an inner join would
+            found = sorted(n for n in ns if n in meta)
+            return (found, [meta[n]["path"] for n in found]) if found else (None, None)
+
+        rows = []
+        for r in ranked:
+            row = {**meta[r["doc_id"]].asDict(), "score": r["score"]}
+            if st.forward is not None:
+                kws = sorted(
+                    ((tf, term_of[tid]) for tid, tf in top.get(r["doc_id"], ()) if tid in term_of),
+                    reverse=True,
+                )
+                row["keywords"] = [{"tf": tf, "term": t} for tf, t in kws] or None
+            if st.links is not None:
+                row["parent_ids"], row["parent_paths"] = neighbors(parents.get(r["doc_id"], ()))
+                row["child_ids"], row["child_paths"] = neighbors(children.get(r["doc_id"], ()))
+            rows.append(row)
+        return self.spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
