@@ -299,7 +299,7 @@ def _q_full_engine_phrase(spark, sf_dir):
     IndexBuilder(spark, storage, IndexConfig(num_term_buckets=4)).build(
         corpus_df(spark, 300), resume=False
     )
-    qe = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"), mode="blocks")
+    qe = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"))
     out = qe.search('searching "engines retrieval" posting').select(
         "doc_id", "repo", "path", F.round("score", 6).alias("score")
     )

@@ -7,8 +7,8 @@ Prints ONE JSON line:
 
 Headline value = end-to-end wall seconds for (full index build over the
 documents corpus + the query suite).  The build is the expensive, scaling-
-relevant part; per-query latencies cover both physical modes (columnar
-Catalyst scoring and compressed-block WAND) plus the training-data ops.
+relevant part; per-query latencies cover the compressed-block WAND query
+path plus the training-data ops.
 
 Scaling evidence (north_rule: throughput efficiency >= 0.8 from N to 4N):
 run ``python bench.py --scaling`` (or env SPARK_GRAFT_SCALING=1) — executes
@@ -180,25 +180,24 @@ def run_suite(spark, sf_dir: str, workdir: str) -> dict:
     }
     reps = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", "5"))
     samples: list[float] = []
-    for mode in ("columnar", "blocks"):
-        qe = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"), mode=mode)
-        for name, q in search_queries.items():
-            # one untimed warmup per shape: the first execution of a plan
-            # shape pays whole-stage codegen + parquet footer reads that a
-            # serving process amortizes across its lifetime — p50/p95 here
-            # are steady-state serving latency, not JIT warmup.  For the
-            # phrase shape the warmup also populates the engine's LRU
-            # filter-set cache (plans/query.py), so timed reps measure the
-            # repeated-query path — the dominant production case for hot
-            # phrases; the cold path is the warmup run itself.
+    qe = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"))
+    for name, q in search_queries.items():
+        # one untimed warmup per shape: the first execution of a plan
+        # shape pays whole-stage codegen + parquet footer reads that a
+        # serving process amortizes across its lifetime — p50/p95 here
+        # are steady-state serving latency, not JIT warmup.  For the
+        # phrase shape the warmup also populates the engine's LRU
+        # filter-set cache (plans/query.py), so timed reps measure the
+        # repeated-query path — the dominant production case for hot
+        # phrases; the cold path is the warmup run itself.
+        qe.search(q, assemble=False).collect()
+        per_q: list[float] = []
+        for _ in range(reps):
+            t0 = time.time()
             qe.search(q, assemble=False).collect()
-            per_q: list[float] = []
-            for _ in range(reps):
-                t0 = time.time()
-                qe.search(q, assemble=False).collect()
-                per_q.append(time.time() - t0)
-            samples.extend(per_q)
-            results[f"{name}[{mode}]"] = round(min(per_q), 3)
+            per_q.append(time.time() - t0)
+        samples.extend(per_q)
+        results[f"{name}[blocks]"] = round(min(per_q), 3)
     samples.sort()
     q_p50 = samples[len(samples) // 2]
     q_p95 = samples[min(len(samples) - 1, int(len(samples) * 0.95))]
@@ -212,8 +211,7 @@ def run_suite(spark, sf_dir: str, workdir: str) -> dict:
     # from an untimed extra run (they cost two count jobs); timed reps are
     # stats-free.
     qe_forced = QueryEngine(
-        spark, storage, ScoringConfig(scorer="bm25"), mode="blocks",
-        wand_prune=True,
+        spark, storage, ScoringConfig(scorer="bm25"), wand_prune=True,
     )
     wand_evidence: dict[str, dict] = {}
     for name in ("search_zipf_head", "search_hot_term", "search_broad"):

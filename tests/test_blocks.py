@@ -71,29 +71,28 @@ def _fuzz_group_pdf(seed: int, n_terms: int = 7, max_docs: int = 40):
 
 
 def test_encoders_byte_identical():
-    """encode_group_arrow == encode_group_pdf == row-wise reference encoder,
-    byte-for-byte, on fuzzed groups (the equivalence both docstrings claim)."""
+    """encode_group_arrow == row-wise reference encoder, byte-for-byte, on
+    fuzzed groups (the equivalence both docstrings claim)."""
     import pyarrow as pa
 
     for seed in (1, 7, 42):
         pdf = _fuzz_group_pdf(seed)
         for block_size in (4, 128):
             want = B.encode_group_pdf_rowwise(pdf.copy(), block_size)
-            got_pdf = B.encode_group_pdf(pdf.copy(), block_size)
             tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-            got_arrow = B.encode_group_arrow(tbl, block_size).to_pandas()
+            got = B.encode_group_arrow(tbl, block_size).to_pandas()
+
             def norm(v):
                 # list columns round-trip as ndarray cells via Arrow
                 return [int(x) for x in v] if isinstance(v, (list, np.ndarray)) else v
 
-            for got in (got_pdf, got_arrow):
-                g = got.sort_values(["term_id", "block_id"]).reset_index(drop=True)
-                w = want.sort_values(["term_id", "block_id"]).reset_index(drop=True)
-                assert len(g) == len(w) and len(g) > 0
-                for col in want.columns:
-                    assert [norm(v) for v in g[col]] == [norm(v) for v in w[col]], (
-                        seed, block_size, col,
-                    )
+            g = got.sort_values(["term_id", "block_id"]).reset_index(drop=True)
+            w = want.sort_values(["term_id", "block_id"]).reset_index(drop=True)
+            assert len(g) == len(w) and len(g) > 0
+            for col in want.columns:
+                assert [norm(v) for v in g[col]] == [norm(v) for v in w[col]], (
+                    seed, block_size, col,
+                )
 
 
 def test_decoder_arrow_matches_pdf():
@@ -104,7 +103,7 @@ def test_decoder_arrow_matches_pdf():
 
     for seed in (3, 11, 42):
         pdf = _fuzz_group_pdf(seed)
-        enc = B.encode_group_pdf(pdf, block_size=8)
+        enc = B.encode_group_pdf_rowwise(pdf, block_size=8)
         for with_pos in (False, True):
             want = B.decode_blocks_pdf(enc, with_positions=with_pos)
             got = B.decode_blocks_arrow(
@@ -158,7 +157,7 @@ def test_decoder_block_id_provenance():
     import pyarrow as pa
 
     for seed in (3, 42):
-        enc = B.encode_group_pdf(_fuzz_group_pdf(seed), block_size=8)
+        enc = B.encode_group_pdf_rowwise(_fuzz_group_pdf(seed), block_size=8)
         tbl = pa.Table.from_pandas(enc, preserve_index=False)
         got = B.decode_blocks_arrow(tbl, with_block_ids=True).to_pandas()
         assert "block_id" in got.columns

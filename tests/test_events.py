@@ -132,7 +132,7 @@ def test_aqe_conf_split(spark, built_index, tmp_path):
     from web_based_search_engine_spark.plans.query import QueryEngine
 
     before = spark.conf.get("spark.sql.adaptive.enabled")
-    qe = QueryEngine(spark, built_index["storage"], mode="columnar")
+    qe = QueryEngine(spark, built_index["storage"])
     assert qe.spark is not spark
     assert qe.spark.conf.get("spark.sql.adaptive.enabled") == "false"
     # caller's session untouched; engine DataFrames bound to the clone
@@ -144,14 +144,14 @@ def test_aqe_conf_split(spark, built_index, tmp_path):
     assert qe.spark.conf.get("spark.sql.shuffle.partitions") == "8"
     # serving_shuffle_partitions=None inherits the session setting
     qe3 = QueryEngine(
-        spark, built_index["storage"], mode="columnar",
+        spark, built_index["storage"],
         serving_shuffle_partitions=None,
     )
     assert qe3.spark.conf.get("spark.sql.shuffle.partitions") == spark.conf.get(
         "spark.sql.shuffle.partitions"
     )
     # adaptive=None opts out of the clone entirely (caller manages conf)
-    qe2 = QueryEngine(spark, built_index["storage"], mode="columnar", adaptive=None)
+    qe2 = QueryEngine(spark, built_index["storage"], adaptive=None)
     assert qe2.spark is spark
 
 

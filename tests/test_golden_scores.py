@@ -82,7 +82,7 @@ def test_add_and_search_end_to_end(spark, tmp_path):
     )
     storage = ParquetIndexStorage(tmp_path / "idx")
     IndexBuilder(spark, storage, IndexConfig(num_term_buckets=2)).build(corpus)
-    qe = QueryEngine(spark, storage, mode="columnar")
+    qe = QueryEngine(spark, storage)
     # "this is a" are stopwords -> only "test" indexed from title
     assert qe.search("test", assemble=False).count() == 1
     assert qe.search("hello", assemble=False).count() == 1

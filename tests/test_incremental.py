@@ -185,8 +185,8 @@ def test_upsert_partition_granular(spark, tmp_path):
     # natural key (ids may differ for the inserted doc)
     fresh_storage = ParquetIndexStorage(tmp_path / "idx_fresh")
     IndexBuilder(spark, fresh_storage, cfg).build(_mini_corpus(spark, new_rows))
-    qe_ups = QueryEngine(spark, storage, mode="blocks")
-    qe_new = QueryEngine(spark, fresh_storage, mode="blocks")
+    qe_ups = QueryEngine(spark, storage)
+    qe_new = QueryEngine(spark, fresh_storage)
 
     def by_key(qe, q):
         out = qe.search(q, assemble=False)
@@ -241,7 +241,7 @@ def test_incremental_update_end_to_end(spark, tmp_path):
     rep2 = incremental_update(spark, storage, _mini_corpus(spark, v2), CFG)
     assert rep2.stages_run  # rebuilt
 
-    qe = QueryEngine(spark, storage, mode="columnar")
+    qe = QueryEngine(spark, storage)
     assert qe.search("zeta", assemble=False).count() == 1
     assert qe.search("gamma", assemble=False).count() == 1
     # old content of f2 is gone (delete-then-insert semantics)
@@ -275,7 +275,7 @@ def test_upsert_partial_index_preserves_stored_docs(spark, tmp_path):
     )
     docs = storage.read_table(spark, "docs")
     assert docs.count() == 3
-    qe = QueryEngine(spark, storage, mode="columnar")
+    qe = QueryEngine(spark, storage)
     assert qe.search("alpha", assemble=False).count() == 1   # stored doc kept
     assert qe.search("epsilon", assemble=False).count() == 1  # delta applied
     assert storage.has_table("blocks")  # full rebuild restored the table
@@ -298,7 +298,7 @@ def test_upsert_duplicate_key_batch_newest_wins(spark, tmp_path):
     assert docs.count() == 2
     f1 = docs.where(F.col("path") == "f1.py").collect()
     assert len(f1) == 1 and f1[0]["commit"] == "c3"
-    qe = QueryEngine(spark, storage, mode="columnar")
+    qe = QueryEngine(spark, storage)
     assert qe.search("zznewest", assemble=False).count() == 1
     assert qe.search("zzmid", assemble=False).count() == 0
     # postings not duplicated: alpha matches exactly one doc once
@@ -325,7 +325,7 @@ def test_upsert_layout_pinned_to_stored_index(spark, tmp_path):
 
     for r in storage.read_table(spark, "vocab").select("term", "bucket").collect():
         assert term_bucket(r["term"], 2) == r["bucket"], r["term"]
-    qe = QueryEngine(spark, storage, mode="columnar")
+    qe = QueryEngine(spark, storage)
     assert qe.search("gamma", assemble=False).count() == 1
     assert qe.search("alpha", assemble=False).count() == 1
 
@@ -383,7 +383,7 @@ def test_upsert_norm_free_docs_is_partition_granular(spark, tmp_path):
     IndexBuilder(spark, fresh, cfg).build(_mini_corpus(spark, new_rows))
 
     def by_key(st, q):
-        qe = QueryEngine(spark, st, mode="blocks")
+        qe = QueryEngine(spark, st)
         out = qe.search(q, assemble=False)
         docs = st.read_table(spark, "docs").select("doc_id", "repo", "path")
         return {
@@ -397,8 +397,7 @@ def test_upsert_norm_free_docs_is_partition_granular(spark, tmp_path):
     # reference scorer refuses a norm-free index with a clear error
     from web_based_search_engine_spark.config import ScoringConfig
 
-    qr = QueryEngine(spark, storage, ScoringConfig(scorer="reference"),
-                     mode="columnar")
+    qr = QueryEngine(spark, storage, ScoringConfig(scorer="reference"))
     with _pytest.raises(RuntimeError, match="reference_norms"):
         qr.search("zulu", assemble=False).collect()
 
@@ -444,11 +443,10 @@ def test_full_snapshot_tombstone_deletes(spark, tmp_path):
     )
     assert rep.stages_run
 
-    # (a) deleted content is unfindable in BOTH query modes
-    for mode in ("blocks", "columnar"):
-        qe = QueryEngine(spark, storage, mode=mode)
-        assert qe.search("zulu", assemble=False).count() == 0, mode
-        assert qe.search("yankee xray", assemble=False).count() == 0, mode
+    # (a) deleted content is unfindable
+    qe = QueryEngine(spark, storage)
+    assert qe.search("zulu", assemble=False).count() == 0
+    assert qe.search("yankee xray", assemble=False).count() == 0
     docs_v2 = {
         (r["repo"], r["path"]): r["doc_id"]
         for r in storage.read_table(spark, "docs").collect()
@@ -478,7 +476,7 @@ def test_full_snapshot_tombstone_deletes(spark, tmp_path):
     IndexBuilder(spark, fresh_storage, cfg).build(_mini_corpus(spark, rows))
 
     def by_key(st, q):
-        qe = QueryEngine(spark, st, mode="blocks")
+        qe = QueryEngine(spark, st)
         out = qe.search(q, assemble=False)
         docs = st.read_table(spark, "docs").select("doc_id", "repo", "path")
         return {
@@ -520,7 +518,7 @@ def test_full_snapshot_delete_with_simultaneous_upsert(spark, tmp_path):
         (r["repo"], r["path"]) for r in storage.read_table(spark, "docs").collect()
     }
     assert docs == {("r/a", "keep.py"), ("r/a", "edit.py"), ("r/a", "new.py")}
-    qe = QueryEngine(spark, storage, mode="columnar")
+    qe = QueryEngine(spark, storage)
     assert qe.search("gamma", assemble=False).count() == 0
     assert qe.search("obsolete", assemble=False).count() == 0
     assert qe.search("revised", assemble=False).count() == 1
@@ -557,7 +555,7 @@ def test_engine_refresh_cuts_over_to_new_snapshot(spark, tmp_path):
     ]
     storage = ParquetIndexStorage(tmp_path / "idx")
     IndexBuilder(spark, storage, CFG).build(_mini_corpus(spark, rows))
-    qe = QueryEngine(spark, storage, mode="blocks")
+    qe = QueryEngine(spark, storage)
 
     assert qe.search("epsilon", assemble=False).count() == 0
     before = {r["path"] for r in qe.search("alpha").collect()}
@@ -599,7 +597,7 @@ def test_vacuum_retention_keeps_pinned_snapshot_servable(spark, tmp_path):
     ]
     storage = ParquetIndexStorage(tmp_path / "idx")
     IndexBuilder(spark, storage, CFG).build(_mini_corpus(spark, rows))
-    qe = QueryEngine(spark, storage, mode="blocks")
+    qe = QueryEngine(spark, storage)
     assert {r["path"] for r in qe.search("alpha").collect()} == {"f1.py"}
 
     incremental_update(

@@ -148,7 +148,7 @@ def test_builder_links_stage_and_assembly(spark, built_index):
     links = storage.read_table(spark, "links")
     assert links.count() > 0
 
-    qe = QueryEngine(spark, storage, mode="columnar")
+    qe = QueryEngine(spark, storage)
     out = qe.search("searching engines", k=5).collect()
     assert out and "parent_ids" in out[0].asDict() and "child_ids" in out[0].asDict()
     # any doc with children must have itself as a parent of each child

@@ -36,7 +36,7 @@ def test_vocab_lookup_partition_prunes(spark, built_index):
     |query buckets|/B of the dictionary."""
     from web_based_search_engine_spark.functions.xxhash import term_bucket
 
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks")
+    qe = QueryEngine(spark, built_index["storage"])
     b = term_bucket("search", qe.num_term_buckets)
     probe = qe.vocab.where(F.col("bucket").isin([b])).where(
         F.col("term").isin(["search"])
@@ -54,7 +54,7 @@ def test_wand_metadata_agg_skips_payload_columns(spark, built_index):
     """The per-term global-bound aggregation (wand.py bounds pass) reads
     only block METADATA; ReadSchema must exclude doc_ids/tfs/positions —
     at cluster scale those payload columns are ~all the bytes."""
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks")
+    qe = QueryEngine(spark, built_index["storage"])
     agg = (
         qe.blocks.where(F.col("bucket").isin([0]) & F.col("term_id").isin([1, 2]))
         .groupBy("term_id")
@@ -82,7 +82,7 @@ def test_assembly_is_literal_filtered_scans(spark, built_index, monkeypatch):
     import uuid
 
     sc = spark.sparkContext
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks")
+    qe = QueryEngine(spark, built_index["storage"])
     q = 'searching "engines retrieval"'
     qe.search(q, k=5).collect()  # warm the term and phrase caches
 
@@ -140,7 +140,7 @@ def test_blocks_serving_path_is_pure_jvm(spark, built_index):
     design — north-rule storage format) through one `mapInArrow` stage;
     that is the only non-JVM node allowed, and scoring still must not
     add any Python eval."""
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks")
+    qe = QueryEngine(spark, built_index["storage"])
     plan = _plan(qe.search("searching engines", k=5, assemble=False))
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
                  "FlatMapGroupsInPandas", "MapInArrow"):
@@ -176,7 +176,7 @@ def test_cc_star_round_has_no_window(spark):
         assert "partial_min" in plan, "per-node min is not map-side combined"
 
 
-def test_wand_prune_filters_push_down(spark, tmp_path, monkeypatch):
+def test_wand_prune_filters_push_down(spark, tmp_path):
     """r5: the pruned path's scale contract is that pruning reaches the
     SCANS — (a) the final block scan carries a pushable per-term
     max_wtf >= w* necessary condition (row groups of low-tf blocks are
@@ -200,9 +200,6 @@ def test_wand_prune_filters_push_down(spark, tmp_path, monkeypatch):
     vocab = storage.read_table(spark, "vocab")
     st = storage.read_table(spark, "stats").collect()[0]
 
-    # force the WIDE prune layout (the scan-pushdown path under test) —
-    # this corpus sits below the measured block-count crossover
-    monkeypatch.setattr(W, "WIDE_PRUNE_CROSSOVER", 0)
     stats: dict = {}
     pruned = W.wand_top_k(
         blocks, docs, vocab, ["zzhot", "zzrare"], st["n_docs"],

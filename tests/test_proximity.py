@@ -104,7 +104,7 @@ def test_near_search_is_a_score_preserving_filter(spark, tmp_path):
     storage = ParquetIndexStorage(str(tmp_path / "idx"))
     corpus = fixtures.corpus_df(spark, 120)
     IndexBuilder(spark, storage, config.IndexConfig(num_term_buckets=2)).build(corpus)
-    qe = QueryEngine(spark, storage, mode="blocks")
+    qe = QueryEngine(spark, storage)
     full = {
         r["doc_id"]: round(r["score"], 9)
         for r in qe.search("foo_bar hello-world", k=1000, assemble=False).collect()
@@ -121,8 +121,8 @@ def test_near_search_is_a_score_preserving_filter(spark, tmp_path):
     assert set(wide) <= set(full) and set(tight) <= set(wide)
     assert all(full[d] == s for d, s in wide.items())
     assert len(wide) >= 1  # fixture corpus has co-occurring terms
-    # columnar mode agrees exactly
-    qc = QueryEngine(spark, storage, mode="columnar")
+    # forced WAND pruning agrees exactly
+    qc = QueryEngine(spark, storage, wand_prune=True)
     wide_c = {
         r["doc_id"]: round(r["score"], 9)
         for r in qc.near_search(["foo_bar", "hello-world"], 40, k=1000, assemble=False).collect()
@@ -143,10 +143,9 @@ def test_near_search_window_zero_and_k_zero_are_empty(spark, tmp_path):
     IndexBuilder(
         spark, storage, config.IndexConfig(num_term_buckets=2)
     ).build(fixtures.corpus_df(spark, 60))
-    for mode in ("blocks", "columnar"):
-        qe = QueryEngine(spark, storage, mode=mode)
-        assert qe.near_search(["foo_bar", "hello-world"], 0, assemble=False).count() == 0
-        assert qe.search("foo_bar", k=0, assemble=False).count() == 0
+    qe = QueryEngine(spark, storage)
+    assert qe.near_search(["foo_bar", "hello-world"], 0, assemble=False).count() == 0
+    assert qe.search("foo_bar", k=0, assemble=False).count() == 0
 
 
 def test_phrase_two_pass_equals_single_pass(spark, built_index, monkeypatch):
@@ -158,7 +157,7 @@ def test_phrase_two_pass_equals_single_pass(spark, built_index, monkeypatch):
     from web_based_search_engine_spark.plans.query import QueryEngine
 
     storage = built_index["storage"]
-    qe = QueryEngine(spark, storage, mode="blocks")
+    qe = QueryEngine(spark, storage)
     blocks = qe.blocks
     vocab = qe.vocab
 
@@ -196,7 +195,7 @@ def test_phrase_and_near_result_cache(spark, built_index):
     unpersists beyond the cap."""
     from web_based_search_engine_spark.plans.query import QueryEngine
 
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks")
+    qe = QueryEngine(spark, built_index["storage"])
     q = 'posting "searching engines" retrieval'
     first = sorted((r["doc_id"], round(r["score"], 9))
                    for r in qe.search(q, assemble=False).collect())
@@ -224,7 +223,7 @@ def test_proximity_two_pass_equals_single_pass(spark, built_index, monkeypatch):
     from web_based_search_engine_spark.operators import phrase as PH
     from web_based_search_engine_spark.plans.query import QueryEngine
 
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks")
+    qe = QueryEngine(spark, built_index["storage"])
     cases = [(["foo_bar", "hello-world"], 12), (["search", "engin"], 6),
              (["search", "engin", "retriev"], 25)]
     for terms, window in cases:
@@ -254,7 +253,7 @@ def test_k_zero_with_forced_wand_prune(spark, built_index):
     from web_based_search_engine_spark.operators import wand as W
     from web_based_search_engine_spark.plans.query import QueryEngine
 
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks")
+    qe = QueryEngine(spark, built_index["storage"])
     out = W.wand_top_k(
         qe.blocks, qe.docs, qe.vocab, ["search", "engin"],
         qe.n_docs, qe.avg_doc_len, ScoringConfig(scorer="bm25"),

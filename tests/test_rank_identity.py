@@ -1,7 +1,7 @@
 """Rank-identity harness (SURVEY §5 item 3, FIXTURES.md F4): the Spark
 engine's top-50 must be rank-identical (and score-equal to 1e-9 rtol)
 against the deterministic pandas oracle on the F1-small corpus, for every
-reference query, under both scorers and both physical modes.
+reference query, under both scorers, served from the block index alone.
 
 Rank comparison joins on the doc natural key; both sides break ties with
 the same total order (score desc, natural key asc == doc_id asc because
@@ -19,12 +19,11 @@ from web_based_search_engine_spark.plans.query import QueryEngine, parse_query
 K = 50
 
 
-def _engine(spark, built_index, mode, scorer):
+def _engine(spark, built_index, scorer):
     return QueryEngine(
         spark,
         built_index["storage"],
         scoring=ScoringConfig(scorer=scorer),
-        mode=mode,
     )
 
 
@@ -63,22 +62,11 @@ def assert_rank_identical(got, want, ctx, rtol=1e-9):
         i = j
 
 
-@pytest.mark.parametrize("scorer", ["bm25", "reference"])
-def test_rank_identity_columnar(spark, built_index, oracle_index, scorer):
-    qe = _engine(spark, built_index, "columnar", scorer)
-    key_of = _doc_key_map(spark, built_index)
-    for qid, query in fixtures.REFERENCE_QUERIES.items():
-        got = [
-            (key_of[r["doc_id"]], r["score"])
-            for r in qe.search(query, k=K, assemble=False).collect()
-        ]
-        want = _oracle_topk(oracle_index, query, scorer)
-        assert_rank_identical(got, want, f"{qid} ({scorer})")
-
-
 def test_rank_identity_blocks_wand(spark, built_index, oracle_index):
-    """WAND over compressed blocks == oracle (bm25 only)."""
-    qe = _engine(spark, built_index, "blocks", "bm25")
+    """Forced block-max WAND pruning == oracle (bm25 only): the pruned
+    path, which prune="auto" leaves off at this corpus size, ranks every
+    reference query exactly like the oracle."""
+    qe = QueryEngine(spark, built_index["storage"], wand_prune=True)
     key_of = _doc_key_map(spark, built_index)
     for qid, query in fixtures.REFERENCE_QUERIES.items():
         got = [
@@ -114,49 +102,149 @@ def test_wand_equals_exhaustive(spark, built_index):
         ], terms
 
 
+def test_auto_prune_threshold_counts_postings(spark, built_index, monkeypatch):
+    """prune="auto" engages past AUTO_PRUNE_POSTINGS candidate postings (the
+    query terms' summed df), whatever the block size: on this 16-posting
+    block index the decision flips exactly at the query's posting count,
+    and both sides rank the same."""
+    from web_based_search_engine_spark.operators import wand as W
+
+    assert built_index["cfg"].block_size != 128
+    qe = _engine(spark, built_index, "bm25")
+    q = "searching engines retrieval"
+    n_postings = sum(r["df"] for r in qe._lookup_cached(parse_query(q).keywords))
+    pruned, results = [], []
+    for cap in (n_postings - 1, n_postings):
+        monkeypatch.setattr(W, "AUTO_PRUNE_POSTINGS", cap)
+        stats: dict = {}
+        rows = qe.search(q, k=10, assemble=False, wand_stats=stats).collect()
+        pruned.append(stats["pruned"])
+        results.append([(r["doc_id"], round(r["score"], 12)) for r in rows])
+    assert pruned == [True, False]
+    assert results[0] == results[1] and results[0]
+
+    # pruning needs bm25's additive bounds: past the threshold "auto"
+    # still decodes a reference query exhaustively, and forcing it raises
+    monkeypatch.setattr(W, "AUTO_PRUNE_POSTINGS", n_postings - 1)
+    args = (qe.blocks, qe.docs, qe.vocab, parse_query(q).keywords,
+            qe.n_docs, qe.avg_doc_len, ScoringConfig(scorer="reference"))
+    stats = {}
+    assert W.wand_top_k(*args, k=10, stats=stats).collect()
+    assert stats["pruned"] is False
+    with pytest.raises(ValueError, match="requires bm25"):
+        W.wand_top_k(*args, k=10, prune=True)
+
+
 class _StorageWithoutPostings:
-    """Storage shim that makes the uncompressed postings table invisible —
-    models a blocks-mode deployment that never materialized it."""
+    """Storage shim that makes the uncompressed postings table unreadable:
+    the query engine must serve everything from the block index."""
 
     def __init__(self, inner):
         self._inner = inner
 
     def read_table(self, spark, name):
         if name == "postings":
-            raise AssertionError("blocks mode must not read the postings table")
+            raise AssertionError("the query engine must not read the postings table")
         return self._inner.read_table(spark, name)
 
     def has_table(self, name):
         return name != "postings" and self._inner.has_table(name)
 
 
-def test_blocks_mode_serves_phrase_without_postings_table(spark, built_index):
-    """Blocks mode (scoring AND phrase) runs entirely off the compressed
-    block index: with the columnar postings table absent, phrase results
-    are rank- and score-identical to the columnar engine (VERDICT r1
-    missing-item 1; one positional structure like PostingIndex.java)."""
-    qe_cols = _engine(spark, built_index, "columnar", "bm25")
-    qe_blocks = QueryEngine(
+def _oracle_near_keys(oracle_index, terms, window):
+    """Docs whose distinct ``terms`` all occur within a ``window``-token
+    span of one field: brute-force minimal cover over each field's
+    occurrences (independent of the engine's aggregate fold)."""
+    terms = list(dict.fromkeys(terms))
+    out = set()
+    for key in oracle_index.doc_keys:
+        for track in (oracle_index.title_pos[key], oracle_index.body_pos[key]):
+            if not all(t in track for t in terms):
+                continue
+            occ = sorted((p, t) for t in terms for p in track[t])
+            for i, (start, _) in enumerate(occ):
+                seen = set()
+                for pos, t in occ[i:]:
+                    seen.add(t)
+                    if len(seen) == len(terms):
+                        if pos - start + 1 <= window:
+                            out.add(key)
+                        break
+    return out
+
+
+def _no_postings_engine(spark, built_index, scorer):
+    return QueryEngine(
         spark,
         _StorageWithoutPostings(built_index["storage"]),
-        scoring=ScoringConfig(scorer="bm25"),
-        mode="blocks",
+        scoring=ScoringConfig(scorer=scorer),
     )
-    for query in [
-        'searching "engines retrieval"',
-        '"foo_bar foo_bar"',
-        'posting "searching engines" index_builder',
-        '"retrieval engines"',
-    ]:
+
+
+def _assert_queries_match_oracle(spark, built_index, oracle_index, scorer, queries):
+    qe = _no_postings_engine(spark, built_index, scorer)
+    key_of = _doc_key_map(spark, built_index)
+    for qid, query in queries.items():
         got = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in qe_blocks.search(query, k=K, assemble=False).collect()
+            (key_of[r["doc_id"]], r["score"])
+            for r in qe.search(query, k=K, assemble=False).collect()
         ]
-        want = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in qe_cols.search(query, k=K, assemble=False).collect()
+        assert_rank_identical(got, _oracle_topk(oracle_index, query, scorer),
+                              f"{qid} ({scorer})")
+
+
+@pytest.mark.parametrize("scorer", ["bm25", "reference"])
+def test_rank_identity_columnar(spark, built_index, oracle_index, scorer):
+    """Both scorers serve every reference query from the columnar block
+    index alone (one columnar inverted format for every query type): with
+    the postings table unreadable, each top-k is rank-identical to the
+    pandas oracle."""
+    _assert_queries_match_oracle(spark, built_index, oracle_index, scorer,
+                                 fixtures.REFERENCE_QUERIES)
+
+
+def test_blocks_mode_serves_phrase_without_postings_table(spark, built_index, oracle_index):
+    """Phrase filtering runs off the block index's positions for both
+    scorers: with the postings table unreadable, phrase queries (leading,
+    trailing, repeated-term, reversed) are rank-identical to the oracle
+    (one positional structure, like PostingIndex.java)."""
+    queries = {
+        "phrase_tail": 'searching "engines retrieval"',
+        "phrase_repeat": '"foo_bar foo_bar"',
+        "phrase_mid": 'posting "searching engines" index_builder',
+        "phrase_reversed": '"retrieval engines"',
+    }
+    for scorer in ("bm25", "reference"):
+        _assert_queries_match_oracle(spark, built_index, oracle_index, scorer, queries)
+
+
+@pytest.mark.parametrize("scorer", ["bm25", "reference"])
+def test_near_rank_identity_without_postings_table(spark, built_index, oracle_index, scorer):
+    """near_search serves from the block index alone: with the postings
+    table unreadable, each window query is rank-identical to a brute-force
+    minimal-cover filter over the oracle's scores."""
+    from web_based_search_engine_spark.functions.analysis import analyze_text_py
+
+    qe = _no_postings_engine(spark, built_index, scorer)
+    key_of = _doc_key_map(spark, built_index)
+    matched = 0
+    for words, window in ((["searching", "engines"], 3),
+                          (["searching", "engines", "retrieval"], 12),
+                          (["foo_bar", "string_helpers"], 40)):
+        terms = list(dict.fromkeys(
+            t for w in words for t in analyze_text_py(w, qe.analysis)
+        ))
+        scores = O.score(oracle_index, terms, ScoringConfig(scorer=scorer))
+        near = _oracle_near_keys(oracle_index, terms, window)
+        want = sorted(((key, v) for key, v in scores.items() if key in near),
+                      key=lambda kv: (-kv[1], kv[0]))[:K]
+        got = [
+            (key_of[r["doc_id"]], r["score"])
+            for r in qe.near_search(words, window, k=K, assemble=False).collect()
         ]
-        assert got == want, query
+        assert_rank_identical(got, want, f"near {words} {window} ({scorer})")
+        matched += bool(want)
+    assert matched  # at least one proximity query is non-empty
 
 
 def test_term_dictionary_cache(spark, built_index):
@@ -164,7 +252,7 @@ def test_term_dictionary_cache(spark, built_index):
     terms without re-scanning vocab, caches negatives, and never changes
     results: a repeated query is bit-identical, and the cache holds only
     the queried terms (never the full vocabulary)."""
-    qe = _engine(spark, built_index, "blocks", "bm25")
+    qe = _engine(spark, built_index, "bm25")
     q = "searching engines zzqqxx"
     first = [(r["doc_id"], r["score"]) for r in qe.search(q, assemble=False).collect()]
     assert set(qe._term_cache) == {"search", "engin", "zzqqxx"}
@@ -206,9 +294,10 @@ def test_size_bytes_metadata(spark, built_index):
 
 
 def test_wand_persist_registry_bounds_cache_to_one_query(spark, built_index):
-    """A serving loop's persist registry holds AT MOST one query's pruned
-    block set: each wand_top_k call unpersists the previous entry (no
-    per-query block-manager leak, r1 review nit)."""
+    """A serving loop's persist registry holds AT MOST its capacity of
+    pruned queries' block sets: with PersistPool(1), each wand_top_k call
+    evicts and unpersists the previous query's frame (no per-query
+    block-manager leak, r1 review nit)."""
     from web_based_search_engine_spark.operators import wand as W
 
     storage = built_index["storage"]
@@ -217,19 +306,21 @@ def test_wand_persist_registry_bounds_cache_to_one_query(spark, built_index):
     vocab = storage.read_table(spark, "vocab")
     st = storage.read_table(spark, "stats").collect()[0]
 
-    registry = []
+    registry = W.PersistPool(1)
     W.wand_top_k(blocks, docs, vocab, ["foobar"], st["n_docs"],
                  st["avg_doc_len"], prune=True,
                  persist_registry=registry).collect()
     assert len(registry) == 1
-    first = registry[0]
+    first = registry._entries[0]
     assert first.storageLevel.useMemory  # pinned while current
 
     W.wand_top_k(blocks, docs, vocab, ["search", "engin"], st["n_docs"],
                  st["avg_doc_len"], prune=True,
                  persist_registry=registry).collect()
-    assert len(registry) == 1 and registry[0] is not first
+    assert len(registry) == 1 and registry._entries[0] is not first
     assert not first.storageLevel.useMemory  # previous query released
+    assert registry.evictions == 1
+    registry.release_all()
 
 
 def test_wand_zipf_head_pruning_engages(spark, tmp_path):

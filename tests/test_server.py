@@ -29,7 +29,7 @@ def _get_html(port: int, path: str):
 
 
 def test_server_search_and_health(spark, built_index):
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks")
+    qe = QueryEngine(spark, built_index["storage"])
     srv = SearchServer(qe, port=0).start()  # ephemeral port
     try:
         status, health = _get(srv.port, "/health")
@@ -68,7 +68,7 @@ def test_server_search_and_health(spark, built_index):
 
 def test_server_html_pages(spark, built_index):
     """HTML parity routes (result.jte / index.jte analogs, server.py)."""
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks")
+    qe = QueryEngine(spark, built_index["storage"])
     srv = SearchServer(qe, port=0).start()
     try:
         # index page: form posting to /result with a `search` input
@@ -121,7 +121,7 @@ def test_server_concurrent_requests(spark, built_index):
     payload as the identical sequential request."""
     from concurrent.futures import ThreadPoolExecutor
 
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks")
+    qe = QueryEngine(spark, built_index["storage"])
     srv = SearchServer(qe, port=0).start()
     try:
         shapes = [
@@ -164,7 +164,7 @@ def test_server_refresh_endpoint(spark, tmp_path):
     IndexBuilder(spark, storage, cfg).build(
         spark.createDataFrame(rows, fixtures.CORPUS_SCHEMA)
     )
-    qe = QueryEngine(spark, storage, mode="blocks")
+    qe = QueryEngine(spark, storage)
     srv = SearchServer(qe, port=0).start()
     try:
         status, body = _get(srv.port, "/search?q=epsilon")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from web_based_search_engine_spark import fixtures
 from web_based_search_engine_spark.config import IndexConfig
 from web_based_search_engine_spark.plans.build import IndexBuilder
-from web_based_search_engine_spark.plans.query import QueryEngine
+from web_based_search_engine_spark.plans.query import QueryEngine, parse_query
 from web_based_search_engine_spark.sources.catalog import ParquetIndexStorage
 from web_based_search_engine_spark.streaming.incremental import incremental_update
 
@@ -30,12 +30,11 @@ def _rows(df):
 
 def test_concurrent_queries_match_serial_no_midflight_unpersist(spark, built_index):
     """Directive r4-2: >=8 concurrent phrase+term queries through ONE
-    blocks-mode engine (forced WAND pruning so every query pins a block
+    engine (forced WAND pruning so every query pins a block
     set) return exactly the serial results, and the instrumented
     PersistPool records ZERO evictions — no in-flight query's pinned
     blocks are unpersisted by another."""
-    qe = QueryEngine(spark, built_index["storage"], mode="blocks",
-                     wand_prune=True)
+    qe = QueryEngine(spark, built_index["storage"], wand_prune=True)
     shapes = [
         'searching "engines retrieval"',
         "posting merge",
@@ -80,7 +79,7 @@ def test_search_concurrent_with_refresh(spark, tmp_path):
         ("r/a", "f1.py", "c1", "py", "alpha beta alpha common"),
         ("r/a", "f2.py", "c1", "py", "gamma delta common"),
     ]))
-    qe = QueryEngine(spark, storage, mode="blocks")
+    qe = QueryEngine(spark, storage)
 
     # valid per-snapshot answers for the two racing query shapes
     valid_alpha = [{"f1.py"}]           # snapshot 0
@@ -157,7 +156,7 @@ def test_candidate_block_skipping_lossless_and_engaged(spark, tmp_path):
     IndexBuilder(spark, storage, _CFG).build(_mini(spark, rows))
 
     stats: dict = {}
-    qe = QueryEngine(spark, storage, mode="blocks")
+    qe = QueryEngine(spark, storage)
     got = qe.search('common "needle haystack"', k=20, assemble=False,
                     wand_stats=stats)
     got_rows = _rows(got)
@@ -165,16 +164,22 @@ def test_candidate_block_skipping_lossless_and_engaged(spark, tmp_path):
     assert stats["decoded_blocks"] <= 4 * 3  # terms: common, needle, haystack
     assert stats["decoded_blocks"] < stats["candidate_blocks"]
 
-    # lossless: identical (doc_id, score) to the columnar path, which
-    # filters AFTER scoring with no block skipping at all
-    qc = QueryEngine(spark, storage, mode="columnar")
-    assert got_rows == _rows(
-        qc.search('common "needle haystack"', k=20, assemble=False)
+    # lossless: identical (doc_id, score) to scoring every block of the
+    # query terms and filtering to the phrase docs AFTERWARDS, with no
+    # block skipping at all
+    qx = QueryEngine(spark, storage, wand_prune=False)
+    phrase_ids = {r["doc_id"] for r in qx.phrase_search(
+        ["needle", "haystack"], k=1000, assemble=False).collect()}
+    unfiltered = qx.search_terms(
+        parse_query('common "needle haystack"').keywords, k=1000, assemble=False
+    ).collect()
+    assert got_rows == sorted(
+        (r["doc_id"], round(r["score"], 9)) for r in unfiltered if r["doc_id"] in phrase_ids
     )
 
     # forced-prune path takes the same skip (stats report the pruned shape)
     stats_p: dict = {}
-    qp = QueryEngine(spark, storage, mode="blocks", wand_prune=True)
+    qp = QueryEngine(spark, storage, wand_prune=True)
     assert got_rows == _rows(
         qp.search('common "needle haystack"', k=20, assemble=False,
                   wand_stats=stats_p)
@@ -183,17 +188,15 @@ def test_candidate_block_skipping_lossless_and_engaged(spark, tmp_path):
     assert stats_p["decoded_blocks"] < stats_p["candidate_blocks"]
 
 
-def test_wide_prune_with_candidates_seeds_from_surviving_blocks(
-        spark, tmp_path, monkeypatch):
-    """ADVICE r5 high: the wide prune layout picked its seed blocks among
-    those holding each term's GLOBAL max_wtf, after candidate skipping had
-    removed them, and returned 0 rows.  Here every query term's global-max
-    blocks sit in 40 early docs (high tf, no phrase); only the last 4 of
-    160 later docs hold the phrase, so candidate skipping keeps none of the
-    global-max blocks.  Wide must return the same 4 rows as narrow and
-    columnar, and report its evidence."""
-    from web_based_search_engine_spark.operators import wand as W
-
+def test_wide_prune_with_candidates_seeds_from_surviving_blocks(spark, tmp_path):
+    """ADVICE r5 high: the pruned (metadata-only) layout picked its seed
+    blocks among those holding each term's GLOBAL max_wtf, after candidate
+    skipping had removed them, and returned 0 rows.  Here every query
+    term's global-max blocks sit in 40 early docs (high tf, no phrase);
+    only the last 4 of 160 later docs hold the phrase, so candidate
+    skipping keeps none of the global-max blocks.  Forced pruning must
+    return the same 4 rows as the exhaustive engine, and report its
+    evidence."""
     rows = [("r/a", f"a{i:03d}.py", "c1", "py",
              "haystack haystack haystack needle needle needle common common common")
             for i in range(40)]
@@ -204,16 +207,13 @@ def test_wide_prune_with_candidates_seeds_from_surviving_blocks(
     IndexBuilder(spark, storage, _CFG).build(_mini(spark, rows))
     q = 'common "needle haystack"'
 
-    narrow = _rows(QueryEngine(spark, storage, mode="blocks", wand_prune=True)
-                   .search(q, k=20, assemble=False))
-    columnar = _rows(QueryEngine(spark, storage, mode="columnar")
-                     .search(q, k=20, assemble=False))
-    monkeypatch.setattr(W, "WIDE_PRUNE_CROSSOVER", 0)
+    exhaustive = _rows(QueryEngine(spark, storage, wand_prune=False)
+                       .search(q, k=20, assemble=False))
     stats: dict = {}
-    wide = _rows(QueryEngine(spark, storage, mode="blocks", wand_prune=True)
-                 .search(q, k=20, assemble=False, wand_stats=stats))
-    assert len(columnar) == 4
-    assert wide == narrow == columnar
+    pruned = _rows(QueryEngine(spark, storage, wand_prune=True)
+                   .search(q, k=20, assemble=False, wand_stats=stats))
+    assert len(exhaustive) == 4
+    assert pruned == exhaustive
     assert stats["pruned"] is True
     assert 0 < stats["decoded_blocks"] < stats["candidate_blocks"], stats
 
@@ -237,6 +237,6 @@ def test_vacuum_drop_abandoned_tables(spark, tmp_path):
     assert stats["zombie (abandoned)"]["files_unlinked"] == 1
     assert not orphan.parent.exists()
     # listed tables untouched: the index still serves
-    assert QueryEngine(spark, storage, mode="blocks").search(
+    assert QueryEngine(spark, storage).search(
         "alpha", assemble=False
     ).count() == 1

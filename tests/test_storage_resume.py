@@ -135,7 +135,7 @@ def test_build_invariant_to_parallelism(spark, tmp_path):
                                 "title_pos", "body_pos"]),
                 ]
             }
-            qe = QueryEngine(spark, storage, mode="blocks")
+            qe = QueryEngine(spark, storage)
             hits = [
                 (r["doc_id"], round(r["score"], 9))
                 for r in qe.search('merge_sort searching "engines retrieval"',

@@ -43,7 +43,7 @@ def test_stream_ingest_available_now(spark, tmp_path):
     q = stream_corpus_ingest(spark, storage, landing, ckpt, CFG, available_now=True)
     q.awaitTermination(120)
 
-    qe = QueryEngine(spark, storage, mode="columnar")
+    qe = QueryEngine(spark, storage)
     assert qe.search("zeta", assemble=False).count() == 1
     assert qe.search("gamma", assemble=False).count() == 1
     assert qe.search("beta", assemble=False).count() == 0  # replaced
@@ -55,7 +55,7 @@ def test_stream_ingest_available_now(spark, tmp_path):
     q2 = stream_corpus_ingest(spark, storage, landing, ckpt, CFG, available_now=True)
     q2.awaitTermination(120)
 
-    qe2 = QueryEngine(spark, storage, mode="columnar")
+    qe2 = QueryEngine(spark, storage)
     assert qe2.search("omega", assemble=False).count() == 1
     docs = storage.read_table(spark, "docs")
     assert docs.count() == 4
@@ -69,7 +69,7 @@ def test_stream_ingest_available_now(spark, tmp_path):
     )
     q3.awaitTermination(120)
     assert storage.read_table(spark, "docs").count() == 4
-    assert QueryEngine(spark, storage, mode="columnar").search(
+    assert QueryEngine(spark, storage).search(
         "omega", assemble=False
     ).count() == 1
 

@@ -79,21 +79,13 @@ def main() -> None:
     with tempfile.TemporaryDirectory() as wd:
         storage = ParquetIndexStorage(wd)
         IndexBuilder(spark, storage, cfg).build(corpus, resume=False)
-        qe = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"), mode="columnar")
-        sections.append((
-            "Query (columnar): BM25 over the postings table",
-            "The Scan parquet of `postings` must show PartitionFilters on "
-            "`bucket` (driver-side vocab lookup -> bucket IN-list: a B-bucket "
-            "layout reads |query-term buckets|/B of the table) plus "
-            "PushedFilters on term_id; scoring is one codegen span ending in "
-            "TakeOrderedAndProject(k=50).",
-            plan_of(qe.search("merge_sort searching", assemble=False)),
-        ))
-        qe_blocks = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"), mode="blocks")
+        qe_blocks = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"))
         sections.append((
             "Query (blocks): block-max WAND over compressed blocks",
-            "Scan parquet of `blocks` with the same bucket PartitionFilters; "
-            "since round 4's pure-JVM decode (doc_ids/tfs as plain list "
+            "Scan parquet of `blocks` with PartitionFilters on `bucket` "
+            "(driver-side vocab lookup -> bucket IN-list: a B-bucket layout "
+            "reads |query-term buckets|/B of the table) plus PushedFilters "
+            "on term_id; since round 4's pure-JVM decode (doc_ids/tfs as plain list "
             "columns) the whole scoring path — explode, BM25 expression, "
             "top-k — is ONE whole-stage-codegen span with NO Python/Arrow "
             "eval node (guarded by tests/test_plans.py); position bytes "

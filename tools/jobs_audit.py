@@ -130,10 +130,9 @@ def main() -> None:
         floor.append(time.time() - t0)
     report["noop_collect_floor_sec"] = round(min(floor), 4)
 
-    for mode, prune in (("columnar", "auto"), ("blocks", "auto"), ("blocks", True)):
-        qe = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"),
-                         mode=mode, wand_prune=prune)
-        key = f"{mode}[prune={prune}]"
+    for prune in ("auto", True):
+        qe = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"), wand_prune=prune)
+        key = f"blocks[prune={prune}]"
         per_shape = {}
         for name, q in SHAPES.items():
             qe.search(q, assemble=False).collect()  # warmup (caches populated)

@@ -59,7 +59,6 @@ def main(argv: list[str] | None = None) -> int:
 
     ps = sub.add_parser("search", help="free-text query (one quoted phrase allowed)")
     ps.add_argument("--index", required=True)
-    ps.add_argument("--mode", default="blocks", choices=["blocks", "columnar"])
     ps.add_argument("--scorer", default="bm25", choices=["bm25", "reference"])
     ps.add_argument("-k", type=int, default=50)
     ps.add_argument("query", nargs="+")
@@ -98,7 +97,6 @@ def main(argv: list[str] | None = None) -> int:
     pv.add_argument("--index", required=True)
     pv.add_argument("--host", default="127.0.0.1")
     pv.add_argument("--port", type=int, default=8321)
-    pv.add_argument("--mode", default="blocks", choices=["blocks", "columnar"])
 
     args = p.parse_args(argv)
     spark = get_spark("web-search-cli")
@@ -128,7 +126,6 @@ def main(argv: list[str] | None = None) -> int:
             spark,
             ParquetIndexStorage(args.index),
             ScoringConfig(scorer=args.scorer),
-            mode=args.mode,
         )
         _print_results(qe.search(" ".join(args.query), k=args.k).collect())
     elif args.cmd == "phrase":
@@ -172,7 +169,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "server":
         from .server import SearchServer
 
-        qe = QueryEngine(spark, ParquetIndexStorage(args.index), mode=args.mode)
+        qe = QueryEngine(spark, ParquetIndexStorage(args.index))
         srv = SearchServer(qe, host=args.host, port=args.port)
         print(f"serving on http://{args.host}:{srv.port}/search?q=...")
         try:

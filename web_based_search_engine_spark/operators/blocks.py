@@ -195,107 +195,6 @@ def _cumsum0(lengths: np.ndarray) -> np.ndarray:
     return out
 
 
-def _flat_positions(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Series of per-row position lists -> (lens uint64, flat uint64)."""
-    arrs = col.tolist()
-    n = len(arrs)
-    lens = np.fromiter((len(a) for a in arrs), dtype=np.uint64, count=n)
-    if int(lens.sum()) == 0:
-        return lens, np.empty(0, dtype=np.uint64)
-    flat = np.concatenate([np.asarray(a, dtype=np.uint64) for a in arrs if len(a)])
-    return lens, flat
-
-
-def encode_group_pdf(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame:
-    """Vectorized block encoder for one applyInPandas group.
-
-    Per-VALUE work is pure numpy: one in-group sort, run/boundary discovery
-    via flatnonzero, deltas via shifted subtraction masked at block / list
-    starts, ONE varint encode per logical stream (doc ids, tfs, position
-    lens, positions), and `np.maximum.reduceat` for block-max.  The only
-    per-BLOCK Python is offset slicing of the shared buffers — ~14 slice
-    ops per 128 postings instead of ~20 numpy calls per block (measured
-    ~2.5x faster group encode; byte-identical output, equivalence-tested
-    against the row-wise reference encoder in tests/test_blocks.py)."""
-    pdf = pdf.sort_values(["term_id", "doc_id"], kind="mergesort")
-    n = len(pdf)
-    cols = [f.name for f in BLOCKS_SCHEMA.fields]
-    if n == 0:
-        return pd.DataFrame({c: [] for c in cols})
-    term = pdf["term_id"].to_numpy(dtype=np.int64)
-    doc = pdf["doc_id"].to_numpy(dtype=np.uint64)
-    wtf = pdf["wtf"].to_numpy(dtype=np.float64)
-    len_d = pdf["len_d"].to_numpy(dtype=np.int32)
-    bucket = int(pdf["bucket"].iloc[0])
-
-    term_change = np.empty(n, dtype=bool)
-    term_change[0] = True
-    term_change[1:] = term[1:] != term[:-1]
-    run_starts = np.flatnonzero(term_change)
-    run_id = np.cumsum(term_change) - 1
-    local_idx = np.arange(n) - run_starts[run_id]
-    is_start = term_change | (local_idx % block_size == 0)
-    starts = np.flatnonzero(is_start)
-    ends = np.append(starts[1:], n)
-    counts = (ends - starts).astype(np.int32)
-    blk_id = (local_idx[starts] // block_size).astype(np.int32)
-    blk_term = term[starts]
-    first_doc = doc[starts].astype(np.int64)
-    last_doc = doc[ends - 1].astype(np.int64)
-    blk_max_wtf = np.maximum.reduceat(wtf, starts)
-    blk_min_len = np.minimum.reduceat(len_d, starts)
-
-    # scoring streams stay plain (module docstring): parquet list columns
-    doc_l = doc.astype(np.int64)
-    ttf = pdf["title_tf"].to_numpy(dtype=np.int32)
-    btf = pdf["body_tf"].to_numpy(dtype=np.int32)
-
-    def pos_stream(col_name: str):
-        lens, flat = _flat_positions(pdf[col_name])
-        row_flat = _cumsum0(lens)  # n+1 flat index per row boundary
-        if flat.size:
-            fd = flat.copy()
-            fd[1:] = flat[1:] - flat[:-1]
-            list_first = row_flat[:-1][lens > 0]  # flat index of each list's head
-            fd[list_first] = flat[list_first]
-            pos_buf, pos_nb = varint_encode_with_lengths(fd)
-            pos_off = _cumsum0(pos_nb)
-        else:
-            pos_buf, pos_off = b"", np.zeros(1, dtype=np.int64)
-        lens_buf, lens_nb = varint_encode_with_lengths(lens)
-        lens_off = _cumsum0(lens_nb)
-        return lens_buf, lens_off, pos_buf, pos_off, row_flat
-
-    tl_buf, tl_off, tp_buf, tp_off, t_rowflat = pos_stream("title_pos")
-    bl_buf, bl_off, bp_buf, bp_off, b_rowflat = pos_stream("body_pos")
-
-    rows = []
-    for b in range(starts.size):
-        s, e = int(starts[b]), int(ends[b])
-        tf_lo, tf_hi = int(t_rowflat[s]), int(t_rowflat[e])
-        bf_lo, bf_hi = int(b_rowflat[s]), int(b_rowflat[e])
-        rows.append(
-            (
-                bucket,
-                int(blk_term[b]),
-                int(blk_id[b]),
-                int(counts[b]),
-                int(first_doc[b]),
-                int(last_doc[b]),
-                float(blk_max_wtf[b]),
-                int(blk_min_len[b]),
-                [int(x) for x in doc_l[s:e]],
-                [int(x) for x in ttf[s:e]],
-                [int(x) for x in btf[s:e]],
-                tl_buf[tl_off[s]:tl_off[e]],
-                tp_buf[tp_off[tf_lo]:tp_off[tf_hi]],
-                bl_buf[bl_off[s]:bl_off[e]],
-                bp_buf[bp_off[bf_lo]:bp_off[bf_hi]],
-            )
-        )
-    return pd.DataFrame(rows, columns=cols)
-
-
 def encode_group_arrow(tbl: "pa.Table", block_size: int) -> "pa.Table":
     """Arrow-native group encoder: zero per-row AND zero per-block Python.
 
@@ -303,8 +202,8 @@ def encode_group_arrow(tbl: "pa.Table", block_size: int) -> "pa.Table":
     object-boxing ever happens, and because consecutive blocks tile each
     encoded buffer contiguously, every output binary column is built
     zero-copy with ``BinaryArray.from_buffers`` over the single shared
-    buffer + per-block byte offsets.  Byte-identical to encode_group_pdf /
-    the row-wise reference encoder (equivalence-tested)."""
+    buffer + per-block byte offsets.  Byte-identical to the row-wise
+    reference encoder encode_group_pdf_rowwise (equivalence-tested)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -420,7 +319,7 @@ def _arrow_types():
 
 def encode_group_pdf_rowwise(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame:
     """Row-at-a-time reference encoder (the pre-vectorization semantics);
-    kept as the equivalence oracle for encode_group_pdf."""
+    kept as the equivalence oracle for encode_group_arrow."""
     pdf = pdf.sort_values(["term_id", "doc_id"], kind="mergesort")
     rows = []
     for term_id, g in pdf.groupby("term_id", sort=False):

@@ -14,16 +14,20 @@ Production scorer (BASELINE.json): BM25 with k1=1.2, b=0.75 over the same
 ``avgdl`` from the stats table.  The repo's pandas oracle defines the
 rank-identity ground truth for it.
 
-Both scorers are pure Catalyst expressions over the postings table:
-term-at-a-time scatter (#25) == partition-pruned posting scan, accumulate
-(#26) == groupBy(doc_id).sum (Tungsten hash agg), normalize (#27) == join
-with precomputed per-doc stats (the reference recomputed ||d|| per query per
-candidate — an anti-pattern SURVEY §4.1 says not to reproduce).
+Both scorers are pure Catalyst expressions over posting rows
+(``score_postings``): term-at-a-time scatter (#25) == partition-pruned
+posting scan, accumulate (#26) == groupBy(doc_id).sum (Tungsten hash agg),
+normalize (#27) == join with precomputed per-doc stats (the reference
+recomputed ||d|| per query per candidate — an anti-pattern SURVEY §4.1 says
+not to reproduce).  The query engine feeds it the exhaustive decode of the
+query terms' compressed blocks (operators/wand.py; BM25 may also prune
+blocks first); ``score_query_terms`` feeds it the uncompressed postings
+table, for the IndexFrames pipeline and the golden tests.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ScoringConfig
@@ -87,6 +91,50 @@ def reference_term_score(n_docs: int, cfg: ScoringConfig):
     return weighted_tf(cfg.title_weight) * idf / F.col("tf_max")
 
 
+def score_postings(
+    postings: DataFrame,
+    docs: DataFrame,
+    df_col: Column,
+    n_docs: int,
+    avg_doc_len: float,
+    cfg: ScoringConfig,
+    candidates: DataFrame | None = None,
+) -> DataFrame:
+    """(doc_id, score) for posting rows (doc_id, term_id, title_tf,
+    body_tf) already narrowed to the query terms, under either scorer.
+
+    ``df_col``: the df of each row's term (see ``df_of_term``).
+    ``candidates``: a doc-id set (phrase / proximity filter) semi-joined
+    BEFORE scoring, so a later top-k is the top-k of the filtered ranking
+    (phrase filters before limit, Indexer.java:270-276)."""
+    if candidates is not None:
+        postings = postings.join(candidates.select("doc_id"), "doc_id", "left_semi")
+    cand = postings.withColumn("df", df_col)
+    if cfg.scorer == "reference":
+        if "doc_norm" not in docs.columns:
+            raise RuntimeError(
+                "reference scorer needs the precomputed doc_norm column; "
+                "this index was built with IndexConfig(reference_norms=False) "
+                "(BM25-only) — rebuild with reference_norms=True"
+            )
+        return (
+            cand.join(docs.select("doc_id", "tf_max", "doc_norm"), "doc_id")
+            .withColumn("_partial", reference_term_score(n_docs, cfg))
+            .groupBy("doc_id", "doc_norm")
+            .agg(F.sum("_partial").alias("_raw"))
+            .select("doc_id", (F.col("_raw") / F.col("doc_norm")).alias("score"))
+        )
+    return (
+        cand.join(
+            docs.select("doc_id", (F.col("title_len") + F.col("body_len")).alias("len_d")),
+            "doc_id",
+        )
+        .withColumn("_partial", bm25_term_score(n_docs, avg_doc_len, cfg))
+        .groupBy("doc_id")
+        .agg(F.sum("_partial").alias("score"))
+    )
+
+
 def score_query_terms(
     postings: DataFrame,
     docs: DataFrame,
@@ -97,60 +145,28 @@ def score_query_terms(
     cfg: ScoringConfig | None = None,
     term_rows: list[dict] | None = None,
 ) -> DataFrame:
-    """Disjunctive ranked scoring of ``terms`` -> DataFrame(doc_id, score).
+    """Disjunctive ranked scoring of ``terms`` over the uncompressed
+    postings table -> DataFrame(doc_id, score).
 
     The postings scan is pruned two ways before any shuffle: storage-bucket
     partition pruning (``bucket`` is a partition column of the stored table)
     and a term_id IN-list pushed to the parquet reader.
 
-    ``term_rows``: pre-resolved vocabulary rows for ``terms`` (the
-    QueryEngine's driver-side dictionary cache) — passing them skips the
-    per-query vocab-scan job.
+    ``term_rows``: pre-resolved vocabulary rows for ``terms`` — passing
+    them skips the vocab-scan job.
     """
     cfg = cfg or ScoringConfig()
     qt = term_rows if term_rows is not None else lookup_terms(vocab, terms)
-    spark = postings.sparkSession
     if not qt:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return postings.sparkSession.createDataFrame([], "doc_id long, score double")
 
-    term_ids = [r["term_id"] for r in qt]
-    cand = postings.where(F.col("term_id").isin(term_ids))
+    cand = postings.where(F.col("term_id").isin([r["term_id"] for r in qt]))
     if "bucket" in postings.columns and all("bucket" in r for r in qt):
         # partition pruning: bucket is the storage partition column; the IN
         # list comes from the driver-side vocab lookup, so only the query
         # terms' partitions are read at all
         cand = cand.where(F.col("bucket").isin(sorted({r["bucket"] for r in qt})))
-
-    cand = cand.withColumn("df", df_of_term(qt))
-
-    if cfg.scorer == "reference":
-        if "doc_norm" not in docs.columns:
-            raise RuntimeError(
-                "reference scorer needs the precomputed doc_norm column; "
-                "this index was built with IndexConfig(reference_norms=False) "
-                "(BM25-only) — rebuild with reference_norms=True"
-            )
-        cand = cand.join(docs.select("doc_id", "tf_max", "doc_norm"), "doc_id")
-        partial = reference_term_score(n_docs, cfg)
-        scored = (
-            cand.withColumn("_partial", partial)
-            .groupBy("doc_id", "doc_norm")
-            .agg(F.sum("_partial").alias("_raw"))
-            .withColumn("score", F.col("_raw") / F.col("doc_norm"))
-            .select("doc_id", "score")
-        )
-    else:
-        cand = cand.join(
-            docs.select("doc_id", (F.col("title_len") + F.col("body_len")).alias("len_d")),
-            "doc_id",
-        )
-        partial = bm25_term_score(n_docs, avg_doc_len, cfg)
-        scored = (
-            cand.withColumn("_partial", partial)
-            .groupBy("doc_id")
-            .agg(F.sum("_partial").alias("score"))
-        )
-    return scored
+    return score_postings(cand, docs, df_of_term(qt), n_docs, avg_doc_len, cfg)
 
 
 def top_k(scored: DataFrame, k: int = 50) -> DataFrame:

@@ -31,19 +31,24 @@ onto a shared-nothing scan):
    scoring streams are plain list columns, see blocks.py docstring) ->
    per-posting BM25 -> groupBy(doc_id).sum -> deterministic top-k.
 
+A pruned query persists only the candidate blocks' metadata projection (a
+few scalars per block) and reaches the payloads through pushable scan
+filters, so pruned payload row groups are never read (see wand_top_k).
+
 Upper bounds hold only for the additive BM25 scorer (the reference scorer's
-cosine normalization breaks additivity), so WAND is bm25-only.
+cosine normalization breaks additivity), so pruning is bm25-only; a
+reference-scorer query runs the exhaustive decode (``prune=False``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..config import ScoringConfig
 from . import blocks as B
-from .scoring import bm25_term_score, df_of_term, lookup_terms, top_k
+from .scoring import df_of_term, lookup_terms, score_postings, top_k
 
 # Candidate-set block skipping (VERDICT r4 directive 4): above this many
 # candidate docs the exact per-block containment semi-join (a broadcast
@@ -51,16 +56,15 @@ from .scoring import bm25_term_score, df_of_term, lookup_terms, top_k
 # the min/max range filter still applies unconditionally.
 CANDIDATE_EXACT_SKIP_CAP = 8192
 
-# Prune-layout crossover (r5): below this many candidate blocks the narrow
-# layout (persist the candidate frame once, seed + final scan reuse the
-# cache, 2 jobs) wins; above it the wide layout (metadata-only persist +
-# pushable scan filters + doc-range-pruned scoring joins) wins because the
-# payload volume dwarfs its ~2 extra driver jobs.  Measured on local[32]:
-# narrow-forced 1.0-1.3 s at 192-991 blocks where wide-forced reads 2.1 s;
-# wide 2.0 s vs narrow 2.9-3.2 s at 7814 blocks (2M-doc adversarial corpus,
-# where wide also beats exhaustive 2.4 s).  Tests monkeypatch this to force
-# a layout.
-WIDE_PRUNE_CROSSOVER = 2048
+# prune="auto" engages pruning only past this many candidate postings
+# (sum of the query terms' df, known driver-side from the vocab lookup).
+# Measured on local[32]/sf0.1 after the decode went pure-JVM (blocks.py):
+# the pruning passes add driver jobs (~0.5-0.6 s: forced-prune 1.21-1.30 s
+# vs exhaustive 0.68-0.72 s at 192-378 blocks), while the codegen'd
+# explode-decode's marginal cost is ~negligible below ~2M postings (16384
+# blocks of 128).  Decode cost scales with postings, not blocks, so the
+# crossover is stated in postings and holds for any block size.
+AUTO_PRUNE_POSTINGS = 16384 * 128
 
 
 class PersistPool:
@@ -74,11 +78,8 @@ class PersistPool:
     holds the most recent ``capacity`` pinned frames under a lock: with
     capacity >= the server's concurrency no in-flight frame is ever
     evicted, and total pinned storage stays bounded at ``capacity``
-    queries' pinned frames.  What a frame holds depends on the prune
-    layout (see wand_top_k): the narrow layout pins the full candidate
-    block frame, payload columns included (at most WIDE_PRUNE_CROSSOVER
-    blocks by the driver-side estimate); the wide layout pins only the
-    block-metadata projection, a few scalars per candidate block.
+    queries' pinned frames.  A frame is one pruned query's block-metadata
+    projection, a few scalars per candidate block (see wand_top_k).
     ``evictions`` instruments the no-mid-flight-unpersist claim for
     tests."""
 
@@ -106,31 +107,6 @@ class PersistPool:
     def __len__(self) -> int:
         with self._lock:
             return len(self._entries)
-
-
-def _score_decoded(
-    decoded: DataFrame,
-    docs: DataFrame,
-    df_col: Column,
-    n_docs: int,
-    avg_doc_len: float,
-    cfg: ScoringConfig,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    if candidates is not None:
-        # e.g. the phrase doc set: scores are computed only for candidate
-        # docs so the final top-k is the top-k of the FILTERED ranking
-        # (phrase filters before limit, Indexer.java:270-276)
-        decoded = decoded.join(candidates.select("doc_id"), "doc_id", "left_semi")
-    cand = decoded.withColumn("df", df_col).join(
-        docs.select("doc_id", (F.col("title_len") + F.col("body_len")).alias("len_d")),
-        "doc_id",
-    )
-    return (
-        cand.withColumn("_partial", bm25_term_score(n_docs, avg_doc_len, cfg))
-        .groupBy("doc_id")
-        .agg(F.sum("_partial").alias("score"))
-    )
 
 
 def _idf(n_docs: int, df: int) -> float:
@@ -164,29 +140,27 @@ def wand_top_k(
     candidates: DataFrame | None = None,
     term_rows: list[dict] | None = None,
     bounds_cache: dict[int, tuple[float, int]] | None = None,
-    persist_registry: "list[DataFrame] | PersistPool | None" = None,
+    persist_registry: PersistPool | None = None,
     k: int | None = None,
     stats: dict | None = None,
     candidate_range: tuple[int, int] | None = None,
     candidate_count: int | None = None,
 ) -> DataFrame:
-    """Top-k (doc_id, score) for a disjunctive BM25 query over the block
-    index.  ``prune=False`` gives the exhaustive scorer over the same
-    decode path (the equivalence oracle for tests).  ``candidates``
-    restricts the ranking to a doc subset (phrase semi-join) BEFORE the
-    top-k cut; pruning stays lossless — block upper bounds still dominate
-    candidate docs' true scores and the seed threshold is computed on the
-    restricted set.  ``term_rows``: pre-resolved vocab rows (QueryEngine
+    """Top-k (doc_id, score) for a disjunctive query over the block index,
+    under either scorer.  ``prune=False`` gives the exhaustive scorer over
+    the same decode path (the equivalence oracle for tests, and the only
+    path of the reference scorer); ``prune=True`` requires bm25, and
+    ``"auto"`` prunes bm25 queries past AUTO_PRUNE_POSTINGS candidate
+    postings.  ``candidates`` restricts the ranking to a doc subset
+    (phrase semi-join) BEFORE the top-k cut; pruning stays lossless —
+    block upper bounds still dominate candidate docs' true scores and the
+    seed threshold is computed on the restricted set.  ``term_rows``: pre-resolved vocab rows (QueryEngine
     dictionary cache) — skips the per-query vocab-scan job.
     ``bounds_cache``: term_id -> (gmax_wtf, gmin_len) memo, mutated in
     place — repeated terms skip the per-term metadata agg job.
-    ``persist_registry``: either a ``PersistPool`` (concurrency-safe
-    bounded registry — the serving engine's choice) or a legacy
-    caller-owned list (serial semantics: this call first unpersists and
-    removes whatever is in it, then appends its own frame — AT MOST one
-    query's pinned frame stays).  The pinned frame is the full candidate
-    block frame, payloads included, in the narrow layout, and the
-    block-metadata projection alone in the wide layout.
+    ``persist_registry``: the ``PersistPool`` a pruned query pins its
+    block-metadata projection in (None: the frame stays persisted until
+    Spark evicts it).
     ``k``: result size (defaults to cfg.top_k) — both the pruning
     threshold (k-th seed score) and the final cut honor it, so callers
     requesting k > cfg.top_k are not silently capped.
@@ -200,13 +174,12 @@ def wand_top_k(
     anyway (block doc ids all lie in [first_doc_id, last_doc_id]).
     ``stats``: pass a dict to receive pruning evidence —
     {"pruned": bool, "candidate_blocks", "decoded_blocks", "tau"} (block
-    counts cost two extra count jobs over the already-persisted candidate
-    metadata, paid only when requested; candidate_blocks counts blocks
+    counts cost up to two extra count jobs, paid only when requested;
+    candidate_blocks counts blocks
     BEFORE candidate-range skipping, decoded_blocks what actually
     decodes).  Every return path fills it, the empty ones included."""
     cfg = cfg or ScoringConfig()
     k = cfg.top_k if k is None else k  # explicit k=0 means 0 rows, not default
-    assert cfg.scorer == "bm25", "WAND upper bounds require the additive BM25 scorer"
 
     def empty(pruned: bool = False, counted: DataFrame | None = None) -> DataFrame:
         # every early return still reports its (empty) evidence
@@ -219,13 +192,6 @@ def wand_top_k(
         # short-circuit BEFORE the prune path: with k=0 the seed pass
         # collects an empty list and `kth[-1]` below would IndexError
         return empty()
-    if isinstance(persist_registry, list) and persist_registry:
-        # legacy serial registry: previous query's pruned block set is by
-        # now either materialized (its result was collected) or abandoned —
-        # release it before pinning this query's
-        for prev in persist_registry:
-            prev.unpersist(blocking=False)
-        persist_registry.clear()
     qt = term_rows if term_rows is not None else lookup_terms(vocab, terms)
     if not qt:
         return empty()
@@ -256,20 +222,14 @@ def wand_top_k(
     df_col = df_of_term(qt)
 
     # Small-query shortcut ("auto" only; tests force True/False): the vocab
-    # lookup already gives df per term, so the block count is known
-    # driver-side with no extra job.  When the whole candidate set is a few
-    # hundred blocks, the 3-job pruning dance (gmax agg + seed threshold +
-    # pruned scan) costs more than decoding everything once.
+    # lookup already gives df per term, so the candidate posting count is
+    # known driver-side with no extra job.  Below AUTO_PRUNE_POSTINGS the
+    # pruning passes cost more than decoding everything once.  At cluster
+    # scale hot terms have millions of postings and pruning always engages.
     if prune == "auto":
-        est_blocks = sum((r["df"] + 127) // 128 for r in qt)
-        # crossover re-measured on local[32]/sf0.1 after the decode went
-        # pure-JVM (blocks.py): the pruning dance adds two driver jobs
-        # (~0.5-0.6 s measured: forced-prune 1.21-1.30 s vs exhaustive
-        # 0.68-0.72 s at 192-378 blocks), while the codegen'd
-        # explode-decode's marginal cost is ~negligible below ~2M postings.
-        # So prune only above ~16k blocks (~2M postings).  At cluster scale
-        # hot terms have millions of blocks and pruning always engages.
-        prune = est_blocks > 16384
+        prune = cfg.scorer == "bm25" and sum(r["df"] for r in qt) > AUTO_PRUNE_POSTINGS
+    if prune and cfg.scorer != "bm25":
+        raise ValueError("pruning requires bm25: block upper bounds need an additive scorer")
 
     if not prune:
         if stats is not None:
@@ -278,7 +238,7 @@ def wand_top_k(
                  "decoded_blocks": cand.count(), "tau": None}
             )
         return top_k(
-            _score_decoded(
+            score_postings(
                 B.decode_blocks(cand), docs, df_col, n_docs, avg_doc_len, cfg, candidates
             ),
             k,
@@ -317,89 +277,62 @@ def wand_top_k(
     gub = {tid: global_ub(tid) for tid in term_ids}
     total_gub = sum(gub.values())
 
-    # Two prune layouts, split by candidate width (r5).  NARROW (few
-    # candidate blocks): persist the full candidate frame once — the seed
-    # pass materializes the cache, the final scan reuses it, 2 jobs total;
-    # the payload volume is small, so cache reuse beats everything.  WIDE
-    # (past ~WIDE_PRUNE_CROSSOVER blocks): persisting payloads would
+    # Pruned layout (r5): persisting the candidate payloads would
     # materialize the exact decode-sized cost pruning exists to avoid
-    # (measured: 2M-doc adversarial corpus, pruned cost MORE than
-    # exhaustive despite decoding 2 of 7814 blocks), so persist only the
-    # stats projection (a few scalars per block) and reach the payloads
-    # through PUSHABLE scan filters — the seed via literal best-block
-    # conjunctions, the final scan via a per-term max_wtf >= w* necessary
-    # condition + a doc-id-range-pruned docs join — so pruned payload row
-    # groups are never read at all.  Both layouts are lossless; the extra
-    # driver jobs the wide layout pays (~2) are noise once the candidate
-    # payload is big enough to matter.
-    wide = sum((r["df"] + 127) // 128 for r in qt) > WIDE_PRUNE_CROSSOVER
-    if wide:
-        meta = cand.select(
-            "bucket", "term_id", "block_id", "max_wtf", "min_len_d",
-            "first_doc_id", "last_doc_id",
-        ).persist()
-    else:
-        meta = cand.persist()
-    if isinstance(persist_registry, PersistPool):
+    # (measured: 2M-doc adversarial corpus, a payload-pinning layout cost
+    # MORE than exhaustive despite decoding 2 of 7814 blocks), so persist
+    # only the stats projection (a few scalars per block) and reach the
+    # payloads through PUSHABLE scan filters — the seed via literal
+    # best-block conjunctions, the final scan via a per-term max_wtf >= w*
+    # necessary condition + a doc-id-range-pruned docs join — so pruned
+    # payload row groups are never read at all.
+    meta = cand.select(
+        "bucket", "term_id", "block_id", "max_wtf", "min_len_d",
+        "first_doc_id", "last_doc_id",
+    ).persist()
+    if persist_registry is not None:
         persist_registry.pin(meta)
-    elif persist_registry is not None:
-        persist_registry.append(meta)
 
     # threshold pass: one seed block per term, the best query-time ub
     # among the term's SURVIVING candidate blocks (candidate skipping may
     # have removed the blocks holding its global max_wtf).  Any decoded
     # subset yields a valid (lossless) threshold — partial sums never
-    # exceed true scores.  The wide layout fetches each seed's payload
-    # through a PUSHABLE conjunction (term_id = t AND max_wtf >= w_b AND
+    # exceed true scores.  Each seed's payload is fetched through a
+    # PUSHABLE conjunction (term_id = t AND max_wtf >= w_b AND
     # block_id = b, with w_b the chosen block's own max_wtf): parquet
     # row-group stats can skip on it, where a bare block_id literal cannot
     # skip when row groups span the term's whole block range.  The tiny
     # collect (one row per query term) doubles as the meta persist's
     # materialization job.
     w = Window.partitionBy("term_id").orderBy(F.desc(ub), "block_id")
-    if wide:
-        best = (
-            meta.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select("term_id", "block_id", "max_wtf", "first_doc_id", "last_doc_id")
-            .collect()
+    best = (
+        meta.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .select("term_id", "block_id", "max_wtf", "first_doc_id", "last_doc_id")
+        .collect()
+    )
+    if not best:
+        # no candidate block survived skipping: nothing can match
+        return empty(True, cand_pre_skip)
+    seed_filter = None
+    for r in best:
+        clause = (
+            (F.col("term_id") == r["term_id"])
+            & (F.col("max_wtf") >= F.lit(r["max_wtf"]))
+            & (F.col("block_id") == r["block_id"])
         )
-        if not best:
-            # no candidate block survived skipping: nothing can match
-            return empty(True, cand_pre_skip)
-        seed_filter = None
-        for r in best:
-            clause = (
-                (F.col("term_id") == r["term_id"])
-                & (F.col("max_wtf") >= F.lit(r["max_wtf"]))
-                & (F.col("block_id") == r["block_id"])
-            )
-            seed_filter = clause if seed_filter is None else (seed_filter | clause)
-        # The scoring join's docs side (len_d lookup) is range-pruned with
-        # the seed blocks' stored doc-id spans — literal BETWEENs push into
-        # the docs scan, so the seed pass never scans the whole docs table
-        # (at corpus scale the per-query full docs scan, not the block
-        # decode, is what grows with N).
-        seed_docs = None
-        for r in best:
-            span = F.col("doc_id").between(
-                int(r["first_doc_id"]), int(r["last_doc_id"])
-            )
-            seed_docs = span if seed_docs is None else (seed_docs | span)
-        seed_src = cand.where(seed_filter)
-        seed_docs_side = docs.where(seed_docs)
-    else:
-        # narrow: the window's rn=1 pick decodes straight from the cached
-        # candidate frame — no collect round-trip, and this seed job IS the
-        # persist's materialization
-        seed_src = (
-            meta.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        seed_docs_side = docs
-    seed_scores = _score_decoded(
-        B.decode_blocks(seed_src), seed_docs_side,
+        seed_filter = clause if seed_filter is None else (seed_filter | clause)
+    # The scoring join's docs side (len_d lookup) is range-pruned with the
+    # seed blocks' stored doc-id spans — literal BETWEENs push into the
+    # docs scan, so the seed pass never scans the whole docs table (at
+    # corpus scale the per-query full docs scan, not the block decode, is
+    # what grows with N).
+    seed_docs = None
+    for r in best:
+        span = F.col("doc_id").between(int(r["first_doc_id"]), int(r["last_doc_id"]))
+        seed_docs = span if seed_docs is None else (seed_docs | span)
+    seed_scores = score_postings(
+        B.decode_blocks(cand.where(seed_filter)), docs.where(seed_docs),
         df_col, n_docs, avg_doc_len, cfg, candidates,
     )
     kth = (
@@ -446,36 +379,30 @@ def wand_top_k(
             )
         pushed = clause if pushed is None else (pushed | clause)
     exact = ub + other_max[F.col("term_id")] >= F.lit(tau)
-    base = cand if wide else meta  # narrow: decode from the cached frame
-    keep = base.where(pushed) if pushed is not None else base
+    keep = cand.where(pushed) if pushed is not None else cand
     keep = keep.where(exact)
+    # Survivor doc-id span from the CACHED metadata (one tiny agg over the
+    # persisted stats projection): range-prunes the scoring join's docs
+    # side the same way the seed pass does — without it, every pruned
+    # query would still pay a full docs-table scan for len_d.
+    surv_meta = meta.where(pushed) if pushed is not None else meta
+    span = surv_meta.where(exact).agg(
+        F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi"),
+        F.count(F.lit(1)).alias("n_blocks"),
+    ).collect()[0]
+    decoded_count = int(span["n_blocks"])
     docs_f = docs
-    decoded_count = None
-    if wide:
-        # Survivor doc-id span from the CACHED metadata (one tiny agg over
-        # the persisted stats projection): range-prunes the scoring join's
-        # docs side the same way the seed pass does — without it, every
-        # wide pruned query still paid a full docs-table scan for len_d.
-        surv_meta = meta.where(pushed) if pushed is not None else meta
-        span = surv_meta.where(exact).agg(
-            F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi"),
-            F.count(F.lit(1)).alias("n_blocks"),
-        ).collect()[0]
-        decoded_count = int(span["n_blocks"])
-        if decoded_count:
-            # (n_blocks == 0 is unreachable when k seeds exist — the k-th
-            # seed's blocks always survive their own bound — but tau=0.0
-            # underfull corpora keep everything, spans included)
-            docs_f = docs.where(
-                F.col("doc_id").between(int(span["lo"]), int(span["hi"]))
-            )
+    if decoded_count:
+        # (n_blocks == 0 is unreachable when k seeds exist — the k-th seed's
+        # blocks always survive their own bound — but tau=0.0 underfull
+        # corpora keep everything, spans included)
+        docs_f = docs.where(F.col("doc_id").between(int(span["lo"]), int(span["hi"])))
     if stats is not None:
         stats.update(
             {"pruned": True, "candidate_blocks": cand_pre_skip.count(),
-             "decoded_blocks": decoded_count if decoded_count is not None
-             else keep.count(), "tau": tau}
+             "decoded_blocks": decoded_count, "tau": tau}
         )
-    scored = _score_decoded(
+    scored = score_postings(
         B.decode_blocks(keep), docs_f, df_col, n_docs, avg_doc_len, cfg, candidates
     )
     return top_k(scored, k)

@@ -1,10 +1,12 @@
 """Query engine over the stored index (EP2/EP3 rebuild lifecycle, SURVEY §3).
 
 Pipeline: parse -> stem/encode (driver-side, read-only dictionary lookup;
-fixes Appendix C-W2) -> partition-pruned posting scan -> score (BM25 WAND
-over compressed blocks, or Catalyst scoring over columnar postings) ->
-phrase semi-join filter (scores unchanged — filter only,
-Indexer.java:270-276) -> deterministic top-k -> result assembly.
+fixes Appendix C-W2) -> phrase / proximity candidate set (decoded from the
+compressed blocks; a filter that never changes scores,
+Indexer.java:270-276) -> partition-pruned block scan -> score (either
+scorer over the decoded blocks, BM25 optionally WAND-pruned) ->
+deterministic top-k -> result assembly.  The compressed ``blocks`` table
+is the only posting structure a query reads.
 
 The reference assembled full SearchResults for every matching doc and
 limited afterwards (JavalinServer.java:67-74); the rebuild takes top-k
@@ -31,7 +33,7 @@ from ..config import MAX_KEYWORD_COUNT, AnalysisConfig, ScoringConfig
 from ..functions.analysis import analyze_text_py
 from ..operators import wand as W
 from ..operators.phrase import phrase_doc_ids, proximity_windows
-from ..operators.scoring import score_query_terms, top_k
+from ..operators.scoring import top_k
 from ..sources.catalog import ParquetIndexStorage
 
 # Greedy first "(.*)" group, at most one phrase; quoted words also count as
@@ -70,13 +72,12 @@ class _SnapshotState:
     snapshot's."""
     docs: DataFrame
     vocab: DataFrame
-    blocks: DataFrame | None
+    blocks: DataFrame
     forward: DataFrame | None
     links: DataFrame | None
     n_docs: int
     avg_doc_len: float
     num_term_buckets: int | None
-    postings_lazy: DataFrame | None = None
     term_cache: dict = field(default_factory=dict)
     bounds_cache: dict = field(default_factory=dict)
     phrase_cache: dict = field(default_factory=dict)
@@ -126,9 +127,10 @@ def parse_query(query: str, cfg: AnalysisConfig | None = None) -> ParsedQuery:
 class QueryEngine:
     """Loads the stored index once; each search is a handful of small jobs.
 
-    ``mode``: "columnar" scores the uncompressed postings table with pure
-    Catalyst expressions; "blocks" decodes delta-gap+varint blocks with
-    block-max WAND pruning (bm25 only) — the 100TB-scale path.
+    Scoring and phrase / proximity filters all run off the compressed
+    block index (operators/wand.py, operators/phrase.py); the uncompressed
+    ``postings`` table is never read.  ``wand_prune`` applies to the bm25
+    scorer only: a reference-scorer query always decodes exhaustively.
     """
 
     def __init__(
@@ -136,7 +138,6 @@ class QueryEngine:
         spark: SparkSession,
         storage: ParquetIndexStorage,
         scoring: ScoringConfig | None = None,
-        mode: str = "blocks",
         analysis: AnalysisConfig | None = None,
         adaptive: bool | None = False,
         serving_shuffle_partitions: int | None = 8,
@@ -161,10 +162,11 @@ class QueryEngine:
             # candidate set (bounded by the query's decoded postings after
             # WAND pruning, NOT by corpus size), so the ETL-sized setting
             # (~cluster cores) just mints near-empty tasks — measured at
-            # sf0.1/local[32]: columnar p50 ~0.71 -> ~0.59 s with 8.  The
-            # right value tracks per-query candidate volume, which is
-            # scale-invariant; deployments with very broad queries can
-            # raise it (or pass None to inherit the session setting).
+            # sf0.1/local[32] on the former postings-table scorer: p50
+            # ~0.71 -> ~0.59 s with 8.  The right value tracks per-query
+            # candidate volume, which is scale-invariant; deployments
+            # with very broad queries can raise it (or pass None to
+            # inherit the session setting).
             if serving_shuffle_partitions is not None:
                 spark.conf.set(
                     "spark.sql.shuffle.partitions",
@@ -174,9 +176,8 @@ class QueryEngine:
         self.storage = storage
         self.scoring = scoring or ScoringConfig()
         self.analysis = analysis or AnalysisConfig.full()
-        self.mode = mode
-        # WAND pruning policy for blocks-mode scoring: "auto" (engage past
-        # the measured block-count crossover — see wand.py), True (always —
+        # WAND pruning policy for bm25 scoring: "auto" (engage past the
+        # measured posting-count crossover — see wand.py), True (always —
         # the cluster-scale posture, exercised by bench --wand-prune and
         # the concurrency tests), False (exhaustive decode).
         self.wand_prune: bool | str = wand_prune
@@ -208,14 +209,10 @@ class QueryEngine:
         return _SnapshotState(
             docs=storage.read_table(spark, "docs"),
             vocab=storage.read_table(spark, "vocab"),
-            # postings (uncompressed) loads lazily: a blocks-mode
-            # deployment serves scoring AND phrase from the compressed
-            # block index alone, so the columnar postings table need not
-            # exist at all (VERDICT r1 missing-item 1)
-            blocks=(
-                storage.read_table(spark, "blocks")
-                if storage.has_table("blocks") else None
-            ),
+            # scoring AND phrase serve from the compressed block index
+            # alone; the uncompressed postings table is never read
+            # (VERDICT r1 missing-item 1)
+            blocks=storage.read_table(spark, "blocks"),
             forward=(
                 storage.read_table(spark, "forward")
                 if storage.has_table("forward") else None
@@ -303,30 +300,6 @@ class QueryEngine:
                 out.append(r)
         return out
 
-    def _postings_of(self, st: _SnapshotState) -> DataFrame:
-        if st.postings_lazy is None:
-            with st.lock:
-                if st.postings_lazy is None:
-                    st.postings_lazy = self.storage.read_table(self.spark, "postings")
-        return st.postings_lazy
-
-    @property
-    def postings(self) -> DataFrame:
-        return self._postings_of(self._state)
-
-    def _serves_blocks(self, st: _SnapshotState) -> bool:
-        """True when both scoring and phrase run off the compressed block
-        index (bm25 blocks mode)."""
-        return (
-            self.mode == "blocks"
-            and st.blocks is not None
-            and self.scoring.scorer == "bm25"
-        )
-
-    @property
-    def _blocks_serving(self) -> bool:
-        return self._serves_blocks(self._state)
-
     # ------------------------------------------------------------------ api
     def search(self, query: str, k: int | None = None, assemble: bool = True,
                wand_stats: dict | None = None) -> DataFrame:
@@ -337,8 +310,8 @@ class QueryEngine:
         the returned frame is local, so collecting it runs no Spark job.
         ``assemble=False`` returns the lazy ranking plan of (doc_id,
         score) rows; nothing runs until it is collected.
-        ``wand_stats``: optional dict receiving blocks-mode pruning
-        evidence (see wand_top_k) — bench's --wand-prune artifact."""
+        ``wand_stats``: optional dict receiving pruning evidence (see
+        wand_top_k) — bench's --wand-prune artifact."""
         pq = parse_query(query, self.analysis)
         return self.search_terms(pq.keywords, pq.phrase, k=k, assemble=assemble,
                                  wand_stats=wand_stats)
@@ -422,11 +395,8 @@ class QueryEngine:
         if hit is not None:
             return hit
         ids = phrase_doc_ids(
-            None if self._serves_blocks(st) else self._postings_of(st),
-            st.vocab,
-            phrase,
-            term_rows=self._lookup_cached(phrase, st),
-            blocks=st.blocks if self._serves_blocks(st) else None,
+            None, st.vocab, phrase,
+            term_rows=self._lookup_cached(phrase, st), blocks=st.blocks,
         ).persist()
         return self._cache_candidates(st, key, ids)
 
@@ -438,12 +408,8 @@ class QueryEngine:
         if hit is not None:
             return hit
         ids = proximity_windows(
-            None if self._serves_blocks(st) else self._postings_of(st),
-            st.vocab,
-            terms,
-            window,
-            term_rows=self._lookup_cached(terms, st),
-            blocks=st.blocks if self._serves_blocks(st) else None,
+            None, st.vocab, terms, window,
+            term_rows=self._lookup_cached(terms, st), blocks=st.blocks,
         ).select("doc_id").persist()
         return self._cache_candidates(st, key, ids)
 
@@ -462,8 +428,8 @@ class QueryEngine:
         # facts the scorer skips blocks with: count, min and max doc id
         # (directive r4-4/r4-5: no extra job over the old bare count).
         # With the count in hand, pin a broadcast hint on small sets:
-        # every downstream semi-join (WAND's decoded stream, the columnar
-        # filter, phrase∩near intersection, the block containment skip)
+        # every downstream semi-join (WAND's decoded stream, the
+        # phrase∩near intersection, the block containment skip)
         # ships the candidate set to the executors instead of shuffling
         # the big side (serving runs AQE-off, so there is no runtime
         # rescue).  Same cap as phrase.py's survivor broadcast.
@@ -507,35 +473,27 @@ class QueryEngine:
     def _score(self, st: _SnapshotState, terms: list[str],
                cand: _CandSet | None = None, k: int | None = None,
                wand_stats: dict | None = None) -> DataFrame:
-        term_rows = self._lookup_cached(terms, st)
-        if self._serves_blocks(st):
-            # wand_top_k prunes and limits internally (honoring k — a
-            # k > cfg.top_k request must not be capped by the config
-            # default); re-limit happens in search_terms (idempotent)
-            return W.wand_top_k(
-                st.blocks, st.docs, st.vocab, terms,
-                st.n_docs, st.avg_doc_len, self.scoring,
-                candidates=cand.frame if cand is not None else None,
-                term_rows=term_rows,
-                bounds_cache=st.bounds_cache,
-                persist_registry=st.persist_pool,
-                k=k,
-                prune=self.wand_prune,
-                stats=wand_stats,
-                candidate_range=(
-                    (cand.lo, cand.hi)
-                    if cand is not None and cand.lo is not None else None
-                ),
-                candidate_count=cand.n if cand is not None else None,
-            )
-        scored = score_query_terms(
-            self._postings_of(st), st.docs, st.vocab, terms,
+        # wand_top_k prunes and limits internally (honoring k — a
+        # k > cfg.top_k request must not be capped by the config
+        # default); re-limit happens in search_terms (idempotent).
+        # Pruning needs bm25's additive bounds, so a reference query
+        # decodes exhaustively.
+        return W.wand_top_k(
+            st.blocks, st.docs, st.vocab, terms,
             st.n_docs, st.avg_doc_len, self.scoring,
-            term_rows=term_rows,
+            candidates=cand.frame if cand is not None else None,
+            term_rows=self._lookup_cached(terms, st),
+            bounds_cache=st.bounds_cache,
+            persist_registry=st.persist_pool,
+            k=k,
+            prune=self.wand_prune if self.scoring.scorer == "bm25" else False,
+            stats=wand_stats,
+            candidate_range=(
+                (cand.lo, cand.hi)
+                if cand is not None and cand.lo is not None else None
+            ),
+            candidate_count=cand.n if cand is not None else None,
         )
-        if cand is not None:
-            scored = scored.join(cand.frame, "doc_id", "left_semi")
-        return scored
 
     def _collect_concurrently(self, frames: dict[str, DataFrame]) -> dict[str, list]:
         """Collect every frame at once: the first on the calling thread,
