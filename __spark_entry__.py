@@ -26,17 +26,16 @@ from web_based_search_engine_spark.functions import textstats as TS
 from web_based_search_engine_spark.functions.analysis import analyze, analyze_text_py
 from web_based_search_engine_spark.operators import adhoc as A
 from web_based_search_engine_spark.operators import dedup as D
-from web_based_search_engine_spark.operators import postings as P
-from web_based_search_engine_spark.operators import scoring as S
 from web_based_search_engine_spark.operators import similarity as SIM
 
 RAW = AnalysisConfig.raw()
 
 
 def _tmp_index_dir(prefix: str) -> str:
-    """mkdtemp + atexit cleanup: the engine-lifecycle queries (q26/q27)
-    build a throwaway index; reap it at process exit (results are cached +
-    counted before return, so the data is never read after that)."""
+    """mkdtemp + atexit cleanup: ``entry`` and the engine-lifecycle
+    queries (q26/q27) build a throwaway index; reap it at process exit
+    (results are local or cached + counted before return, so the data is
+    never read after that)."""
     import atexit
     import shutil
     import tempfile
@@ -64,9 +63,14 @@ def _raw_tokens_col():
 # --------------------------------------------------------------------- entry
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full engine (stemmed analysis -> dense ids -> positional
-    postings -> vocab/stats -> BM25) over sf0.001 documents mapped into the
-    corpus schema; returns the assembled top-50 for a multi-term query."""
+    """Flagship: full engine (checkpointed build: stemmed analysis -> dense
+    ids -> positional postings -> vocab/stats -> compressed blocks, then a
+    served BM25 search) over sf0.001 documents mapped into the corpus
+    schema; returns the assembled top-50 for a multi-term query."""
+    from web_based_search_engine_spark.plans.build import IndexBuilder
+    from web_based_search_engine_spark.plans.query import QueryEngine
+    from web_based_search_engine_spark.sources.catalog import ParquetIndexStorage
+
     docs = _docs(spark, "/root/testdata/sf0.001")
     corpus = docs.select(
         F.lit("testdata").alias("repo"),
@@ -75,15 +79,14 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("lang").alias("lang"),
         F.col("text").alias("content"),
     )
-    frames = P.build_index_frames(P.prepare_corpus(corpus), IndexConfig(num_term_buckets=4))
-    st = frames.stats.collect()[0]
-    terms = [t for w in ["merge", "scanning", "joined", "tables"] for t in analyze_text_py(w)]
-    scored = S.score_query_terms(
-        frames.postings, frames.docs, frames.vocab, terms,
-        st["n_docs"], st["avg_doc_len"], ScoringConfig(scorer="bm25"),
+    storage = ParquetIndexStorage(_tmp_index_dir("entry_idx_"))
+    IndexBuilder(spark, storage, IndexConfig(num_term_buckets=4)).build(corpus, resume=False)
+    qe = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"))
+    # the assembled result is a local frame: nothing reads the temporary
+    # index directory after this returns
+    return qe.search("merge scanning joined tables").select(
+        "doc_id", "score", "repo", "path", "lang", "sha256"
     )
-    topk = S.top_k(scored, 50)
-    return topk.join(frames.docs.select("doc_id", "repo", "path", "lang", "sha256"), "doc_id")
 
 
 # ------------------------------------------------------------------- queries

@@ -412,6 +412,7 @@ def scaling_run(sf_dir: str) -> dict:
             return f"local-cluster[{n},1,{exec_mem}]"
         return f"local[{n}]"
 
+    repo = os.path.dirname(os.path.abspath(__file__))
     lo, hi = levels[0], levels[-1]
     runs: dict[int, list[dict]] = {lo: [], hi: []}
     # interleave levels (lo,hi,lo,hi,...) so slow machine-load drift hits
@@ -419,14 +420,14 @@ def scaling_run(sf_dir: str) -> dict:
     for _ in range(trials):
         for n in (lo, hi):
             code = (
-                "import json,sys; sys.path.insert(0, '/root/repo');"
+                f"import json,sys; sys.path.insert(0, {repo!r});"
                 "from bench import build_only_run;"
                 f"r = build_only_run('{master_of(n)}', {n_docs}, {token_mult});"
                 "print('@@' + json.dumps(r))"
             )
             p = subprocess.run(
                 [sys.executable, "-c", code], capture_output=True, text=True,
-                cwd="/root/repo",
+                cwd=repo,
             )
             marked = [ln for ln in p.stdout.splitlines() if ln.startswith("@@")]
             if p.returncode != 0 or not marked:

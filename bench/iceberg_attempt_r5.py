@@ -1,5 +1,6 @@
 import sys, traceback
-sys.path.insert(0, '/root/repo')
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import SparkSession
 try:
     spark = (SparkSession.builder.master('local[2]').appName('iceberg-attempt')

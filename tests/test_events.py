@@ -142,17 +142,6 @@ def test_aqe_conf_split(spark, built_index, tmp_path):
     assert qe.spark.conf.get("spark.sql.session.timeZone") == "UTC"
     # serving pins a small point-query shuffle width on the clone only
     assert qe.spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    # serving_shuffle_partitions=None inherits the session setting
-    qe3 = QueryEngine(
-        spark, built_index["storage"],
-        serving_shuffle_partitions=None,
-    )
-    assert qe3.spark.conf.get("spark.sql.shuffle.partitions") == spark.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    # adaptive=None opts out of the clone entirely (caller manages conf)
-    qe2 = QueryEngine(spark, built_index["storage"], adaptive=None)
-    assert qe2.spark is spark
 
 
 def test_window_stats_watermark_drops_late_events(spark, tmp_path):

@@ -1,6 +1,9 @@
 """Ported reference golden tests (InvertedIndexTest.java:39-116,
 IndexerTest.java:44-71; FIXTURES.md F2): exact scores at 1e-10, keyword
-frequency maps, all 9 phrase cases, end-to-end add-and-search."""
+frequency maps, all 9 phrase cases, end-to-end add-and-search.  The golden
+corpus is built into a stored index and every check reads it the way a
+served query does: scores through ``QueryEngine``, phrases over the
+block index, keyword frequencies from the forward index."""
 
 from __future__ import annotations
 
@@ -9,31 +12,27 @@ from pyspark.sql import functions as F
 
 from web_based_search_engine_spark import fixtures
 from web_based_search_engine_spark.config import IndexConfig, ScoringConfig
-from web_based_search_engine_spark.operators import postings as P
-from web_based_search_engine_spark.operators import scoring as S
 from web_based_search_engine_spark.operators.phrase import phrase_doc_ids
+from web_based_search_engine_spark.plans.build import IndexBuilder
+from web_based_search_engine_spark.plans.query import QueryEngine
+from web_based_search_engine_spark.sources.catalog import ParquetIndexStorage
 
 
 @pytest.fixture(scope="module")
-def golden(spark):
+def golden(spark, tmp_path_factory):
     prepared = fixtures.testdoc3_tokens_df(spark).withColumn(
         "sha256", F.sha2(F.coalesce("content", F.lit("")), 256)
     )
-    frames = P.build_index_frames(prepared, IndexConfig(num_term_buckets=4))
-    st = frames.stats.collect()[0]
-    key_by_id = {
-        r["doc_id"]: r["path"] for r in frames.docs.select("doc_id", "path").collect()
-    }
-    return frames, st, key_by_id
+    storage = ParquetIndexStorage(tmp_path_factory.mktemp("golden_idx"))
+    IndexBuilder(spark, storage, IndexConfig(num_term_buckets=4)).build_from_prepared(prepared)
+    qe = QueryEngine(spark, storage, ScoringConfig(scorer="reference"))
+    key_by_id = {r["doc_id"]: r["path"] for r in qe.docs.select("doc_id", "path").collect()}
+    return qe, key_by_id
 
 
 def test_reference_scores_exact(spark, golden):
-    frames, st, key_by_id = golden
-    scored = S.score_query_terms(
-        frames.postings, frames.docs, frames.vocab,
-        fixtures.GOLDEN_QUERY_TERMS, st["n_docs"], st["avg_doc_len"],
-        ScoringConfig(scorer="reference"),
-    ).collect()
+    qe, key_by_id = golden
+    scored = qe.search_terms(fixtures.GOLDEN_QUERY_TERMS, assemble=False).collect()
     got = {key_by_id[r["doc_id"]]: r["score"] for r in scored}
     assert set(got) == set(fixtures.GOLDEN_SCORES)
     for doc, want in fixtures.GOLDEN_SCORES.items():
@@ -41,11 +40,12 @@ def test_reference_scores_exact(spark, golden):
 
 
 def test_keyword_frequencies(spark, golden):
-    frames, _, key_by_id = golden
+    qe, key_by_id = golden
     # doc1 {t01:2, t02:1, t03:1}, doc2 {t04:2, t05:1, t06:1}, doc3 all-1
     rows = (
-        frames.postings.join(frames.vocab.select("term_id", "term"), "term_id")
-        .select("doc_id", "term", (F.col("title_tf") + F.col("body_tf")).alias("tf"))
+        qe.forward.select("doc_id", F.explode("term_tfs").alias("e"))
+        .select("doc_id", "e.term_id", "e.tf")
+        .join(qe.vocab.select("term_id", "term"), "term_id")
         .collect()
     )
     freq: dict[str, dict[str, int]] = {}
@@ -57,26 +57,29 @@ def test_keyword_frequencies(spark, golden):
 
 
 def test_phrase_goldens(spark, golden):
-    frames, _, key_by_id = golden
+    qe, key_by_id = golden
+
+    def served(phrase):
+        ranked = qe.search_terms(list(dict.fromkeys(phrase)), phrase, assemble=False)
+        return {key_by_id[r["doc_id"]] for r in ranked.collect()}
+
     for phrase in fixtures.GOLDEN_PHRASES:
         got = {
             key_by_id[r["doc_id"]]
-            for r in phrase_doc_ids(frames.postings, frames.vocab, phrase).collect()
+            for r in phrase_doc_ids(qe.blocks, qe.vocab, phrase).collect()
         }
         assert got == {"doc1"}, phrase
+        assert served(phrase) == {"doc1"}, phrase
     # negatives: cross-doc, reversed, cross-field
     for phrase in [["t03", "t02"], ["t01", "t04"], ["t09", "t10"], ["t01", "t01", "t01"]]:
-        got = phrase_doc_ids(frames.postings, frames.vocab, phrase).collect()
+        got = phrase_doc_ids(qe.blocks, qe.vocab, phrase).collect()
         assert got == [], phrase
+        assert served(phrase) == set(), phrase
 
 
 def test_add_and_search_end_to_end(spark, tmp_path):
     """IndexerTest.addAndSearch port: one doc (title 'this is a test', body
     'hello world'), search by word / multiword / phrase pos+neg."""
-    from web_based_search_engine_spark.plans.build import IndexBuilder
-    from web_based_search_engine_spark.plans.query import QueryEngine
-    from web_based_search_engine_spark.sources.catalog import ParquetIndexStorage
-
     corpus = spark.createDataFrame(
         [("r/r", "this is a test", "c1", "txt", "hello world")], fixtures.CORPUS_SCHEMA
     )

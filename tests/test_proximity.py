@@ -47,52 +47,40 @@ def test_proximity_windows_matches_bruteforce(spark):
         assert got[d] == want, (d, occ)
 
 
-def test_proximity_windows_end_to_end(spark):
-    from web_based_search_engine_spark import config, fixtures
+def test_proximity_windows_end_to_end(spark, tmp_path):
+    from web_based_search_engine_spark import config
     from web_based_search_engine_spark.operators import phrase as PH
-    from web_based_search_engine_spark.operators import postings as P
+    from web_based_search_engine_spark.plans.build import IndexBuilder
+    from web_based_search_engine_spark.plans.query import QueryEngine
+    from web_based_search_engine_spark.sources.catalog import ParquetIndexStorage
 
     # doc 1: terms 6 tokens apart in body ('qq' filler — NOT a stopword,
     # unlike single letters); doc 2: adjacent; doc 3: only one term
     rows = [
-        (1, "r/a", "p1", "c", "t", "alpha qq qq qq qq qq beta"),
-        (2, "r/a", "p2", "c", "t", "alpha beta"),
-        (3, "r/a", "p3", "c", "t", "alpha only here"),
+        ("r/a", "p1", "c", "t", "alpha qq qq qq qq qq beta"),
+        ("r/a", "p2", "c", "t", "alpha beta"),
+        ("r/a", "p3", "c", "t", "alpha only here"),
     ]
     corpus = spark.createDataFrame(
-        rows, "doc_id long, repo string, path string, commit string, lang string, content string"
-    ).drop("doc_id")
-    frames = P.build_index_frames(P.prepare_corpus(corpus), config.IndexConfig(num_term_buckets=2))
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    storage = ParquetIndexStorage(str(tmp_path / "idx"))
+    IndexBuilder(spark, storage, config.IndexConfig(num_term_buckets=2)).build(corpus)
+    qe = QueryEngine(spark, storage)
     out = {
         r["doc_id"]: r["min_window"]
         for r in PH.proximity_windows(
-            frames.postings, frames.vocab, ["alpha", "beta"], window=10
+            qe.blocks, qe.vocab, ["alpha", "beta"], window=10
         ).collect()
     }
     # doc ids are dense over (repo,path,commit) order: p1->1, p2->2, p3->3
-    assert out[1] == 7 and out[2] == 2
-    assert 3 not in out
-    tight = PH.proximity_windows(frames.postings, frames.vocab, ["alpha", "beta"], window=3)
+    assert out == {1: 7, 2: 2}
+    tight = PH.proximity_windows(qe.blocks, qe.vocab, ["alpha", "beta"], window=3)
     assert {r["doc_id"] for r in tight.collect()} == {2}
     # unseen term -> empty; duplicate query terms behave as the set
-    assert PH.proximity_windows(frames.postings, frames.vocab, ["alpha", "zzz"], 10).count() == 0
-    dup = PH.proximity_windows(frames.postings, frames.vocab, ["alpha", "alpha", "beta"], 10)
+    assert PH.proximity_windows(qe.blocks, qe.vocab, ["alpha", "zzz"], 10).count() == 0
+    dup = PH.proximity_windows(qe.blocks, qe.vocab, ["alpha", "alpha", "beta"], 10)
     assert {r["doc_id"] for r in dup.collect()} == {1, 2}
-    # blocks mode: identical windows decoded from the compressed index
-    from pyspark.sql import functions as F
-    from web_based_search_engine_spark.operators import blocks as B
-
-    doc_lens = frames.docs.select(
-        "doc_id", (F.col("title_len") + F.col("body_len")).alias("len_d")
-    )
-    blk = B.encode_blocks(frames.postings, doc_lens, config.IndexConfig(num_term_buckets=2))
-    via_blocks = {
-        r["doc_id"]: r["min_window"]
-        for r in PH.proximity_windows(
-            None, frames.vocab, ["alpha", "beta"], window=10, blocks=blk
-        ).collect()
-    }
-    assert via_blocks == out
 
 
 def test_near_search_is_a_score_preserving_filter(spark, tmp_path):
@@ -175,15 +163,13 @@ def test_phrase_two_pass_equals_single_pass(spark, built_index, monkeypatch):
             continue
         single = {
             r["doc_id"]
-            for r in PH.phrase_doc_ids(None, vocab, terms, term_rows=rows,
-                                       blocks=blocks).collect()
+            for r in PH.phrase_doc_ids(blocks, vocab, terms, term_rows=rows).collect()
         }
         monkeypatch.setattr(PH, "TWO_PASS_MIN_POSTINGS", 0)
         monkeypatch.setattr(PH, "TWO_PASS_ABS_POSTINGS", 0)
         two = {
             r["doc_id"]
-            for r in PH.phrase_doc_ids(None, vocab, terms, term_rows=rows,
-                                       blocks=blocks).collect()
+            for r in PH.phrase_doc_ids(blocks, vocab, terms, term_rows=rows).collect()
         }
         monkeypatch.undo()
         assert two == single, terms
@@ -232,15 +218,15 @@ def test_proximity_two_pass_equals_single_pass(spark, built_index, monkeypatch):
             continue
         single = {
             (r["doc_id"], r["min_window"])
-            for r in PH.proximity_windows(None, qe.vocab, terms, window,
-                                          term_rows=rows, blocks=qe.blocks).collect()
+            for r in PH.proximity_windows(qe.blocks, qe.vocab, terms, window,
+                                          term_rows=rows).collect()
         }
         monkeypatch.setattr(PH, "TWO_PASS_MIN_POSTINGS", 0)
         monkeypatch.setattr(PH, "TWO_PASS_ABS_POSTINGS", 0)
         two = {
             (r["doc_id"], r["min_window"])
-            for r in PH.proximity_windows(None, qe.vocab, terms, window,
-                                          term_rows=rows, blocks=qe.blocks).collect()
+            for r in PH.proximity_windows(qe.blocks, qe.vocab, terms, window,
+                                          term_rows=rows).collect()
         }
         monkeypatch.undo()
         assert two == single, terms

@@ -8,7 +8,7 @@ EXPLAIN.md, annotated with what to look for at 100 TB scale:
 - small-side joins must be BroadcastHashJoin, big aggregations
   partial->final HashAggregate (map-side combine).
 
-Run: python tools/explain_plans.py  (writes /root/repo/EXPLAIN.md)
+Run: python tools/explain_plans.py  (writes EXPLAIN.md at the repository root)
 """
 
 from __future__ import annotations
@@ -17,8 +17,10 @@ import contextlib
 import io
 import sys
 import tempfile
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO_ROOT))
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -53,26 +55,28 @@ def main() -> None:
 
     sections: list[tuple[str, str, str]] = []
 
-    # --- build dataflow (unmaterialized composition) -----------------------
+    # --- build dataflow: the builder's stage functions, composed without
+    # materializing between them -------------------------------------------
     from web_based_search_engine_spark.operators import postings as P
 
     corpus = corpus_df(spark, 300, num_partitions=4)
     cfg = IndexConfig(num_term_buckets=4, block_size=16, salt_buckets=4)
-    frames = P.build_index_frames(P.prepare_corpus(corpus), cfg)
+    merged = P.positional_postings(P.with_doc_ids(P.prepare_corpus(corpus), cfg))
+    vocab = P.build_vocab(merged, cfg)
     sections.append((
         "Build: positional postings + vocab join",
         "The one big shuffle is the (doc_id, term) HashAggregate; both its "
         "halves are partial->final (map-side combine bounds shuffle volume "
         "by distinct pairs, not token count).  The term-id join carries no "
         "positions on the vocab side.",
-        plan_of(frames.postings),
+        plan_of(P.encode_postings(merged, vocab, cfg)),
     ))
     sections.append((
         "Build: salted df/cf aggregation (vocab)",
         "Two stacked HashAggregates: (term, salt) partial then term final — "
         "the explicit two-phase salted aggregation for hot terms; the dense "
         "term-id assignment adds one range shuffle over distinct terms only.",
-        plan_of(frames.vocab),
+        plan_of(vocab),
     ))
 
     # --- stored-index query path ------------------------------------------
@@ -133,8 +137,8 @@ def main() -> None:
         try:
             rows = qe_blocks._lookup_cached(["search", "engin"])
             two_pass_plan = plan_of(
-                PH.phrase_doc_ids(None, qe_blocks.vocab, ["search", "engin"],
-                                  term_rows=rows, blocks=qe_blocks.blocks)
+                PH.phrase_doc_ids(qe_blocks.blocks, qe_blocks.vocab, ["search", "engin"],
+                                  term_rows=rows)
             )
         finally:
             PH.TWO_PASS_MIN_POSTINGS, PH.TWO_PASS_ABS_POSTINGS = old_min, old_abs
@@ -347,7 +351,8 @@ def main() -> None:
                    "BroadcastHashJoin", "HashAggregate"):
         checks.append(f"- `{marker}`: {joined.count(marker)} occurrences")
 
-    with open("/root/repo/EXPLAIN.md", "w") as f:
+    out = REPO_ROOT / "EXPLAIN.md"
+    with open(out, "w") as f:
         f.write("# EXPLAIN — physical plans of the load-bearing dataflows\n\n")
         f.write("Generated by `tools/explain_plans.py` on the sf0.001/F1 "
                 "fixtures (plans are scale-invariant; row counts are not).\n\n")
@@ -355,7 +360,7 @@ def main() -> None:
         f.write("\n".join(checks) + "\n")
         for title, blurb, plan in sections:
             f.write(f"\n## {title}\n\n{blurb}\n\n```\n{trim(plan)}\n```\n")
-    print("wrote /root/repo/EXPLAIN.md")
+    print(f"wrote {out}")
     spark.stop()
 
 

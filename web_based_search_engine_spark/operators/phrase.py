@@ -10,10 +10,13 @@ Semantics preserved exactly (SURVEY #28-29, Appendix C-W5):
   -> empty doc set (an unseen term has no postings);
 - phrase NEVER changes scores, it only filters (Indexer.java:270-276).
 
-Each fold step is a doc_id equi-join between the carried state and the next
-term's (partition-pruned) postings, with the position intersection computed
-by ``array_intersect(transform(prev, p -> p+1), cur)`` — all Catalyst, no
-UDFs; the per-term scans prune storage buckets just like the scorer.
+Both operators read the stored, compressed block index — the one
+positional structure, like PostingIndex.java:184-220.  Each phrase term's
+positions are decoded from its (bucket partition-pruned, term_id pushed)
+blocks; each fold step is a doc_id equi-join between the carried state
+and the next term's postings, with the position intersection computed by
+``array_intersect(transform(prev, p -> p+1), cur)`` — all Catalyst, no
+UDFs.
 """
 
 from __future__ import annotations
@@ -22,15 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .scoring import lookup_terms
-
-
-def _term_postings(postings: DataFrame, term_row: dict) -> DataFrame:
-    p = postings
-    if "bucket" in p.columns and "bucket" in term_row:
-        p = p.where(F.col("bucket") == term_row["bucket"])
-    return p.where(F.col("term_id") == term_row["term_id"]).select(
-        "doc_id", "title_pos", "body_pos"
-    )
 
 
 def _term_blocks(blocks: DataFrame, term_row: dict) -> DataFrame:
@@ -42,54 +36,15 @@ def _term_blocks(blocks: DataFrame, term_row: dict) -> DataFrame:
     )
 
 
-def _term_postings_from_blocks(blocks: DataFrame, term_row: dict) -> DataFrame:
+def _term_positions(blocks: DataFrame, term_row: dict) -> DataFrame:
     """One phrase term's positional postings decoded from the compressed
     block index (bucket partition-pruned + term_id pushed to parquet; the
-    vectorized decoder reads only this term's blocks).  Lets blocks-mode
-    deployments serve phrase without keeping the uncompressed postings
-    table — one positional structure, like PostingIndex.java:184-220."""
+    vectorized decoder reads only this term's blocks)."""
     from . import blocks as B
 
     return B.decode_blocks(_term_blocks(blocks, term_row), with_positions=True).select(
         "doc_id", "title_pos", "body_pos"
     )
-
-
-def phrase_doc_ids(
-    postings: DataFrame | None,
-    vocab: DataFrame,
-    phrase_terms: list[str],
-    term_rows: list[dict] | None = None,
-    blocks: DataFrame | None = None,
-) -> DataFrame:
-    """Docs containing ``phrase_terms`` adjacently -> DataFrame(doc_id).
-
-    ``phrase_terms`` are analyzed terms in phrase order (stop/stem already
-    applied by the query parser, Indexer.java:260-269).  ``term_rows``:
-    pre-resolved vocab rows (QueryEngine dictionary cache).  With
-    ``blocks`` given, per-term positions are decoded from the compressed
-    block index and ``postings`` may be None (blocks-mode storage keeps
-    ONE positional structure).
-    """
-    src = blocks if blocks is not None else postings
-    spark = src.sparkSession
-    empty = spark.createDataFrame([], "doc_id long")
-    if not phrase_terms:
-        return empty
-
-    rows = term_rows if term_rows is not None else lookup_terms(vocab, phrase_terms)
-    by_term = {r["term"]: r for r in rows}
-    if any(t not in by_term for t in phrase_terms):
-        return empty
-
-    if blocks is not None:
-        return _phrase_doc_ids_blocks(blocks, phrase_terms, by_term, empty)
-
-    pos_by_term = {
-        t: _term_postings(postings, by_term[t])
-        for t in dict.fromkeys(phrase_terms)
-    }
-    return _adjacency_fold(phrase_terms, pos_by_term)
 
 
 def _adjacency_fold(
@@ -140,26 +95,40 @@ TWO_PASS_ABS_POSTINGS = 2_000_000   # above this, always two-pass
 _BROADCAST_SURVIVOR_CAP = 200_000
 
 
-def _phrase_doc_ids_blocks(
+def phrase_doc_ids(
     blocks: DataFrame,
+    vocab: DataFrame,
     phrase_terms: list[str],
-    by_term: dict[str, dict],
-    empty: DataFrame,
+    term_rows: list[dict] | None = None,
 ) -> DataFrame:
-    """Blocks-mode phrase with two-pass position decode (SURVEY §7 M3:
-    "positions decoded only for survivors"; VERDICT r2 item 3).
+    """Docs of the block index ``blocks`` containing ``phrase_terms``
+    adjacently -> DataFrame(doc_id).
 
-    Pass 1 decodes DOC IDS ONLY per phrase term (the position byte columns
-    are never read — column pruning reaches the parquet scan) and
-    intersects the per-term doc sets.  Pass 2 re-decodes WITH positions
-    only the blocks that contain a surviving doc — block provenance rides
-    the pass-1 rows (``with_block_ids``), so the block prune is a plain
-    equi-semi-join on block_id, not a range join — then runs the adjacency
-    fold on the surviving postings.  For a selective phrase over a hot
-    term this skips position decode for almost every block of the hot
-    term's posting list, which is exactly the cost that dominated the
-    single-pass plan.  Cheap phrases (small total df) keep the single-pass
-    plan: one job beats three tiny ones."""
+    ``phrase_terms`` are analyzed terms in phrase order (stop/stem already
+    applied by the query parser, Indexer.java:260-269).  ``term_rows``:
+    pre-resolved vocab rows (QueryEngine dictionary cache).
+
+    Two-pass position decode (SURVEY §7 M3: "positions decoded only for
+    survivors"; VERDICT r2 item 3).  Pass 1 decodes DOC IDS ONLY per
+    phrase term (the position byte columns are never read — column
+    pruning reaches the parquet scan) and intersects the per-term doc
+    sets.  Pass 2 re-decodes WITH positions only the blocks that contain a
+    surviving doc — block provenance rides the pass-1 rows
+    (``with_block_ids``), so the block prune is a plain equi-semi-join on
+    block_id, not a range join — then runs the adjacency fold on the
+    surviving postings.  For a selective phrase over a hot term this skips
+    position decode for almost every block of the hot term's posting list,
+    which is exactly the cost that dominated the single-pass plan.  Cheap
+    phrases (small total df) keep the single-pass plan: one job beats
+    three tiny ones."""
+    empty = blocks.sparkSession.createDataFrame([], "doc_id long")
+    if not phrase_terms:
+        return empty
+    rows = term_rows if term_rows is not None else lookup_terms(vocab, phrase_terms)
+    by_term = {r["term"]: r for r in rows}
+    if any(t not in by_term for t in phrase_terms):
+        return empty
+
     from . import blocks as B
 
     uniq = list(dict.fromkeys(phrase_terms))
@@ -170,7 +139,7 @@ def _phrase_doc_ids_blocks(
         return B.decode_blocks(_term_blocks(blocks, by_term[uniq[0]])).select("doc_id")
 
     if len(uniq) == 1 or not _want_two_pass(uniq, by_term):
-        pos_by_term = {t: _term_postings_from_blocks(blocks, by_term[t]) for t in uniq}
+        pos_by_term = {t: _term_positions(blocks, by_term[t]) for t in uniq}
         return _adjacency_fold(phrase_terms, pos_by_term)
 
     pos_by_term = _pruned_positions_by_term(blocks, uniq, by_term)
@@ -274,12 +243,11 @@ def min_cover_expr(merged_col, k: int):
 
 
 def proximity_windows(
-    postings: DataFrame | None,
+    blocks: DataFrame,
     vocab: DataFrame,
     terms: list[str],
     window: int,
     term_rows: list[dict] | None = None,
-    blocks: DataFrame | None = None,
 ) -> DataFrame:
     """Proximity retrieval: docs where ALL ``terms`` co-occur within a
     ``window``-token span in ONE field -> (doc_id, min_window), smallest
@@ -292,15 +260,11 @@ def proximity_windows(
     adjacency (phrase); proximity is the standard relaxation ("terms near
     each other") search engines add next.
 
-    Shape: k partition-pruned per-term posting scans -> k-way doc_id
-    equi-join (docs missing any term drop out) -> per-doc merged position
-    scan as ONE ``aggregate`` expression — no explode, no extra shuffle
-    beyond the joins.  Works off the compressed block index when
-    ``blocks`` is given (same single-positional-structure story as
-    phrase)."""
-    src = blocks if blocks is not None else postings
-    spark = src.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, min_window long")
+    Shape: k partition-pruned per-term block decodes of ``blocks`` ->
+    k-way doc_id equi-join (docs missing any term drop out) -> per-doc
+    merged position scan as ONE ``aggregate`` expression — no explode, no
+    extra shuffle beyond the joins."""
+    empty = blocks.sparkSession.createDataFrame([], "doc_id long, min_window long")
     uniq = list(dict.fromkeys(terms))
     if not uniq:
         return empty
@@ -310,21 +274,16 @@ def proximity_windows(
         return empty
 
     # proximity has the same all-terms-present requirement as phrase, so
-    # the two-pass survivor prune applies verbatim (blocks mode, same
-    # df-based crossover): positions decode only for surviving blocks
+    # the two-pass survivor prune applies verbatim (same df-based
+    # crossover): positions decode only for surviving blocks
     pruned: dict[str, DataFrame] | None = None
-    if blocks is not None and len(uniq) > 1 and _want_two_pass(uniq, by_term):
+    if len(uniq) > 1 and _want_two_pass(uniq, by_term):
         pruned = _pruned_positions_by_term(blocks, uniq, by_term)
         if pruned is None:
             return empty
 
     def term_df(term: str, i: int) -> DataFrame:
-        if pruned is not None:
-            d = pruned[term]
-        elif blocks is not None:
-            d = _term_postings_from_blocks(blocks, by_term[term])
-        else:
-            d = _term_postings(postings, by_term[term])
+        d = pruned[term] if pruned is not None else _term_positions(blocks, by_term[term])
         return d.select(
             "doc_id",
             F.col("title_pos").alias(f"_t{i}"),

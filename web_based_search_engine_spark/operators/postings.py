@@ -21,13 +21,13 @@ final sum; AQE skew handling stays on as a backstop.
 
 Positions are 0-based offsets in the post-stop/stem token sequence per
 field (PostingIndex.java:50-64); tf == number of positions.  Each stage is
-a pure function of the previous one so the checkpointed builder
-(plans/build.py) can materialize and resume between them.
+a pure function of the previous one.  The checkpointed builder
+(plans/build.py) is their only composition: it materializes each stage,
+can resume between them, and encodes the stored ``blocks`` table that
+every query reads.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,16 +37,6 @@ from ..functions.analysis import analyze
 from .ids import assign_dense_ids
 
 DOC_KEY = ["repo", "path", "commit"]
-
-
-@dataclass
-class IndexFrames:
-    """Logical index tables (unmaterialized DataFrames)."""
-
-    docs: DataFrame      # doc_id, repo, path, commit, lang, sha256, title_len, body_len, tf_max, doc_norm
-    vocab: DataFrame     # term_id, term, df, cf, max_tf, bucket
-    postings: DataFrame  # term_id, doc_id, bucket, title_tf, body_tf, title_pos, body_pos
-    stats: DataFrame     # n_docs, avg_title_len, avg_body_len, avg_doc_len
 
 
 def prepare_corpus(corpus: DataFrame, cfg: AnalysisConfig | None = None) -> DataFrame:
@@ -362,21 +352,6 @@ def build_stats(docs: DataFrame, cfg: IndexConfig | None = None) -> DataFrame:
         F.lit(cfg.num_term_buckets).alias("num_term_buckets"),
         F.lit(cfg.num_doc_buckets).alias("num_doc_buckets"),
     )
-
-
-def build_index_frames(prepared: DataFrame, cfg: IndexConfig | None = None) -> IndexFrames:
-    """In-memory composition of all build stages (tests / small corpora).
-    The checkpointed builder in plans/build.py materializes between stages
-    instead."""
-    cfg = cfg or IndexConfig()
-    corpus_tok = with_doc_ids(prepared, cfg)
-    merged = positional_postings(corpus_tok)
-    vocab = build_vocab(merged, cfg)
-    postings = encode_postings(merged, vocab, cfg)
-    n_docs = corpus_tok.count()
-    docs = build_docs(corpus_tok, postings, vocab, n_docs)
-    stats = build_stats(docs, cfg)
-    return IndexFrames(docs=docs, vocab=vocab, postings=postings, stats=stats)
 
 
 def forward_frame(postings: DataFrame, num_doc_buckets: int = 8,

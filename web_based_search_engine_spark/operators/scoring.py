@@ -19,10 +19,9 @@ Both scorers are pure Catalyst expressions over posting rows
 posting scan, accumulate (#26) == groupBy(doc_id).sum (Tungsten hash agg),
 normalize (#27) == join with precomputed per-doc stats (the reference
 recomputed ||d|| per query per candidate — an anti-pattern SURVEY §4.1 says
-not to reproduce).  The query engine feeds it the exhaustive decode of the
-query terms' compressed blocks (operators/wand.py; BM25 may also prune
-blocks first); ``score_query_terms`` feeds it the uncompressed postings
-table, for the IndexFrames pipeline and the golden tests.
+not to reproduce).  Its one caller, ``wand.wand_top_k``, feeds it the
+query terms' postings decoded from the compressed block index —
+exhaustively for the reference scorer, optionally WAND-pruned for BM25.
 """
 
 from __future__ import annotations
@@ -133,40 +132,6 @@ def score_postings(
         .groupBy("doc_id")
         .agg(F.sum("_partial").alias("score"))
     )
-
-
-def score_query_terms(
-    postings: DataFrame,
-    docs: DataFrame,
-    vocab: DataFrame,
-    terms: list[str],
-    n_docs: int,
-    avg_doc_len: float,
-    cfg: ScoringConfig | None = None,
-    term_rows: list[dict] | None = None,
-) -> DataFrame:
-    """Disjunctive ranked scoring of ``terms`` over the uncompressed
-    postings table -> DataFrame(doc_id, score).
-
-    The postings scan is pruned two ways before any shuffle: storage-bucket
-    partition pruning (``bucket`` is a partition column of the stored table)
-    and a term_id IN-list pushed to the parquet reader.
-
-    ``term_rows``: pre-resolved vocabulary rows for ``terms`` — passing
-    them skips the vocab-scan job.
-    """
-    cfg = cfg or ScoringConfig()
-    qt = term_rows if term_rows is not None else lookup_terms(vocab, terms)
-    if not qt:
-        return postings.sparkSession.createDataFrame([], "doc_id long, score double")
-
-    cand = postings.where(F.col("term_id").isin([r["term_id"] for r in qt]))
-    if "bucket" in postings.columns and all("bucket" in r for r in qt):
-        # partition pruning: bucket is the storage partition column; the IN
-        # list comes from the driver-side vocab lookup, so only the query
-        # terms' partitions are read at all
-        cand = cand.where(F.col("bucket").isin(sorted({r["bucket"] for r in qt})))
-    return score_postings(cand, docs, df_of_term(qt), n_docs, avg_doc_len, cfg)
 
 
 def top_k(scored: DataFrame, k: int = 50) -> DataFrame:

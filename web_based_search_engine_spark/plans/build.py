@@ -87,8 +87,8 @@ class IndexBuilder:
     def _run_stages(self, corpus_tok_fn, resume: bool) -> BuildReport:
         t0 = time.time()
         # ETL path wants AQE (skew-join handling + partition coalescing on
-        # the big shuffles); a QueryEngine in the same session may have
-        # pinned it off for serving — re-pin at build entry.
+        # the big shuffles); the caller's session may have it off — re-pin
+        # at build entry.
         self.spark.conf.set("spark.sql.adaptive.enabled", "true")
         run: set[str] = set()
         skipped: set[str] = set()

@@ -128,9 +128,16 @@ class QueryEngine:
     """Loads the stored index once; each search is a handful of small jobs.
 
     Scoring and phrase / proximity filters all run off the compressed
-    block index (operators/wand.py, operators/phrase.py); the uncompressed
-    ``postings`` table is never read.  ``wand_prune`` applies to the bm25
-    scorer only: a reference-scorer query always decodes exhaustively.
+    block index (operators/wand.py, operators/phrase.py), the one index
+    any query reads; the uncompressed ``postings`` table is never read.
+    ``wand_prune`` applies to the bm25 scorer only: a reference-scorer
+    query always decodes exhaustively.
+
+    The engine runs on a PRIVATE ``newSession()`` clone of ``spark`` (same
+    SparkContext + shared cache, separate SQLConf) with AQE off and 8
+    shuffle partitions, so constructing one never mutates the caller's
+    session: ETL / analytics next to a serving engine in one process keep
+    their own conf, the in-process analog of separate Spark apps.
     """
 
     def __init__(
@@ -139,39 +146,20 @@ class QueryEngine:
         storage: ParquetIndexStorage,
         scoring: ScoringConfig | None = None,
         analysis: AnalysisConfig | None = None,
-        adaptive: bool | None = False,
-        serving_shuffle_partitions: int | None = 8,
         wand_prune: bool | str = "auto",
     ):
-        # Serving path pins AQE OFF (adaptive=None uses the caller's session
-        # and conf as-is): a point query over partition-pruned,
-        # statistics-known scans gains nothing from runtime re-planning, and
-        # AQE's stage-by-stage materialization adds ~0.2-0.35 s driver
-        # overhead per query (measured at sf0.1: hot-term p50 1.13 ->
-        # 0.82 s).  The conf is pinned on a PRIVATE ``newSession()`` clone
-        # (same SparkContext + shared cache, separate SQLConf) so
-        # constructing an engine never mutates the caller's session — ETL /
-        # analytics running next to a serving engine in one process keep
-        # their own AQE setting, the in-process analog of serving and ETL
-        # being separate Spark apps with separate confs.
-        if adaptive is not None:
-            spark = spark.newSession()
-            spark.conf.set("spark.sql.adaptive.enabled", str(adaptive).lower())
-            # Serving also pins a SMALL shuffle-partition count on the
-            # clone: a point query's only exchanges are over its own
-            # candidate set (bounded by the query's decoded postings after
-            # WAND pruning, NOT by corpus size), so the ETL-sized setting
-            # (~cluster cores) just mints near-empty tasks — measured at
-            # sf0.1/local[32] on the former postings-table scorer: p50
-            # ~0.71 -> ~0.59 s with 8.  The right value tracks per-query
-            # candidate volume, which is scale-invariant; deployments
-            # with very broad queries can raise it (or pass None to
-            # inherit the session setting).
-            if serving_shuffle_partitions is not None:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(int(serving_shuffle_partitions)),
-                )
+        spark = spark.newSession()
+        # AQE off: a point query over partition-pruned, statistics-known
+        # scans gains nothing from runtime re-planning, and AQE's
+        # stage-by-stage materialization adds ~0.2-0.35 s driver overhead
+        # per query (measured at sf0.1: hot-term p50 1.13 -> 0.82 s).
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # A small shuffle width: a point query's only exchanges are over
+        # its own candidate set (bounded by the query's decoded postings,
+        # NOT by corpus size), so the ETL-sized setting (~cluster cores)
+        # just mints near-empty tasks — measured at sf0.1/local[32] on the
+        # former postings-table scorer: p50 ~0.71 -> ~0.59 s with 8.
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         self.spark = spark
         self.storage = storage
         self.scoring = scoring or ScoringConfig()
@@ -395,8 +383,7 @@ class QueryEngine:
         if hit is not None:
             return hit
         ids = phrase_doc_ids(
-            None, st.vocab, phrase,
-            term_rows=self._lookup_cached(phrase, st), blocks=st.blocks,
+            st.blocks, st.vocab, phrase, term_rows=self._lookup_cached(phrase, st)
         ).persist()
         return self._cache_candidates(st, key, ids)
 
@@ -408,8 +395,7 @@ class QueryEngine:
         if hit is not None:
             return hit
         ids = proximity_windows(
-            None, st.vocab, terms, window,
-            term_rows=self._lookup_cached(terms, st), blocks=st.blocks,
+            st.blocks, st.vocab, terms, window, term_rows=self._lookup_cached(terms, st)
         ).select("doc_id").persist()
         return self._cache_candidates(st, key, ids)
 
