@@ -43,3 +43,20 @@ def oracle_index():
     from web_based_search_engine_spark.oracle import pandas_oracle as O
 
     return O.build_oracle_index(fixtures.corpus_rows(N_SMALL))
+
+
+def assert_block_doc_lengths(spark, storage) -> int:
+    """Every stored block's ``len_ds[i]`` is the ``title_len + body_len``
+    that ``docs`` holds for ``doc_ids[i]``, and ``min_len_d`` is
+    ``min(len_ds)``.  Returns the number of postings checked."""
+    lens = {
+        r["doc_id"]: r["title_len"] + r["body_len"]
+        for r in storage.read_table(spark, "docs").collect()
+    }
+    checked = 0
+    for r in storage.read_table(spark, "blocks").collect():
+        assert len(r["len_ds"]) == len(r["doc_ids"]) == r["count"], r["term_id"]
+        assert list(r["len_ds"]) == [lens[d] for d in r["doc_ids"]], r["term_id"]
+        assert r["min_len_d"] == min(r["len_ds"]), r["term_id"]
+        checked += len(r["len_ds"])
+    return checked

@@ -150,6 +150,15 @@ def test_blocks_metadata_consistent(spark, built_index):
         assert r["min_len_d"] >= 1
 
 
+def test_blocks_store_doc_lengths(spark, built_index):
+    """The stored ``len_ds`` are the docs table's lengths, aligned with
+    ``doc_ids``, and ``min_len_d`` is their minimum: BM25 scores from
+    them without reading ``docs``."""
+    from conftest import assert_block_doc_lengths
+
+    assert assert_block_doc_lengths(spark, built_index["storage"]) > 0
+
+
 def test_decoder_block_id_provenance():
     """with_block_ids repeats each block's id onto exactly its own rows:
     regrouping the decoded rows by block_id must reproduce every block's

@@ -526,6 +526,68 @@ def test_full_snapshot_delete_with_simultaneous_upsert(spark, tmp_path):
     assert qe.search("beta", assemble=False).count() == 0  # edit removed it
 
 
+def test_upsert_keeps_block_doc_lengths(spark, tmp_path):
+    """A full-snapshot upsert that replaces one doc (with a different
+    length) and deletes another re-encodes every bucket holding their
+    postings: the stored ``len_ds`` still match ``docs``, and BM25 scores
+    equal a fresh build's."""
+    from conftest import assert_block_doc_lengths
+
+    v1 = [
+        ("r/a", "keep.py", "c1", "py", "searching engines alpha"),
+        ("r/a", "edit.py", "c1", "py", "posting retrieval beta"),
+        ("r/a", "gone.py", "c1", "py", "obsolete gamma content searching"),
+    ]
+    v2 = [
+        ("r/a", "keep.py", "c1", "py", "searching engines alpha"),
+        ("r/a", "edit.py", "c2", "py", "posting retrieval beta beta searching engines"),
+    ]
+    storage = ParquetIndexStorage(tmp_path / "idx")
+    IndexBuilder(spark, storage, CFG).build(_mini_corpus(spark, v1))
+    incremental_update(spark, storage, _mini_corpus(spark, v2), CFG, full_snapshot=True)
+    assert assert_block_doc_lengths(spark, storage) > 0
+
+    fresh = ParquetIndexStorage(tmp_path / "fresh")
+    IndexBuilder(spark, fresh, CFG).build(_mini_corpus(spark, v2))
+
+    def by_path(st):
+        docs = st.read_table(spark, "docs").select("doc_id", "path")
+        out = QueryEngine(spark, st).search("searching engines beta", assemble=False)
+        return {r["path"]: round(r["score"], 9) for r in out.join(docs, "doc_id").collect()}
+
+    assert by_path(storage) == by_path(fresh)
+
+
+def test_index_without_stored_doc_lengths_is_refused(spark, tmp_path):
+    """An index whose blocks lack ``len_ds`` (written before doc lengths
+    were stored in the blocks) is refused by the engine, and by an upsert
+    before it writes any partition: re-encoding only the touched buckets
+    would leave a blocks table of two schemas."""
+    import pytest
+
+    v1 = [
+        ("r/a", "f1.py", "c1", "py", "searching engines alpha"),
+        ("r/a", "f2.py", "c1", "py", "posting retrieval beta"),
+    ]
+    v2 = [v1[0], ("r/a", "f2.py", "c2", "py", "posting retrieval gamma")]
+    storage = ParquetIndexStorage(tmp_path / "idx")
+    IndexBuilder(spark, storage, CFG).build(_mini_corpus(spark, v1))
+    storage.write_table(
+        storage.read_table(spark, "blocks").drop("len_ds"), "blocks",
+        partition_by=["bucket"],
+    )
+
+    def versions():
+        return {t: e["version"] for t, e in storage.manifest()["tables"].items()}
+
+    before = versions()
+    with pytest.raises(RuntimeError, match="rebuild the index"):
+        QueryEngine(spark, storage)
+    with pytest.raises(RuntimeError, match="rebuild the index"):
+        incremental_update(spark, storage, _mini_corpus(spark, v2), CFG)
+    assert versions() == before
+
+
 def test_plan_freshness_tombstones(spark):
     """plan_freshness unit: full_snapshot marks absent stored keys deleted;
     default mode never does."""

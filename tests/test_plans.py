@@ -8,6 +8,9 @@ from silently decaying):
 - result assembly runs a fixed number of jobs past the ranking, each a
   doc_id / term_id literal-filtered scan (no per-query shuffle or full
   scan of a stored table), and returns a local frame,
+- a BM25 ranking reads only the blocks table and runs as one job (no
+  docs scan, no broadcast),
+- doc-id-only phrase decodes read only the doc-id stream of the blocks,
 - the index-free proximity scan is shuffle-free,
 - the blocks serving path is pure JVM (zero Python eval nodes).
 """
@@ -27,6 +30,16 @@ def _plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _scanned_tables(plan: str) -> set[str]:
+    """Stored table names behind the plan's parquet scans (each table is
+    read from ``.../tables/<name>/v<N>``)."""
+    return {
+        line.split("/tables/")[1].split("/")[0]
+        for line in plan.splitlines()
+        if line.startswith("Location:") and "/tables/" in line
+    }
 
 
 def test_vocab_lookup_partition_prunes(spark, built_index):
@@ -120,6 +133,48 @@ def test_assembly_is_literal_filtered_scans(spark, built_index, monkeypatch):
     assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
 
 
+def test_bm25_ranking_reads_blocks_only(spark, built_index):
+    """A BM25 ranking reads only the blocks table: doc lengths ride in the
+    blocks, so there is no docs scan and no broadcast join, and its collect
+    is one job (the scan stage and the stage past the doc_id shuffle)."""
+    import uuid
+
+    sc = spark.sparkContext
+    qe = QueryEngine(spark, built_index["storage"])
+    for q in ("searching engines", "agreed happy flies posting scoring cats"):
+        ranking = qe.search(q, k=5, assemble=False)
+        plan = _plan(ranking)
+        assert _scanned_tables(plan) == {"blocks"}, plan
+        assert "BroadcastExchange" not in plan, plan
+        group = f"plans-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            assert ranking.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) == 1, jobs
+        assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 2
+
+
+def test_doc_id_decodes_read_only_doc_ids(spark, built_index):
+    """The one-term phrase and the two-pass phrase's pass 1 keep doc ids
+    (and block ids) only: their scans must read the ``doc_ids`` stream
+    and no tf, length or position column."""
+    from web_based_search_engine_spark.operators import blocks as B
+    from web_based_search_engine_spark.operators.phrase import phrase_doc_ids
+
+    qe = QueryEngine(spark, built_index["storage"])
+    for df, want in (
+        (phrase_doc_ids(qe.blocks, qe.vocab, ["search"]), {"term_id", "doc_ids"}),
+        (B.decode_doc_ids(qe.blocks, with_block_ids=True),
+         {"term_id", "block_id", "doc_ids"}),
+    ):
+        plan = _plan(df)
+        rs = plan.split("ReadSchema: struct<")[1].split("\n")[0]
+        assert {f.split(":")[0] for f in rs.rstrip(">").split(",")} == want, rs
+
+
 def test_proximity_adhoc_is_shuffle_free(spark):
     """adhoc.proximity_adhoc claims one codegen scan — no Exchange may
     appear in its plan (the q48 batch path; a pure map stage at 100 TB)."""
@@ -181,10 +236,10 @@ def test_wand_prune_filters_push_down(spark, tmp_path):
     SCANS — (a) the final block scan carries a pushable per-term
     max_wtf >= w* necessary condition (row groups of low-tf blocks are
     skipped by parquet stats, their payload bytes never read), and (b) the
-    scoring join's docs side is range-pruned by the surviving blocks'
-    stored doc-id span (no per-query full docs scan).  Both layers are
-    strict weakenings of the exact bound, so the result must stay
-    bit-identical to exhaustive."""
+    plan scans no docs table at all (doc lengths ride in the blocks, so
+    there is no per-query docs scan).  The pushed condition is a strict
+    weakening of the exact bound, so the result must stay bit-identical
+    to exhaustive."""
     from web_based_search_engine_spark import fixtures
     from web_based_search_engine_spark.config import IndexConfig
     from web_based_search_engine_spark.operators import wand as W
@@ -208,8 +263,8 @@ def test_wand_prune_filters_push_down(spark, tmp_path):
     plan = _plan(pruned)
     # (a) the max_wtf necessary condition reached a parquet scan
     assert "GreaterThanOrEqual(max_wtf" in plan, plan
-    # (b) the docs scan is doc_id-range pruned (literal bounds pushed)
-    assert "GreaterThanOrEqual(doc_id" in plan and "LessThanOrEqual(doc_id" in plan, plan
+    # (b) no docs FileScan: the pruned BM25 plan reads the blocks alone
+    assert "docs" not in _scanned_tables(plan), plan
     # pruning engaged and stayed lossless
     rows_p = pruned.collect()
     rows_f = W.wand_top_k(

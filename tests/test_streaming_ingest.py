@@ -172,12 +172,16 @@ def test_streaming_lsh_novelty_ttl_evicts_aged_buckets(spark, tmp_path):
     content leads its buckets again — the state-size bound for an
     unbounded ingest stream.  Eviction fires in a trigger where the aged
     group receives no data (Structured Streaming timeout semantics), so
-    the middle batch carries unrelated text."""
+    the middle batch carries unrelated text.  Each run ends through
+    ``drain``, since a TTL query never terminates on its own."""
     import time
 
     from pyspark.sql import types as T
 
-    from web_based_search_engine_spark.streaming.stream import streaming_lsh_novelty
+    from web_based_search_engine_spark.streaming.stream import (
+        drain,
+        streaming_lsh_novelty,
+    )
 
     landing = str(tmp_path / "landing")
     out = str(tmp_path / "out")
@@ -200,7 +204,9 @@ def test_streaming_lsh_novelty_ttl_evicts_aged_buckets(spark, tmp_path):
         q = (rows.writeStream.format("parquet")
              .option("path", out).option("checkpointLocation", ckpt)
              .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        # a TTL query never terminates by itself; drain stops it
+        drain(q)
+        assert not q.isActive
 
     base = "alpha beta gamma delta epsilon zeta eta theta"
     write_batch([(1, base)], "b1")

@@ -89,11 +89,12 @@ def main() -> None:
             "Scan parquet of `blocks` with PartitionFilters on `bucket` "
             "(driver-side vocab lookup -> bucket IN-list: a B-bucket layout "
             "reads |query-term buckets|/B of the table) plus PushedFilters "
-            "on term_id; since round 4's pure-JVM decode (doc_ids/tfs as plain list "
-            "columns) the whole scoring path — explode, BM25 expression, "
-            "top-k — is ONE whole-stage-codegen span with NO Python/Arrow "
-            "eval node (guarded by tests/test_plans.py); position bytes "
-            "stay unread.",
+            "on term_id.  It is the plan's only scan: doc ids, tfs and doc "
+            "lengths are plain list columns of the blocks, so the decode is "
+            "a pure-JVM explode and BM25 joins nothing (no `docs` scan, no "
+            "BroadcastExchange): the collect is one job, with NO "
+            "Python/Arrow eval node (both guarded by tests/test_plans.py); "
+            "position bytes stay unread.",
             plan_of(qe_blocks.search("merge_sort searching", assemble=False)),
         ))
         # the assembly's lookup scans, recorded as _assemble runs them
@@ -156,6 +157,62 @@ def main() -> None:
             "cost VERDICT r2 flagged as the dominant phrase term at scale.",
             two_pass_plan,
         ))
+        sections.append((
+            "Query (blocks): candidate block skipping ahead of decode",
+            "With a phrase/proximity candidate set in hand, the candidate "
+            "materialization job also returns (count, min_id, max_id), and "
+            "the scorer drops blocks BEFORE decode two ways: (1) a literal "
+            "range predicate on the stored per-block [first_doc_id, "
+            "last_doc_id] span, which reaches the blocks scan's "
+            "PushedFilters (`GreaterThanOrEqual(last_doc_id, ..)`, "
+            "`LessThanOrEqual(first_doc_id, ..)`), so disjoint blocks are "
+            "skipped by parquet row-group statistics; (2) for candidate "
+            "sets <= 8192 ids, an exact containment left-semi join "
+            "(BroadcastNestedLoopJoin) against the candidate list: a block "
+            "survives only if some candidate id falls inside its span.  "
+            "Both are lossless: every posting of a skipped block would be "
+            "discarded by the post-decode candidate semi-join anyway "
+            "(tests/test_serving_concurrency.py::"
+            "test_candidate_block_skipping_lossless_and_engaged).",
+            plan_of(qe_blocks.search('searching "engines retrieval"', assemble=False)),
+        ))
+
+    # --- forced block-max WAND pruning on the adversarial corpus -----------
+    from web_based_search_engine_spark.fixtures import adversarial_wand_corpus
+    from web_based_search_engine_spark.operators import wand as W
+
+    with tempfile.TemporaryDirectory() as wd:
+        storage = ParquetIndexStorage(wd)
+        IndexBuilder(
+            spark, storage, IndexConfig(num_term_buckets=2, block_size=16, salt_buckets=2)
+        ).build(adversarial_wand_corpus(spark, 5000), resume=False)
+        # the engine's tables, read on its AQE-off session: the served shape
+        qe = QueryEngine(spark, storage)
+        pruned_plan = plan_of(W.wand_top_k(
+            qe.blocks, qe.docs, qe.vocab, ["zzhot", "zzrare"],
+            qe.n_docs, qe.avg_doc_len, prune=True, k=10,
+        ))
+    sections.append((
+        "Block-max WAND: pruning that reaches the scans",
+        "The final scoring plan of a forced-pruning query (`zzhot zzrare` "
+        "on the 5000-doc adversarial corpus, k=10).  Every pruning "
+        "decision reaches a SCAN: (1) the pruned path persists only the "
+        "candidate blocks' metadata projection (bucket, term_id, block_id, "
+        "max_wtf, min_len_d), never payloads; (2) the seed pass fetches "
+        "one block per term through `(term_id = t AND max_wtf >= w_b AND "
+        "block_id = b)`, plain comparisons that parquet row-group stats "
+        "skip on; (3) inverting the BM25 bound at the term's global "
+        "min-length gives a per-term scalar w*(t), and `(term_id = t AND "
+        "max_wtf >= w*)` is pushed into the block scan (PushedFilters "
+        "shows `GreaterThanOrEqual(max_wtf, ..)`), so row groups of "
+        "low-tf blocks never surface rows; the exact Catalyst-side bound "
+        "then reproduces the identical surviving set.  Doc lengths ride "
+        "in the blocks, so neither pass scans `docs`.  Guarded by "
+        "tests/test_plans.py::test_wand_prune_filters_push_down (pushed "
+        "max_wtf filter, no docs scan, bit-equal results, decoded << "
+        "candidate blocks).",
+        pruned_plan,
+    ))
 
     # --- driver-contract queries ------------------------------------------
     qs = entry.queries()

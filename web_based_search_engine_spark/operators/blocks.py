@@ -5,12 +5,12 @@ sorted by docId (PostingIndex.java:19-21,74-83).  The rebuild's storage
 format (north_star requirement) is per-term fixed-size blocks:
 
   (bucket, term_id, block_id, count, first/last_doc_id, max_wtf, min_len_d,
-   doc_ids: array<long>, title/body tfs: array<int>,
+   doc_ids: array<long>, title/body tfs: array<int>, len_ds: array<int>,
    title/body positions: per-doc delta-gap varint + varint length list)
 
-Why two compression regimes: the SCORING streams (doc ids, tfs) are plain
-parquet list columns so the score-only decode is a pure-JVM
-``explode(arrays_zip(...))`` inside whole-stage codegen — parquet's native
+Why two compression regimes: the SCORING streams (doc ids, tfs, doc
+lengths) are plain parquet list columns so the score-only decode is a
+pure-JVM ``explode(arrays_zip(...))`` inside whole-stage codegen — parquet's native
 page encodings (RLE/bit-pack/dict + zstd) do the integer compression, and
 the WAND hot path never leaves the JVM (measured ~0.12-0.17 s/query of
 Python-worker round trip eliminated at sf0.1).  The POSITION streams stay
@@ -18,6 +18,11 @@ custom varint inside binary columns: they are nested (list per posting),
 read ONLY by phrase/proximity queries, and parquet column pruning keeps
 their bytes unread for every scoring query — exactly where a bespoke codec
 pays and a plain list<list<int>> column would not (per-value levels).
+
+``len_ds`` holds each posting's doc length (title_len + body_len), aligned
+with ``doc_ids``: BM25 needs it per posting, and storing it next to the tfs
+(as Lucene keeps norms next to its postings) lets a BM25 query score from
+this one table, with no join against ``docs``.
 
 ``max_wtf`` (max field-weighted tf in the block) and ``min_len_d`` (min doc
 length among the block's postings) are the skip metadata for block-max WAND
@@ -180,6 +185,7 @@ BLOCKS_SCHEMA = T.StructType(
         T.StructField("doc_ids", T.ArrayType(T.LongType(), True), False),
         T.StructField("title_tfs", T.ArrayType(T.IntegerType(), True), False),
         T.StructField("body_tfs", T.ArrayType(T.IntegerType(), True), False),
+        T.StructField("len_ds", T.ArrayType(T.IntegerType(), True), False),
         T.StructField("title_pos_lens", T.BinaryType(), False),
         T.StructField("title_pos", T.BinaryType(), False),
         T.StructField("body_pos_lens", T.BinaryType(), False),
@@ -294,6 +300,7 @@ def encode_group_arrow(tbl: "pa.Table", block_size: int) -> "pa.Table":
             "body_tfs": list_col(
                 tbl["body_tf"].to_numpy().astype(np.int32), pa.int32()
             ),
+            "len_ds": list_col(len_d, pa.int32()),
             "title_pos_lens": bin_col(tl_buf, tl_off, bounds),
             "title_pos": bin_col(tp_buf, tp_off, t_flat_bounds),
             "body_pos_lens": bin_col(bl_buf, bl_off, bounds),
@@ -311,7 +318,7 @@ def _arrow_types():
         "first_doc_id": pa.int64(), "last_doc_id": pa.int64(),
         "max_wtf": pa.float64(), "min_len_d": pa.int32(),
         "doc_ids": pa.list_(pa.int64()), "title_tfs": pa.list_(pa.int32()),
-        "body_tfs": pa.list_(pa.int32()),
+        "body_tfs": pa.list_(pa.int32()), "len_ds": pa.list_(pa.int32()),
         "title_pos_lens": pa.binary(), "title_pos": pa.binary(),
         "body_pos_lens": pa.binary(), "body_pos": pa.binary(),
     }
@@ -350,6 +357,7 @@ def encode_group_pdf_rowwise(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame
                     [int(x) for x in d],
                     [int(x) for x in title_tfs[lo:hi]],
                     [int(x) for x in body_tfs[lo:hi]],
+                    [int(x) for x in len_d[lo:hi]],
                     tl,
                     tp,
                     bl,
@@ -449,7 +457,7 @@ def decode_blocks_arrow(tbl, with_positions: bool = False,
     structure is recovered from the known counts via segmented cumsums.
     Position lists are emitted as zero-copy Arrow ListArrays.
     ``with_block_ids`` repeats each block's ``block_id`` onto its posting
-    rows — the provenance column the two-pass phrase path joins on."""
+    rows (the provenance column ``decode_doc_ids`` emits in Spark)."""
     import pyarrow as pa
 
     import pyarrow.compute as pc
@@ -528,49 +536,68 @@ def decode_blocks_pdf(pdf: pd.DataFrame, with_positions: bool = False) -> pd.Dat
     return res
 
 
-def decode_blocks(blocks: DataFrame, with_positions: bool = False,
-                  with_block_ids: bool = False) -> DataFrame:
+def require_doc_lengths(blocks: DataFrame) -> DataFrame:
+    """``blocks`` itself, once it is known to store ``len_ds``.
+
+    An index written before doc lengths moved into the blocks lacks the
+    column.  Serving it, or upserting into it, would go wrong quietly: an
+    upsert re-encodes only the touched buckets, so the table would hold
+    files of both schemas, and a plain parquet read then either fails on
+    the column or reads it as null for the old files, where
+    ``explode(arrays_zip(...))`` drops every posting.  So both entry points
+    refuse such an index up front."""
+    if "len_ds" not in blocks.columns:
+        raise RuntimeError(
+            "the stored blocks table has no len_ds column (it was written "
+            "before doc lengths were stored in the blocks); rebuild the index"
+        )
+    return blocks
+
+
+def decode_doc_ids(blocks: DataFrame, with_block_ids: bool = False) -> DataFrame:
+    """(term_id, doc_id) per posting, for callers that need doc ids only:
+    explodes ``doc_ids`` alone, so the scan reads no tf, length or
+    position stream.  ``with_block_ids`` adds each row's source
+    ``block_id`` (provenance for the two-pass phrase block prune)."""
+    head = ["term_id", "block_id"] if with_block_ids else ["term_id"]
+    return blocks.select(*head, F.explode("doc_ids").alias("doc_id"))
+
+
+def decode_blocks(blocks: DataFrame, with_positions: bool = False) -> DataFrame:
     """Distributed block decode -> postings-shaped DataFrame.
 
     Score-only decode (the WAND/BM25 hot path) is PURE CATALYST — one
     ``explode(arrays_zip(...))`` inside whole-stage codegen; no Python
     worker is ever launched, and parquet column pruning keeps the varint
-    position bytes unread.  Only ``with_positions=True`` (phrase /
-    proximity) runs the Arrow varint decoder via mapInArrow.
-    ``with_block_ids`` adds each row's source ``block_id`` (provenance for
-    the two-pass phrase block prune)."""
+    position bytes unread.  It also emits each posting's doc length
+    ``len_d`` (from ``len_ds``), so BM25 scores without reading ``docs``.
+    Only ``with_positions=True`` (phrase / proximity) runs the Arrow
+    varint decoder via mapInArrow."""
     if not with_positions:
-        head = ["term_id", "block_id"] if with_block_ids else ["term_id"]
         z = F.explode(
             F.arrays_zip(
-                F.col("doc_ids"), F.col("title_tfs"), F.col("body_tfs")
+                F.col("doc_ids"), F.col("title_tfs"), F.col("body_tfs"), F.col("len_ds")
             )
         ).alias("_z")
-        return blocks.select(*head, z).select(
-            *head,
+        return blocks.select("term_id", z).select(
+            "term_id",
             F.col("_z.doc_ids").alias("doc_id"),
             F.col("_z.title_tfs").alias("title_tf"),
             F.col("_z.body_tfs").alias("body_tf"),
+            F.col("_z.len_ds").alias("len_d"),
         )
 
     import pyarrow as pa
 
     cols = ["term_id", "count", "doc_ids", "title_tfs", "body_tfs",
             "title_pos_lens", "title_pos", "body_pos_lens", "body_pos"]
-    schema_parts = ["term_id long"]
-    if with_block_ids:
-        cols.insert(1, "block_id")
-        schema_parts.append("block_id int")
-    schema_parts += ["doc_id long", "title_tf int", "body_tf int",
-                     "title_pos array<int>", "body_pos array<int>"]
-    schema = ", ".join(schema_parts)
+    schema = ("term_id long, doc_id long, title_tf int, body_tf int, "
+              "title_pos array<int>, body_pos array<int>")
 
     def gen(it):
         for batch in it:
             if batch.num_rows:
-                out = decode_blocks_arrow(
-                    pa.Table.from_batches([batch]), True, with_block_ids
-                )
+                out = decode_blocks_arrow(pa.Table.from_batches([batch]), True)
                 yield from out.to_batches()
 
     return blocks.select(*cols).mapInArrow(gen, schema)

@@ -110,7 +110,7 @@ def phrase_doc_ids(
 
     Two-pass position decode (SURVEY §7 M3: "positions decoded only for
     survivors"; VERDICT r2 item 3).  Pass 1 decodes DOC IDS ONLY per
-    phrase term (the position byte columns are never read — column
+    phrase term (only the ``doc_ids`` stream is read — column
     pruning reaches the parquet scan) and intersects the per-term doc
     sets.  Pass 2 re-decodes WITH positions only the blocks that contain a
     surviving doc — block provenance rides the pass-1 rows
@@ -136,7 +136,7 @@ def phrase_doc_ids(
     # a 1-term "phrase" is just term presence: doc ids only, positions
     # never decoded at all
     if len(phrase_terms) == 1:
-        return B.decode_blocks(_term_blocks(blocks, by_term[uniq[0]])).select("doc_id")
+        return B.decode_doc_ids(_term_blocks(blocks, by_term[uniq[0]])).select("doc_id")
 
     if len(uniq) == 1 or not _want_two_pass(uniq, by_term):
         pos_by_term = {t: _term_positions(blocks, by_term[t]) for t in uniq}
@@ -174,7 +174,7 @@ def _pruned_positions_by_term(
     col_of = {t: f"_blk_{i}" for i, t in enumerate(uniq)}
     ids = None
     for t in sorted(uniq, key=lambda t: int(by_term[t]["df"])):
-        d = B.decode_blocks(
+        d = B.decode_doc_ids(
             _term_blocks(blocks, by_term[t]), with_block_ids=True
         ).select("doc_id", F.col("block_id").alias(col_of[t]))
         ids = d if ids is None else ids.join(d, "doc_id")

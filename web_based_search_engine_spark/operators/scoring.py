@@ -16,10 +16,12 @@ rank-identity ground truth for it.
 
 Both scorers are pure Catalyst expressions over posting rows
 (``score_postings``): term-at-a-time scatter (#25) == partition-pruned
-posting scan, accumulate (#26) == groupBy(doc_id).sum (Tungsten hash agg),
-normalize (#27) == join with precomputed per-doc stats (the reference
-recomputed ||d|| per query per candidate — an anti-pattern SURVEY §4.1 says
-not to reproduce).  Its one caller, ``wand.wand_top_k``, feeds it the
+posting scan, accumulate (#26) == groupBy(doc_id).sum (Tungsten hash agg).
+For the reference scorer, normalize (#27) == join with precomputed per-doc
+stats (the reference recomputed ||d|| per query per candidate — an
+anti-pattern SURVEY §4.1 says not to reproduce).  BM25 joins nothing: its
+per-doc input ``len_d`` rides on every decoded posting (blocks.py stores
+it next to the tfs).  Its one caller, ``wand.wand_top_k``, feeds it the
 query terms' postings decoded from the compressed block index —
 exhaustively for the reference scorer, optionally WAND-pruned for BM25.
 """
@@ -100,7 +102,9 @@ def score_postings(
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, score) for posting rows (doc_id, term_id, title_tf,
-    body_tf) already narrowed to the query terms, under either scorer.
+    body_tf, len_d) already narrowed to the query terms, under either
+    scorer.  ``docs`` is read only by the reference scorer (``tf_max``,
+    ``doc_norm``); BM25 takes ``len_d`` from the posting rows.
 
     ``df_col``: the df of each row's term (see ``df_of_term``).
     ``candidates``: a doc-id set (phrase / proximity filter) semi-joined
@@ -124,11 +128,7 @@ def score_postings(
             .select("doc_id", (F.col("_raw") / F.col("doc_norm")).alias("score"))
         )
     return (
-        cand.join(
-            docs.select("doc_id", (F.col("title_len") + F.col("body_len")).alias("len_d")),
-            "doc_id",
-        )
-        .withColumn("_partial", bm25_term_score(n_docs, avg_doc_len, cfg))
+        cand.withColumn("_partial", bm25_term_score(n_docs, avg_doc_len, cfg))
         .groupBy("doc_id")
         .agg(F.sum("_partial").alias("score"))
     )

@@ -28,8 +28,9 @@ onto a shared-nothing scan):
    over the bucket-pruned block *metadata* (binary columns never read) and
    memoized per term in the engine's ``bounds_cache``.
 3. decode surviving blocks (pure-JVM ``explode(arrays_zip(...))`` — the
-   scoring streams are plain list columns, see blocks.py docstring) ->
-   per-posting BM25 -> groupBy(doc_id).sum -> deterministic top-k.
+   scoring streams, doc lengths included, are plain list columns, see
+   blocks.py docstring) -> per-posting BM25 -> groupBy(doc_id).sum ->
+   deterministic top-k.  BM25 reads no other table.
 
 A pruned query persists only the candidate blocks' metadata projection (a
 few scalars per block) and reaches the payloads through pushable scan
@@ -147,9 +148,11 @@ def wand_top_k(
     candidate_count: int | None = None,
 ) -> DataFrame:
     """Top-k (doc_id, score) for a disjunctive query over the block index,
-    under either scorer.  ``prune=False`` gives the exhaustive scorer over
-    the same decode path (the equivalence oracle for tests, and the only
-    path of the reference scorer); ``prune=True`` requires bm25, and
+    under either scorer.  ``docs`` is read only by the reference scorer
+    (its ``tf_max`` and ``doc_norm``); BM25 scores from ``blocks`` alone.
+    ``prune=False`` gives the exhaustive scorer over the same decode path
+    (the equivalence oracle for tests, and the only path of the reference
+    scorer); ``prune=True`` requires bm25, and
     ``"auto"`` prunes bm25 queries past AUTO_PRUNE_POSTINGS candidate
     postings.  ``candidates`` restricts the ranking to a doc subset
     (phrase semi-join) BEFORE the top-k cut; pruning stays lossless —
@@ -221,6 +224,11 @@ def wand_top_k(
             )
     df_col = df_of_term(qt)
 
+    def score(sel: DataFrame) -> DataFrame:
+        return score_postings(
+            B.decode_blocks(sel), docs, df_col, n_docs, avg_doc_len, cfg, candidates
+        )
+
     # Small-query shortcut ("auto" only; tests force True/False): the vocab
     # lookup already gives df per term, so the candidate posting count is
     # known driver-side with no extra job.  Below AUTO_PRUNE_POSTINGS the
@@ -237,12 +245,7 @@ def wand_top_k(
                 {"pruned": False, "candidate_blocks": cand_pre_skip.count(),
                  "decoded_blocks": cand.count(), "tau": None}
             )
-        return top_k(
-            score_postings(
-                B.decode_blocks(cand), docs, df_col, n_docs, avg_doc_len, cfg, candidates
-            ),
-            k,
-        )
+        return top_k(score(cand), k)
 
     idf_by_term = {r["term_id"]: _idf(n_docs, r["df"]) for r in qt}
     ub = _block_ub_expr(idf_by_term, avg_doc_len, cfg)
@@ -284,11 +287,10 @@ def wand_top_k(
     # only the stats projection (a few scalars per block) and reach the
     # payloads through PUSHABLE scan filters — the seed via literal
     # best-block conjunctions, the final scan via a per-term max_wtf >= w*
-    # necessary condition + a doc-id-range-pruned docs join — so pruned
-    # payload row groups are never read at all.
+    # necessary condition — so pruned payload row groups are never read at
+    # all.  The scoring reads no docs table (doc lengths ride in the blocks).
     meta = cand.select(
         "bucket", "term_id", "block_id", "max_wtf", "min_len_d",
-        "first_doc_id", "last_doc_id",
     ).persist()
     if persist_registry is not None:
         persist_registry.pin(meta)
@@ -308,7 +310,7 @@ def wand_top_k(
     best = (
         meta.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .select("term_id", "block_id", "max_wtf", "first_doc_id", "last_doc_id")
+        .select("term_id", "block_id", "max_wtf")
         .collect()
     )
     if not best:
@@ -322,19 +324,7 @@ def wand_top_k(
             & (F.col("block_id") == r["block_id"])
         )
         seed_filter = clause if seed_filter is None else (seed_filter | clause)
-    # The scoring join's docs side (len_d lookup) is range-pruned with the
-    # seed blocks' stored doc-id spans — literal BETWEENs push into the
-    # docs scan, so the seed pass never scans the whole docs table (at
-    # corpus scale the per-query full docs scan, not the block decode, is
-    # what grows with N).
-    seed_docs = None
-    for r in best:
-        span = F.col("doc_id").between(int(r["first_doc_id"]), int(r["last_doc_id"]))
-        seed_docs = span if seed_docs is None else (seed_docs | span)
-    seed_scores = score_postings(
-        B.decode_blocks(cand.where(seed_filter)), docs.where(seed_docs),
-        df_col, n_docs, avg_doc_len, cfg, candidates,
-    )
+    seed_scores = score(cand.where(seed_filter))
     kth = (
         seed_scores.orderBy(F.desc("score")).limit(k).collect()
     )
@@ -381,28 +371,12 @@ def wand_top_k(
     exact = ub + other_max[F.col("term_id")] >= F.lit(tau)
     keep = cand.where(pushed) if pushed is not None else cand
     keep = keep.where(exact)
-    # Survivor doc-id span from the CACHED metadata (one tiny agg over the
-    # persisted stats projection): range-prunes the scoring join's docs
-    # side the same way the seed pass does — without it, every pruned
-    # query would still pay a full docs-table scan for len_d.
-    surv_meta = meta.where(pushed) if pushed is not None else meta
-    span = surv_meta.where(exact).agg(
-        F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi"),
-        F.count(F.lit(1)).alias("n_blocks"),
-    ).collect()[0]
-    decoded_count = int(span["n_blocks"])
-    docs_f = docs
-    if decoded_count:
-        # (n_blocks == 0 is unreachable when k seeds exist — the k-th seed's
-        # blocks always survive their own bound — but tau=0.0 underfull
-        # corpora keep everything, spans included)
-        docs_f = docs.where(F.col("doc_id").between(int(span["lo"]), int(span["hi"])))
     if stats is not None:
+        # survivor count from the CACHED metadata (the persisted stats
+        # projection), so it costs no payload read
+        surv_meta = meta.where(pushed) if pushed is not None else meta
         stats.update(
             {"pruned": True, "candidate_blocks": cand_pre_skip.count(),
-             "decoded_blocks": decoded_count, "tau": tau}
+             "decoded_blocks": surv_meta.where(exact).count(), "tau": tau}
         )
-    scored = score_postings(
-        B.decode_blocks(keep), docs_f, df_col, n_docs, avg_doc_len, cfg, candidates
-    )
-    return top_k(scored, k)
+    return top_k(score(keep), k)

@@ -31,6 +31,7 @@ from pyspark.util import inheritable_thread_target
 
 from ..config import MAX_KEYWORD_COUNT, AnalysisConfig, ScoringConfig
 from ..functions.analysis import analyze_text_py
+from ..operators import blocks as B
 from ..operators import wand as W
 from ..operators.phrase import phrase_doc_ids, proximity_windows
 from ..operators.scoring import top_k
@@ -200,7 +201,7 @@ class QueryEngine:
             # scoring AND phrase serve from the compressed block index
             # alone; the uncompressed postings table is never read
             # (VERDICT r1 missing-item 1)
-            blocks=storage.read_table(spark, "blocks"),
+            blocks=B.require_doc_lengths(storage.read_table(spark, "blocks")),
             forward=(
                 storage.read_table(spark, "forward")
                 if storage.has_table("forward") else None

@@ -264,6 +264,9 @@ def _partition_granular_upsert(
     t0 = time.time()
     # ETL path: pin AQE on (a serving QueryEngine may have pinned it off)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # refused before any partition is written: re-encoding only the touched
+    # buckets of an index without len_ds would leave a mixed-schema table
+    B.require_doc_lengths(storage.read_table(spark, "blocks"))
     docs_old = storage.read_table(spark, "docs")
     vocab_old = storage.read_table(spark, "vocab")
 

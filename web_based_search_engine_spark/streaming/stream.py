@@ -88,6 +88,45 @@ def stream_corpus_ingest(
     return writer.start()
 
 
+def drain(query) -> None:
+    """Wait until the query has processed everything its sources held when
+    it started, then stop it; re-raises the stream's failure, if any.
+
+    The way to finish a bounded run of a query built on
+    ``streaming_exact_dedup`` or ``streaming_lsh_novelty`` with
+    ``ttl_minutes`` set: a processing-time timeout keeps planning no-data
+    micro-batches to evict aged state, so such a query never terminates on
+    its own, not even under ``trigger(availableNow=True)``, and
+    ``awaitTermination`` would wait forever.  ``processAllAvailable`` waits
+    forever too (Spark 4.1): it returns only after a trigger that plans NO
+    batch, and a timeout query plans a batch on every trigger.
+
+    The drain stops after two consecutive batches that read no input.  One
+    is not enough: a query restarted on a checkpoint first re-runs the
+    batch its predecessor was stopped in, which may be a no-data batch
+    while new files wait; the batch after it plans from the offsets fixed
+    at start.  A query that terminates by itself (a TTL-free
+    ``availableNow`` one) just ends the wait.  A query that has not
+    drained within 120 s (a stalled stream) is stopped and the drain
+    raises ``TimeoutError``."""
+    import time
+
+    deadline = time.monotonic() + 120
+    while query.isActive:
+        last = {}
+        for p in query.recentProgress:
+            last[p["batchId"]] = p["numInputRows"]
+        ids = sorted(last)
+        if len(ids) >= 2 and ids[-1] == ids[-2] + 1 and last[ids[-1]] == last[ids[-2]] == 0:
+            break
+        if time.monotonic() > deadline:
+            query.stop()
+            raise TimeoutError(f"stream {query.id} did not drain within 120 s")
+        time.sleep(0.1)
+    query.stop()
+    query.awaitTermination()
+
+
 def streaming_exact_dedup(
     stream_df,
     text_col: str = "content",
@@ -110,7 +149,9 @@ def streaming_exact_dedup(
     memory story; ``ttl_minutes`` bounds it with a processing-time
     timeout (an expired fingerprint re-admits its next arrival, the
     standard TTL trade-off; None keeps state forever like
-    ``dropDuplicates`` without watermark).
+    ``dropDuplicates`` without watermark).  With ``ttl_minutes`` set the
+    query never terminates by itself, even under ``availableNow``: callers
+    finish a bounded run with ``drain(query)``.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -195,7 +236,10 @@ def streaming_lsh_novelty(
     streaming_exact_dedup — an expired bucket forgets its leader, so the
     next arrival leads again (the standard TTL re-admit trade-off; at
     ingest scale the TTL is the novelty horizon: "near-dup of anything
-    seen in the last H hours").  None keeps state forever.  The
+    seen in the last H hours").  None keeps state forever.  With
+    ``ttl_minutes`` set the query never terminates by itself, even under
+    ``availableNow``: callers finish a bounded run with ``drain(query)``.
+    The
     signature/banding math is the SAME pure-Catalyst md5 family as batch
     MinHash, so stream and batch candidates cannot drift.
     """
