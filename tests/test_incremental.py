@@ -253,14 +253,24 @@ def test_incremental_update_end_to_end(spark, tmp_path):
 
 def test_upsert_partial_index_preserves_stored_docs(spark, tmp_path):
     """Crash-shaped storage (docs/corpus_tok committed, blocks missing):
-    an upsert must rebuild from stored ∪ delta, NOT from the delta alone
-    (regression: the fallback once rebuilt a 1-doc index)."""
+    an upsert must keep every stored doc, NOT index the delta alone
+    (regression: the fallback once rebuilt a 1-doc index), and must keep
+    every stored doc_id and term_id — including when a fresh key sorts
+    before the stored ones (regression: rebuilding from merged tokens
+    renumbered them)."""
     rows = [
         ("r/a", "f1.py", "c1", "py", "alpha beta stored"),
         ("r/a", "f2.py", "c1", "py", "gamma delta stored"),
     ]
     storage = ParquetIndexStorage(tmp_path / "idx")
     IndexBuilder(spark, storage, CFG).build(_mini_corpus(spark, rows))
+    doc_ids_v1 = {
+        (r["repo"], r["path"]): r["doc_id"]
+        for r in storage.read_table(spark, "docs").collect()
+    }
+    term_ids_v1 = {
+        r["term"]: r["term_id"] for r in storage.read_table(spark, "vocab").collect()
+    }
     # simulate the crash: blocks never committed
     m = storage.manifest()
     m["tables"].pop("blocks")
@@ -270,15 +280,68 @@ def test_upsert_partial_index_preserves_stored_docs(spark, tmp_path):
 
     incremental_update(
         spark, storage,
-        _mini_corpus(spark, [("r/a", "f3.py", "c1", "py", "epsilon fresh")]),
+        _mini_corpus(spark, [
+            ("r/a", "f3.py", "c1", "py", "epsilon fresh"),
+            ("r/a", "f0.py", "c1", "py", "zeta fresh"),  # sorts before f1/f2
+        ]),
         CFG,
     )
     docs = storage.read_table(spark, "docs")
-    assert docs.count() == 3
+    assert docs.count() == 4
     qe = QueryEngine(spark, storage)
     assert qe.search("alpha", assemble=False).count() == 1   # stored doc kept
     assert qe.search("epsilon", assemble=False).count() == 1  # delta applied
-    assert storage.has_table("blocks")  # full rebuild restored the table
+    assert qe.search("zeta", assemble=False).count() == 1
+    assert storage.has_table("blocks")  # the resumed build restored the table
+    doc_ids_v2 = {(r["repo"], r["path"]): r["doc_id"] for r in docs.collect()}
+    for key, did in doc_ids_v1.items():
+        assert doc_ids_v2[key] == did, key
+    term_ids_v2 = {
+        r["term"]: r["term_id"] for r in storage.read_table(spark, "vocab").collect()
+    }
+    for term, tid in term_ids_v1.items():
+        assert term_ids_v2[term] == tid, term
+
+
+def test_upsert_resume_before_stats_keeps_stored_layout(spark, tmp_path):
+    """A build that crashed before ``stats`` has recorded no bucket layout:
+    an upsert under another layout is refused before any table moves, and
+    one under the build's own layout resumes it with every doc id kept."""
+    import pytest
+
+    rows = [
+        ("r/a", "f1.py", "c1", "py", "alpha beta stored"),
+        ("r/a", "f2.py", "c1", "py", "gamma delta stored"),
+    ]
+    storage = ParquetIndexStorage(tmp_path / "idx")
+    IndexBuilder(spark, storage, CFG).build(_mini_corpus(spark, rows))
+    ids_v1 = {
+        (r["repo"], r["path"]): r["doc_id"]
+        for r in storage.read_table(spark, "docs").collect()
+    }
+    m = storage.manifest()
+    m["tables"].pop("stats")
+    m["stages"].pop("stats", None)
+    storage._commit_manifest(m)
+
+    def versions():
+        return {t: e["version"] for t, e in storage.manifest()["tables"].items()}
+
+    before = versions()
+    batch = _mini_corpus(spark, [("r/a", "f3.py", "c1", "py", "epsilon fresh")])
+    with pytest.raises(ValueError, match="bucket layout"):
+        incremental_update(spark, storage, batch, IndexConfig())  # 8 buckets
+    assert versions() == before
+
+    incremental_update(spark, storage, batch, CFG)
+    qe = QueryEngine(spark, storage)
+    assert qe.search("alpha", assemble=False).count() == 1
+    assert qe.search("epsilon", assemble=False).count() == 1
+    ids_v2 = {
+        (r["repo"], r["path"]): r["doc_id"]
+        for r in storage.read_table(spark, "docs").collect()
+    }
+    assert {k: ids_v2[k] for k in ids_v1} == ids_v1
 
 
 def test_upsert_duplicate_key_batch_newest_wins(spark, tmp_path):

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..config import AnalysisConfig, ScoringConfig
 from ..functions.analysis import analyze
+from .scoring import bm25_term_score
 
 
 def tokens_view(
@@ -78,7 +79,7 @@ def bm25_adhoc_topk(
 ) -> DataFrame:
     """Index-free BM25 top-k with the engine's 0.9/0.1 field weighting.
 
-    Same formula as operators/scoring.bm25_term_score; df counts docs with
+    Scores with operators/scoring.bm25_term_score; df counts docs with
     the term in title OR body; len_d = title_len + body_len; deterministic
     (score desc, id asc) tiebreak on the *rounded* score so ties are stable
     across summation orders (scores also returned rounded to 6 dp for
@@ -116,12 +117,9 @@ def bm25_adhoc_topk(
     )
 
     df_per_term = per_term.groupBy("term").agg(F.count("*").alias("df"))
-    wtf = cfg.title_weight * F.col("title_tf") + (1 - cfg.title_weight) * F.col("body_tf")
-    idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    denom = wtf + cfg.k1 * (1.0 - cfg.b + cfg.b * F.col("len_d") / F.lit(avgdl))
     scored = (
         per_term.join(F.broadcast(df_per_term), "term")
-        .withColumn("_partial", idf * (cfg.k1 + 1.0) * wtf / denom)
+        .withColumn("_partial", bm25_term_score(n_docs, avgdl, cfg))
         .groupBy("doc_id")
         .agg(F.round(F.sum("_partial"), 6).alias("score"))
     )

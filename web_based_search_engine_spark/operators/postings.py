@@ -144,6 +144,12 @@ def doc_bucket_col(num_doc_buckets: int):
     return F.pmod(F.col("doc_id"), F.lit(num_doc_buckets)).cast("int")
 
 
+def term_bucket_col(num_term_buckets: int):
+    """Storage partition of the term-keyed tables: a hash of the term
+    STRING, so the driver computes it too (functions/xxhash.term_bucket)."""
+    return F.pmod(F.xxhash64("term"), F.lit(num_term_buckets)).cast("int")
+
+
 def positional_postings(corpus_tok: DataFrame) -> DataFrame:
     """Field-tagged explode + ONE positional group-by.
 
@@ -195,31 +201,40 @@ def positional_postings(corpus_tok: DataFrame) -> DataFrame:
     )
 
 
-def build_vocab(merged: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """Dictionary encoding + df/cf/max_tf term statistics.
+def term_stats(postings: DataFrame, keys: list[str], salt_buckets: int) -> DataFrame:
+    """df/cf/max_tf per term, the term identified by ``keys`` (``["term"]``
+    in the build, ``["term_id", "bucket"]`` in the upsert).
 
     df = docs containing the term in title OR body (PostingIndex.java:177-182).
     Explicit two-phase salting bounds any single reducer's rows for hot terms
-    to ~df/S (north_rule).  The storage ``bucket`` hashes the term STRING
-    (not the term id): the driver can then compute a query term's bucket
-    locally (functions/xxhash.py is bit-identical to F.xxhash64), so both
-    the vocab dictionary lookup AND the postings/blocks scans partition-
-    prune with no prior lookup job.
-    """
-    salted = merged.groupBy(
-        "term", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets)).alias("_salt")
+    to ~df/S (north_rule); count, sum and max recombine exactly."""
+    tf = F.col("title_tf") + F.col("body_tf")
+    salted = postings.groupBy(
+        *keys, F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)).alias("_salt")
     ).agg(
         F.count("*").alias("_df_part"),
-        F.sum(F.col("title_tf") + F.col("body_tf")).alias("_cf_part"),
-        F.max(F.col("title_tf") + F.col("body_tf")).alias("_max_tf_part"),
+        F.sum(tf).alias("_cf_part"),
+        F.max(tf).alias("_max_tf_part"),
     )
-    term_stats = salted.groupBy("term").agg(
+    return salted.groupBy(*keys).agg(
         F.sum("_df_part").cast("long").alias("df"),
         F.sum("_cf_part").cast("long").alias("cf"),
         F.max("_max_tf_part").cast("int").alias("max_tf"),
     )
+
+
+def build_vocab(merged: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """Dictionary encoding + salted df/cf/max_tf term statistics.
+
+    The storage ``bucket`` hashes the term STRING (not the term id): the
+    driver can then compute a query term's bucket locally
+    (functions/xxhash.py is bit-identical to F.xxhash64), so both the vocab
+    dictionary lookup AND the postings/blocks scans partition-prune with no
+    prior lookup job.
+    """
     vocab = assign_dense_ids(
-        term_stats, ["term"], "term_id", num_buckets=cfg.num_term_buckets * 4
+        term_stats(merged, ["term"], cfg.salt_buckets), ["term"], "term_id",
+        num_buckets=cfg.num_term_buckets * 4,
     )
     return vocab.select(
         "term_id",
@@ -227,7 +242,7 @@ def build_vocab(merged: DataFrame, cfg: IndexConfig) -> DataFrame:
         "df",
         "cf",
         "max_tf",
-        F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets)).cast("int").alias("bucket"),
+        term_bucket_col(cfg.num_term_buckets).alias("bucket"),
     )
 
 
@@ -239,8 +254,8 @@ def encode_postings(merged: DataFrame, vocab: DataFrame, cfg: IndexConfig) -> Da
 
 
 def build_docs(
-    corpus_tok: DataFrame, postings: DataFrame, vocab: DataFrame, n_docs: int,
-    with_norms: bool = True,
+    corpus_tok: DataFrame, postings: DataFrame, vocab: DataFrame | None = None,
+    n_docs: int = 0, with_norms: bool = True,
 ) -> DataFrame:
     """Doc table with tf_max (InvertedIndex.java:38-54) and the reference
     cosine norm ||d|| = sqrt(Σ_t ((titleTF+bodyTF)·idf_t / tfMax_d)²) —
@@ -250,10 +265,10 @@ def build_docs(
     anti-pattern).
 
     ``with_norms=False`` (IndexConfig.reference_norms) omits the doc_norm
-    column and its postings⋈vocab pass entirely — BM25 needs only
-    len_d = title_len + body_len; the docs table then has no
-    global-statistics column, which is what lets the incremental upsert
-    keep the docs stage delta-sized."""
+    column and its postings⋈vocab pass entirely (``vocab`` and ``n_docs``
+    are then unused) — BM25 needs only len_d = title_len + body_len; the
+    docs table then has no global-statistics column, which is what lets
+    the incremental upsert build only the fresh docs' rows."""
     if not with_norms:
         tf_max = postings.groupBy("doc_id").agg(
             F.max(F.col("title_tf") + F.col("body_tf")).cast("int").alias("tf_max")
@@ -336,6 +351,14 @@ def validate_docs_norms(docs: DataFrame) -> None:
             "repeated-token blob); filter such documents out or build with "
             "IndexConfig(reference_norms=False)"
         )
+
+
+def doc_lengths(corpus_tok: DataFrame) -> DataFrame:
+    """(doc_id, len_d = title_len + body_len): the BM25 length that
+    ``blocks`` stores per posting."""
+    return corpus_tok.select(
+        "doc_id", (F.col("title_len") + F.col("body_len")).alias("len_d")
+    )
 
 
 def build_stats(docs: DataFrame, cfg: IndexConfig | None = None) -> DataFrame:

@@ -15,8 +15,9 @@ completed stage — north_rule checkpoint/lineage requirement, FIXTURES.md F6):
                   block-max skip bounds (max_wtf, min_len_d)
 
 Incremental upsert (freshness semantics of Indexer.isFreshDocument,
-Appendix C-W8) lives in streaming/incremental.py and re-enters this builder
-with only changed docs' partitions invalidated.
+Appendix C-W8) lives in streaming/incremental.py: it computes each table's
+changed partitions with this builder's stage functions, and finishes a
+crashed build by resuming it here before it upserts.
 """
 
 from __future__ import annotations
@@ -43,6 +44,21 @@ STAGES = [
     "links",
     "blocks",
 ]
+
+
+def record_links_fanout(
+    spark: SparkSession, storage: ParquetIndexStorage, cfg: IndexConfig
+) -> None:
+    """The links cap's contract: truncation is SURFACED, never silent — with
+    ``links_max_targets_per_module`` set, the fan-out accounting over the
+    stored corpus_tok rides the manifest's metrics next to the links stage
+    it describes."""
+    cap = cfg.links_max_targets_per_module
+    if cap is None:
+        return
+    corpus_tok = storage.read_table(spark, "corpus_tok")
+    fan = L.module_fanout_stats(corpus_tok, cap).collect()[0].asDict()
+    storage.add_metric({"stage": "links_fanout_cap", "cap": cap, **fan})
 
 
 @dataclass
@@ -77,9 +93,8 @@ class IndexBuilder:
         )
 
     def build_from_prepared(self, prepared: DataFrame, resume: bool = True) -> BuildReport:
-        """Build from an already-tokenized corpus (incremental merge path:
-        unchanged docs keep their stored token arrays, only fresh docs were
-        re-analyzed)."""
+        """Build from an already-tokenized corpus (``prepare_corpus`` output,
+        or hand-built token arrays)."""
         return self._run_stages(
             lambda: P.with_doc_ids(prepared, self.cfg), resume=resume
         )
@@ -150,14 +165,6 @@ class IndexBuilder:
             )
             n_docs = self.storage.table_meta("corpus_tok")["rows"]
 
-            def doc_lens():
-                ct = self._read("corpus_tok")
-                from pyspark.sql import functions as F
-
-                return ct.select(
-                    "doc_id", (F.col("title_len") + F.col("body_len")).alias("len_d")
-                )
-
             # forward's groupBy(doc_id).collect_list has no map-side
             # combine, so its reduce tasks must be sized by DATA (postings
             # rows), not by the session shuffle conf: ~1M posting rows per
@@ -187,7 +194,9 @@ class IndexBuilder:
             blocks_f = ex.submit(
                 do,
                 "blocks",
-                lambda: B.encode_blocks(self._read("postings"), doc_lens(), cfg),
+                lambda: B.encode_blocks(
+                    self._read("postings"), P.doc_lengths(self._read("corpus_tok")), cfg
+                ),
                 ["bucket"],
                 B.BLOCKS_WRITE_OPTIONS,
             )
@@ -204,17 +213,8 @@ class IndexBuilder:
                 P.validate_docs_norms(self._read("docs"))
             do("stats", lambda: P.build_stats(self._read("docs"), cfg))
             links_f.result()
-            if cfg.links_max_targets_per_module is not None and "links" in run:
-                # the cap's contract: truncation is SURFACED, never silent —
-                # the fan-out accounting rides the manifest's metrics next
-                # to the stage it describes
-                cap = cfg.links_max_targets_per_module
-                fan = L.module_fanout_stats(
-                    self._read("corpus_tok"), cap
-                ).collect()[0].asDict()
-                self.storage.add_metric(
-                    {"stage": "links_fanout_cap", "cap": cap, **fan}
-                )
+            if "links" in run:
+                record_links_fanout(self.spark, st, cfg)
             forward_f.result()
             blocks_f.result()
         return BuildReport(

@@ -11,8 +11,10 @@ see tables the manifest points at, so a half-written build is invisible
 The manifest also carries the build checkpoint state: per-stage completion
 records with per-partition lineage (output files, bytes, rows) and metrics —
 the north_rule "resume from checkpoint with per-partition lineage + metrics"
-requirement.  ``IcebergStorage`` maps the same interface onto an Iceberg
-catalog (config-only; exercised when a runtime jar is present).
+requirement.  ``IcebergStorage`` maps table read/write onto an Iceberg
+catalog (config-only; exercised when a runtime jar is present).  It has no
+manifest, stage checkpoints or cross-table ``batch()``, so ``IndexBuilder``
+and ``incremental_update`` need ``ParquetIndexStorage``.
 """
 
 from __future__ import annotations
@@ -403,8 +405,13 @@ class ParquetIndexStorage:
 
 
 class IcebergStorage:
-    """The storage interface over an Iceberg catalog (``spark.sql.catalog.
-    <cat>`` configured and iceberg-spark-runtime on the classpath).
+    """Table read/write dispatch onto an Iceberg catalog (``spark.sql.
+    catalog.<cat>`` configured and iceberg-spark-runtime on the classpath).
+
+    ``IndexBuilder`` and ``incremental_update`` need
+    ``ParquetIndexStorage``: this class has no
+    ``manifest``, ``table_meta``, ``stage_done`` or ``invalidate_from``,
+    its ``write_table`` takes no ``write_options``, and ``batch()`` raises.
 
     Mapping from the parquet backend's hand-rolled mechanics to Iceberg
     primitives:
@@ -412,11 +419,11 @@ class IcebergStorage:
     - ``write_table`` -> ``df.writeTo(ns.t).partitionedBy(...).
       createOrReplace()`` (full-table snapshot swap);
     - ``write_table_partitions`` -> ``df.writeTo(ns.t).
-      overwritePartitions()`` — Iceberg's dynamic partition overwrite IS
-      the hard-link-untouched-partitions trick ``ParquetIndexStorage.
-      write_table_partitions`` emulates: only partitions present in ``df``
-      are replaced, every other partition carries into the new snapshot
-      untouched, and the swap is one atomic snapshot commit;
+      overwritePartitions()`` — Iceberg's dynamic partition overwrite is
+      what ``ParquetIndexStorage.write_table_partitions`` emulates with
+      hard links: only partitions present in ``df`` are replaced, every
+      other partition carries into the new snapshot untouched, and the
+      swap is one atomic snapshot commit;
     - per-table versioning/lineage/time-travel come from Iceberg snapshots
       (the parquet backend's ``version``/``path`` manifest fields);
     - CROSS-table atomicity (``storage.batch()``) has no Iceberg-on-Spark
@@ -461,9 +468,9 @@ class IcebergStorage:
     ):
         """Dynamic partition overwrite: replaces exactly the partitions
         ``df`` contains (the caller's ``partitions`` list is advisory here
-        — Iceberg derives the replaced set from the data, which by the
-        upsert's construction equals it); untouched partitions flow into
-        the new snapshot without a rewrite."""
+        — Iceberg derives the replaced set from the data, so a caller must
+        pass ``df`` holding rows of exactly those partitions); untouched
+        partitions flow into the new snapshot without a rewrite."""
         df.writeTo(self._full(name)).overwritePartitions()
         return self._full(name)
 

@@ -9,7 +9,11 @@ this module is batch MERGE semantics, not Structured Streaming.
 ``plan_freshness`` computes the fresh/stale split with an anti-join +
 timestamp comparison (SURVEY #15).  ``incremental_update`` applies it with
 the reference's remove-then-insert semantics (PostingIndex.removeDocument
-then addDocument, PostingIndex.java:40-43,93-115) at PARTITION granularity:
+then addDocument, PostingIndex.java:40-43,93-115) at PARTITION granularity.
+Like the reference, whose re-index calls the same addDocument its crawl
+uses, every table's new partitions come from the builder's own stage
+functions (operators/postings.py, operators/blocks.py, operators/links.py),
+so each index structure has one definition:
 
 - ids are STABLE: an existing (repo, path) keeps its doc_id, an existing
   term keeps its term_id; new keys append above the stored maximum
@@ -25,7 +29,10 @@ then addDocument, PostingIndex.java:40-43,93-115) at PARTITION granularity:
   (max_wtf, min_len_d) are stats-free (operators/blocks.py), so global
   df/N/avgdl drift cannot invalidate untouched buckets.
 - every table swap commits in ONE atomic manifest write (storage.batch());
-  a crash mid-upsert leaves the previous snapshot fully consistent.
+  a crash mid-upsert leaves the previous snapshot fully consistent.  A
+  crashed BUILD (corpus_tok committed, later tables missing) is finished by
+  the builder's own checkpoint resume before the upsert, so it too keeps
+  every stored doc and term id.
 
 Cost model (documented honestly): work is proportional to the size of the
 touched term buckets + changed dbuckets — the standard segment-rewrite
@@ -57,8 +64,7 @@ from ..operators import blocks as B
 from ..operators import links as L
 from ..operators import postings as P
 from ..operators.ids import assign_dense_ids, assign_stable_ids
-from ..operators.postings import DOC_KEY, doc_bucket_col
-from ..plans.build import STAGES, BuildReport, IndexBuilder
+from ..plans.build import STAGES, BuildReport, IndexBuilder, record_links_fanout
 from ..sources.catalog import ParquetIndexStorage
 
 # tables the partition-granular path maintains; all must exist to take it
@@ -171,16 +177,24 @@ def incremental_update(
 ) -> BuildReport:
     """Upsert ``new_corpus`` into the stored index with freshness gating.
 
-    Nothing fresh -> true no-op (no stage touched, W8 skip).  A complete
-    stored index takes the partition-granular path; an incomplete one
-    (first build / partial checkpoint) falls back to the full builder.
+    A crashed build (corpus_tok committed, a later table missing) is first
+    finished by ``IndexBuilder.build(resume=True)``: it skips every
+    committed stage, so no stored doc or term id moves (a bucket layout its
+    tables do not use is refused).  Then nothing fresh
+    -> true no-op (no stage touched, W8 skip); otherwise a complete stored
+    index takes the partition-granular path, and an index with no
+    corpus_tok (first build) gets the full builder.
 
     ``full_snapshot=True`` additionally DELETES every stored doc whose
     (repo, path) is absent from ``new_corpus`` (plan_freshness tombstones)
     — purged inside the same partition-granular transaction as the upsert:
     only the term buckets and dbuckets the deleted docs touch are
     rewritten, everything else hard-links into the new snapshot."""
-    cfg = cfg or IndexConfig()
+    cfg = _stored_layout(spark, storage, cfg or IndexConfig())
+    if storage.stage_done("corpus_tok") and not _complete(storage):
+        if not storage.has_table("stats"):
+            _require_layout(spark, storage, cfg)
+        IndexBuilder(spark, storage, cfg).build(new_corpus, resume=True)
     stored = (
         storage.read_table(spark, "docs") if storage.has_table("docs") else None
     )
@@ -201,36 +215,34 @@ def incremental_update(
             n_docs=int(storage.table_meta("docs")["rows"]) if stored is not None else 0,
         )
 
-    cfg = _stored_layout(spark, storage, cfg)
-
-    if stored is None or not all(storage.has_table(t) for t in _FULL_TABLES):
-        if stored is not None and storage.has_table("corpus_tok"):
-            # Partial index (e.g. crash after docs/corpus_tok committed but
-            # before forward/blocks): rebuilding from plan.fresh ALONE would
-            # silently drop every unchanged stored doc — merge the stored
-            # token arrays with the fresh delta and rebuild downstream.
-            old_tok = storage.read_table(spark, "corpus_tok")
-            fresh_prep = P.prepare_corpus(plan.fresh, cfg.analysis)
-            # common columns (module/doc_id/dbucket are re-derived by
-            # with_doc_ids inside build_from_prepared)
-            tok_cols = [
-                c for c in old_tok.columns
-                if c in set(fresh_prep.columns) and c not in ("doc_id", "dbucket")
-            ]
-            gone_keys = plan.fresh.select(*UPSERT_KEY)
-            if plan.n_deleted:
-                gone_keys = gone_keys.unionByName(plan.deleted)
-            keep_old = old_tok.join(gone_keys, UPSERT_KEY, "left_anti").select(
-                *tok_cols
-            )
-            fresh_tok = fresh_prep.select(*tok_cols)
-            storage.invalidate_from(list(STAGES))
-            return IndexBuilder(spark, storage, cfg).build_from_prepared(
-                keep_old.unionByName(fresh_tok), resume=False
-            )
+    if not _complete(storage):
         return IndexBuilder(spark, storage, cfg).build(plan.fresh, resume=False)
-
     return _partition_granular_upsert(spark, storage, plan, cfg)
+
+
+def _complete(storage: ParquetIndexStorage) -> bool:
+    return all(storage.has_table(t) for t in _FULL_TABLES)
+
+
+def _require_layout(
+    spark: SparkSession, storage: ParquetIndexStorage, cfg: IndexConfig
+) -> None:
+    """A build records its bucket layout only in ``stats``: before resuming
+    a crashed build that never wrote it, refuse a ``cfg`` whose modulus its
+    committed tables do not use (bucket pruning would miss stored rows)."""
+    tok = storage.read_table(spark, "corpus_tok")
+    bad = tok.where(F.col("dbucket") != P.doc_bucket_col(cfg.num_doc_buckets))
+    if storage.has_table("vocab"):
+        vocab = storage.read_table(spark, "vocab")
+        bad = bad.select("doc_id").union(
+            vocab.where(F.col("bucket") != P.term_bucket_col(cfg.num_term_buckets))
+            .select("term_id")
+        )
+    if bad.limit(1).count():
+        raise ValueError(
+            "the crashed build's tables use another bucket layout than this "
+            "IndexConfig; resume it with the IndexConfig it was built with"
+        )
 
 
 def _stored_layout(
@@ -288,16 +300,15 @@ def _partition_granular_upsert(
     )
     fresh_tok = P.with_doc_ids(fresh_prepared, cfg, ids=ids).persist()
 
-    fresh_doc_ids = fresh_tok.select("doc_id")
     changed = {
         r["dbucket"] for r in fresh_tok.select("dbucket").distinct().collect()
     }
-    # tombstones (full_snapshot): deleted docs' rows must leave every table
-    # the same way a replaced doc's old rows do — fold their ids into the
-    # remove set and their dbuckets into the rewrite set; partitions no
-    # deleted or fresh doc touches stay hard-linked
-    gone_keys = fresh_tok.select(*UPSERT_KEY)
-    remove_ids = fresh_doc_ids
+    # a replaced doc keeps its id, so removing its old rows is removing its
+    # id.  Tombstones (full_snapshot): deleted docs' rows must leave every
+    # table the same way — fold their ids into the remove set and their
+    # dbuckets into the rewrite set; partitions no deleted or fresh doc
+    # touches stay hard-linked
+    remove_ids = fresh_tok.select("doc_id")
     if plan.n_deleted:
         del_docs = (
             docs_old.join(plan.deleted, UPSERT_KEY, "left_semi")
@@ -305,31 +316,30 @@ def _partition_granular_upsert(
             .persist()
         )
         changed |= {r["dbucket"] for r in del_docs.select("dbucket").distinct().collect()}
-        gone_keys = gone_keys.unionByName(plan.deleted)
         remove_ids = remove_ids.unionByName(del_docs.select("doc_id"))
     changed_dbuckets = sorted(changed)
 
-    with storage.batch():
-        # ---- corpus_tok: rewrite changed dbuckets ------------------------
-        tok_old = storage.read_table(spark, "corpus_tok")
-        tok_cols = tok_old.columns
-        tok_keep = (
-            tok_old.where(F.col("dbucket").isin(changed_dbuckets))
-            .join(gone_keys, UPSERT_KEY, "left_anti")
-        )
+    def rewrite(name: str, fresh: DataFrame, key: str, parts: list[int]) -> None:
+        # the stored rows of the changed partitions, minus the removed
+        # docs, plus the fresh rows; every other partition hard-links
+        old = storage.read_table(spark, name)
+        keep = old.where(F.col(key).isin(parts)).join(remove_ids, "doc_id", "left_anti")
         storage.write_table_partitions(
-            tok_keep.select(*tok_cols).unionByName(fresh_tok.select(*tok_cols)),
-            "corpus_tok", ["dbucket"], changed_dbuckets, stage="corpus_tok",
+            keep.select(*old.columns).unionByName(fresh.select(*old.columns)),
+            name, [key], parts, stage=name,
         )
+
+    with storage.batch():
+        rewrite("corpus_tok", fresh_tok, "dbucket", changed_dbuckets)
 
         # ---- touched terms: old terms of replaced docs + fresh terms -----
         fresh_raw = P.positional_postings(fresh_tok)
-
-        fwd_old = storage.read_table(spark, "forward")
-        # replaced docs keep their ids, so their old forward rows sit in the
-        # changed dbuckets — partition-pruned lookup of their old term_ids
+        # removed docs' old forward rows sit in the changed dbuckets — a
+        # partition-pruned lookup of their old term_ids (forward is not
+        # rewritten yet, so this reads the stored snapshot)
         old_tids = (
-            fwd_old.where(F.col("dbucket").isin(changed_dbuckets))
+            storage.read_table(spark, "forward")
+            .where(F.col("dbucket").isin(changed_dbuckets))
             .join(remove_ids, "doc_id", "left_semi")
             .select(F.explode("term_tfs").alias("e"))
             .select(F.col("e.term_id").alias("term_id"))
@@ -345,15 +355,9 @@ def _partition_granular_upsert(
         new_term_ids = assign_dense_ids(
             new_terms, ["term"], "term_id", num_buckets=cfg.num_term_buckets * 4,
             base=max_term_id,
-        ).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets)).cast("int"),
-        )
+        ).withColumn("bucket", P.term_bucket_col(cfg.num_term_buckets))
         term_map = vocab_ids.unionByName(new_term_ids).persist()
-        fresh_post = fresh_raw.join(term_map, "term").select(
-            "term_id", "doc_id", "bucket", "title_tf", "body_tf",
-            "title_pos", "body_pos",
-        )
+        fresh_post = P.encode_postings(fresh_raw, term_map, cfg)
 
         touched = (
             old_tids.join(term_map.select("term_id", "bucket"), "term_id")
@@ -364,56 +368,29 @@ def _partition_granular_upsert(
         )
         touched_buckets = sorted(r["bucket"] for r in touched)
 
-        # ---- postings: remove-then-insert inside touched buckets ---------
-        post_old = storage.read_table(spark, "postings")
-        post_keep = (
-            post_old.where(F.col("bucket").isin(touched_buckets))
-            .join(remove_ids, "doc_id", "left_anti")
-        )
-        pcols = ["term_id", "doc_id", "bucket", "title_tf", "body_tf",
-                 "title_pos", "body_pos"]
-        storage.write_table_partitions(
-            post_keep.select(*pcols).unionByName(fresh_post.select(*pcols)),
-            "postings", ["bucket"], touched_buckets, stage="postings",
-        )
-
-        # ---- vocab: recompute term stats for the touched buckets ---------
+        # ---- postings, then vocab and blocks of the touched buckets ------
+        rewrite("postings", fresh_post, "bucket", touched_buckets)
         post_new = storage.read_table(spark, "postings")  # new snapshot
         tb = post_new.where(F.col("bucket").isin(touched_buckets))
-        term_stats = tb.groupBy("term_id", "bucket").agg(
-            F.count("*").cast("long").alias("df"),
-            F.sum(F.col("title_tf") + F.col("body_tf")).cast("long").alias("cf"),
-            F.max(F.col("title_tf") + F.col("body_tf")).cast("int").alias("max_tf"),
-        )
-        vocab_part = term_stats.join(term_map.select("term_id", "term"), "term_id").select(
-            "term_id", "term", "df", "cf", "max_tf", "bucket"
+        vocab_part = P.term_stats(tb, ["term_id", "bucket"], cfg.salt_buckets).join(
+            term_map.select("term_id", "term"), "term_id"
         )
         storage.write_table_partitions(
-            vocab_part, "vocab", ["bucket"], touched_buckets, stage="vocab",
+            vocab_part.select("term_id", "term", "df", "cf", "max_tf", "bucket"),
+            "vocab", ["bucket"], touched_buckets, stage="vocab",
         )
 
-        # ---- forward: rewrite changed dbuckets ---------------------------
-        fwd_keep = (
-            fwd_old.where(F.col("dbucket").isin(changed_dbuckets))
-            .join(remove_ids, "doc_id", "left_anti")
-        )
-        fwd_fresh = P.forward_frame(fresh_post, cfg.num_doc_buckets)
-        fcols = ["doc_id", "term_tfs", "dbucket"]
-        storage.write_table_partitions(
-            fwd_keep.select(*fcols).unionByName(fwd_fresh.select(*fcols)),
-            "forward", ["dbucket"], changed_dbuckets, stage="forward",
+        rewrite(
+            "forward", P.forward_frame(fresh_post, cfg.num_doc_buckets),
+            "dbucket", changed_dbuckets,
         )
 
-        # ---- blocks: re-encode ONLY touched buckets ----------------------
+        # re-encode ONLY touched buckets: the stored skip bounds are
+        # stats-free, so untouched buckets stay valid
         tok_new = storage.read_table(spark, "corpus_tok")
-        doc_lens = tok_new.select(
-            "doc_id", (F.col("title_len") + F.col("body_len")).alias("len_d")
-        )
-        blocks_part = B.encode_blocks(
-            post_new.where(F.col("bucket").isin(touched_buckets)), doc_lens, cfg
-        )
         storage.write_table_partitions(
-            blocks_part, "blocks", ["bucket"], touched_buckets, stage="blocks",
+            B.encode_blocks(tb, P.doc_lengths(tok_new), cfg),
+            "blocks", ["bucket"], touched_buckets, stage="blocks",
             write_options=B.BLOCKS_WRITE_OPTIONS,
         )
 
@@ -425,8 +402,7 @@ def _partition_granular_upsert(
         # IndexConfig.reference_norms=False) has no global-statistics
         # column in docs — unchanged docs' rows cannot change (stable ids,
         # tf_max is per-doc), so the stage is partition-granular like
-        # every other table: rewrite only the changed dbuckets, hard-link
-        # the rest.
+        # every other table: only the fresh docs' rows are built.
         if "doc_norm" in docs_old.columns:
             n_docs = int(storage.table_meta("corpus_tok")["rows"])
             docs_new = P.build_docs(
@@ -435,22 +411,9 @@ def _partition_granular_upsert(
             storage.write_table(docs_new, "docs", partition_by=["dbucket"], stage="docs")
             P.validate_docs_norms(storage.read_table(spark, "docs"))
         else:
-            fresh_tfmax = fresh_post.groupBy("doc_id").agg(
-                F.max(F.col("title_tf") + F.col("body_tf")).cast("int").alias("tf_max")
-            )
-            dcols = docs_old.columns
-            docs_keep = (
-                docs_old.where(F.col("dbucket").isin(changed_dbuckets))
-                .join(remove_ids, "doc_id", "left_anti")
-            )
-            docs_fresh = (
-                fresh_tok.drop("title_terms", "body_terms", "refs", "module")
-                .join(fresh_tfmax, "doc_id", "left")
-                .fillna({"tf_max": 0})
-            )
-            storage.write_table_partitions(
-                docs_keep.select(*dcols).unionByName(docs_fresh.select(*dcols)),
-                "docs", ["dbucket"], changed_dbuckets, stage="docs",
+            rewrite(
+                "docs", P.build_docs(fresh_tok, fresh_post, with_norms=False),
+                "dbucket", changed_dbuckets,
             )
         # stats stays a corpus-wide 1-row aggregate over NARROW columns
         # (exact N/avgdl need every doc's lengths; this is a column-pruned
@@ -464,10 +427,7 @@ def _partition_granular_upsert(
             L.links_from_corpus_tok(tok_new, cfg.links_max_targets_per_module),
             "links", stage="links",
         )
-        if cfg.links_max_targets_per_module is not None:
-            cap = cfg.links_max_targets_per_module
-            fan = L.module_fanout_stats(tok_new, cap).collect()[0].asDict()
-            storage.add_metric({"stage": "links_fanout_cap", "cap": cap, **fan})
+        record_links_fanout(spark, storage, cfg)
 
         # postings_raw is now stale: drop its checkpoint marker so a future
         # resume-build recomputes it from corpus_tok instead of consuming
