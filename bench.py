@@ -210,27 +210,32 @@ def run_suite(spark, sf_dir: str, workdir: str) -> dict:
     # pruning ENGAGES (decoded << candidate) at bench scale.  Stats come
     # from an untimed extra run (they cost two count jobs); timed reps are
     # stats-free.
-    qe_forced = QueryEngine(
-        spark, storage, ScoringConfig(scorer="bm25"), wand_prune=True,
-    )
+    # (a zero AUTO_PRUNE_POSTINGS makes "auto" prune every bm25 query)
+    from web_based_search_engine_spark.operators import wand as W
+
+    qe_forced = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"))
     wand_evidence: dict[str, dict] = {}
-    for name in ("search_zipf_head", "search_hot_term", "search_broad"):
-        q = search_queries[name]
-        qe_forced.search(q, assemble=False).collect()  # warmup
-        per_q = []
-        for _ in range(reps):
-            t0 = time.time()
-            qe_forced.search(q, assemble=False).collect()
-            per_q.append(time.time() - t0)
-        results[f"{name}[wand_forced]"] = round(min(per_q), 3)
-        st: dict = {}
-        qe_forced.search(q, assemble=False, wand_stats=st).collect()
-        wand_evidence[name] = {
-            "latency_best_sec": round(min(per_q), 3),
-            "exhaustive_best_sec": results[f"{name}[blocks]"],
-            **{k: st.get(k) for k in
-               ("pruned", "candidate_blocks", "decoded_blocks", "tau")},
-        }
+    auto_cap, W.AUTO_PRUNE_POSTINGS = W.AUTO_PRUNE_POSTINGS, 0
+    try:
+        for name in ("search_zipf_head", "search_hot_term", "search_broad"):
+            q = search_queries[name]
+            qe_forced.search(q, assemble=False).collect()  # warmup
+            per_q = []
+            for _ in range(reps):
+                t0 = time.time()
+                qe_forced.search(q, assemble=False).collect()
+                per_q.append(time.time() - t0)
+            results[f"{name}[wand_forced]"] = round(min(per_q), 3)
+            st: dict = {}
+            qe_forced.search(q, assemble=False, wand_stats=st).collect()
+            wand_evidence[name] = {
+                "latency_best_sec": round(min(per_q), 3),
+                "exhaustive_best_sec": results[f"{name}[blocks]"],
+                **{k: st.get(k) for k in
+                   ("pruned", "candidate_blocks", "decoded_blocks", "tau")},
+            }
+    finally:
+        W.AUTO_PRUNE_POSTINGS = auto_cap
 
     # training-data ops + oracle queries via the driver entry surface
     import __spark_entry__ as entry

@@ -37,6 +37,20 @@ def built_index(spark, tmp_path_factory):
     return {"storage": storage, "cfg": cfg, "report": report, "n_docs": N_SMALL}
 
 
+@pytest.fixture
+def force_prune(monkeypatch):
+    """Pin the WAND path every engine query takes for the rest of the
+    test: ``force_prune()`` makes ``prune="auto"`` prune every bm25 query
+    (an ``AUTO_PRUNE_POSTINGS`` of 0), ``force_prune(False)`` makes every
+    query decode exhaustively (a cap no query reaches)."""
+    from web_based_search_engine_spark.operators import wand as W
+
+    def force(on: bool = True) -> None:
+        monkeypatch.setattr(W, "AUTO_PRUNE_POSTINGS", 0 if on else 1 << 62)
+
+    return force
+
+
 @pytest.fixture(scope="session")
 def oracle_index():
     from web_based_search_engine_spark import fixtures

@@ -97,24 +97,22 @@ def test_encoders_byte_identical():
 
 def test_decoder_arrow_matches_pdf():
     """decode_blocks_arrow (cross-block vectorized) == decode_blocks_pdf
-    (per-block loop oracle) on fuzzed encoded blocks, with and without
-    positions."""
+    (per-block loop oracle) on fuzzed encoded blocks, positions
+    included (the Arrow decoder serves only the positional decode)."""
     import pyarrow as pa
 
     for seed in (3, 11, 42):
         pdf = _fuzz_group_pdf(seed)
         enc = B.encode_group_pdf_rowwise(pdf, block_size=8)
-        for with_pos in (False, True):
-            want = B.decode_blocks_pdf(enc, with_positions=with_pos)
-            got = B.decode_blocks_arrow(
-                pa.Table.from_pandas(enc, preserve_index=False), with_positions=with_pos
-            ).to_pandas()
-            assert len(got) == len(want) and len(got) > 0
-            for col in ("term_id", "doc_id", "title_tf", "body_tf"):
-                assert got[col].astype(int).tolist() == want[col].astype(int).tolist(), (seed, col)
-            if with_pos:
-                for col in ("title_pos", "body_pos"):
-                    assert [list(x) for x in got[col]] == [list(x) for x in want[col]], (seed, col)
+        want = B.decode_blocks_pdf(enc, with_positions=True)
+        got = B.decode_blocks_arrow(
+            pa.Table.from_pandas(enc, preserve_index=False)
+        ).to_pandas()
+        assert len(got) == len(want) and len(got) > 0
+        for col in ("term_id", "doc_id", "title_tf", "body_tf"):
+            assert got[col].astype(int).tolist() == want[col].astype(int).tolist(), (seed, col)
+        for col in ("title_pos", "body_pos"):
+            assert [list(x) for x in got[col]] == [list(x) for x in want[col]], (seed, col)
 
 
 def test_block_roundtrip_against_postings(spark, built_index):
@@ -159,23 +157,26 @@ def test_blocks_store_doc_lengths(spark, built_index):
     assert assert_block_doc_lengths(spark, built_index["storage"]) > 0
 
 
-def test_decoder_block_id_provenance():
-    """with_block_ids repeats each block's id onto exactly its own rows:
-    regrouping the decoded rows by block_id must reproduce every block's
-    count, first and last doc id."""
-    import pyarrow as pa
+def test_decoder_block_id_provenance(spark, built_index):
+    """decode_doc_ids(with_block_ids=True) — the provenance the two-pass
+    phrase block prune joins on — repeats each block's id onto exactly its
+    own rows: regrouping the decoded rows by (term_id, block_id) must
+    reproduce every stored block's count, first and last doc id."""
+    from pyspark.sql import functions as F
 
-    for seed in (3, 42):
-        enc = B.encode_group_pdf_rowwise(_fuzz_group_pdf(seed), block_size=8)
-        tbl = pa.Table.from_pandas(enc, preserve_index=False)
-        got = B.decode_blocks_arrow(tbl, with_block_ids=True).to_pandas()
-        assert "block_id" in got.columns
-        for (tid, bid), g in got.groupby(["term_id", "block_id"]):
-            row = enc[(enc["term_id"] == tid) & (enc["block_id"] == bid)].iloc[0]
-            assert len(g) == row["count"], (seed, tid, bid)
-            assert g["doc_id"].iloc[0] == row["first_doc_id"]
-            assert g["doc_id"].iloc[-1] == row["last_doc_id"]
-        # base columns unchanged by the provenance option
-        plain = B.decode_blocks_arrow(tbl).to_pandas()
-        for col in ("term_id", "doc_id", "title_tf", "body_tf"):
-            assert got[col].tolist() == plain[col].tolist(), (seed, col)
+    blocks = built_index["storage"].read_table(spark, "blocks")
+    want = {
+        (r["term_id"], r["block_id"]): (r["count"], r["first_doc_id"], r["last_doc_id"])
+        for r in blocks.select(
+            "term_id", "block_id", "count", "first_doc_id", "last_doc_id"
+        ).collect()
+    }
+    got = {
+        (r["term_id"], r["block_id"]): (r["n"], r["lo"], r["hi"])
+        for r in B.decode_doc_ids(blocks, with_block_ids=True)
+        .groupBy("term_id", "block_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("lo"),
+             F.max("doc_id").alias("hi"))
+        .collect()
+    }
+    assert len(want) > 1 and got == want

@@ -83,7 +83,7 @@ def test_proximity_windows_end_to_end(spark, tmp_path):
     assert {r["doc_id"] for r in dup.collect()} == {1, 2}
 
 
-def test_near_search_is_a_score_preserving_filter(spark, tmp_path):
+def test_near_search_is_a_score_preserving_filter(spark, tmp_path, force_prune):
     from web_based_search_engine_spark import config, fixtures
     from web_based_search_engine_spark.plans.build import IndexBuilder
     from web_based_search_engine_spark.plans.query import QueryEngine
@@ -110,7 +110,8 @@ def test_near_search_is_a_score_preserving_filter(spark, tmp_path):
     assert all(full[d] == s for d, s in wide.items())
     assert len(wide) >= 1  # fixture corpus has co-occurring terms
     # forced WAND pruning agrees exactly
-    qc = QueryEngine(spark, storage, wand_prune=True)
+    force_prune()
+    qc = QueryEngine(spark, storage)
     wide_c = {
         r["doc_id"]: round(r["score"], 9)
         for r in qc.near_search(["foo_bar", "hello-world"], 40, k=1000, assemble=False).collect()
@@ -230,6 +231,22 @@ def test_proximity_two_pass_equals_single_pass(spark, built_index, monkeypatch):
         }
         monkeypatch.undo()
         assert two == single, terms
+
+
+def test_phrase_and_near_together_raise(spark, built_index):
+    """A query filters by a phrase or by a proximity window, never both:
+    no caller composes the two, so search_terms refuses the pair before
+    running anything."""
+    import pytest
+
+    from web_based_search_engine_spark.plans.query import QueryEngine
+
+    qe = QueryEngine(spark, built_index["storage"])
+    with pytest.raises(ValueError, match="not both"):
+        qe.search_terms(["search", "engin"], ["search", "engin"], near=5)
+    with pytest.raises(ValueError, match="not both"):
+        qe.search_terms(["search", "engin"], ["search", "engin"], near=0)
+    assert not qe._phrase_cache
 
 
 def test_k_zero_with_forced_wand_prune(spark, built_index):

@@ -62,11 +62,12 @@ def assert_rank_identical(got, want, ctx, rtol=1e-9):
         i = j
 
 
-def test_rank_identity_blocks_wand(spark, built_index, oracle_index):
+def test_rank_identity_blocks_wand(spark, built_index, oracle_index, force_prune):
     """Forced block-max WAND pruning == oracle (bm25 only): the pruned
     path, which prune="auto" leaves off at this corpus size, ranks every
     reference query exactly like the oracle."""
-    qe = QueryEngine(spark, built_index["storage"], wand_prune=True)
+    force_prune()
+    qe = QueryEngine(spark, built_index["storage"])
     key_of = _doc_key_map(spark, built_index)
     for qid, query in fixtures.REFERENCE_QUERIES.items():
         got = [

@@ -7,8 +7,9 @@ import urllib.error
 import urllib.parse
 import urllib.request
 
-from web_based_search_engine_spark.plans.query import QueryEngine
-from web_based_search_engine_spark.server import SearchServer
+from web_based_search_engine_spark.config import MAX_SEARCH_RESULTS
+from web_based_search_engine_spark.plans.query import QueryEngine, parse_query
+from web_based_search_engine_spark.server import SearchServer, render_result_page
 
 
 def _get(port: int, path: str):
@@ -94,6 +95,12 @@ def test_server_html_pages(spark, built_index):
             assert r["path"] in page
         assert "<p>Parent Links:</p>" in page and "<p>Child Links:</p>" in page
         assert "Keywords: " in page
+        # the whole page is the one a plain engine.search renders
+        pq = parse_query('searching "engines retrieval"', qe.analysis)
+        assert page == render_result_page(
+            pq.keywords, pq.phrase,
+            qe.search('searching "engines retrieval"', k=MAX_SEARCH_RESULTS).collect(),
+        )
 
         # no-hit query renders the empty-state paragraph, not an error
         status, page = _get_html(

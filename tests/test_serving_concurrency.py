@@ -28,13 +28,14 @@ def _rows(df):
     return sorted((r["doc_id"], round(r["score"], 9)) for r in df.collect())
 
 
-def test_concurrent_queries_match_serial_no_midflight_unpersist(spark, built_index):
+def test_concurrent_queries_match_serial_no_midflight_unpersist(spark, built_index, force_prune):
     """Directive r4-2: >=8 concurrent phrase+term queries through ONE
     engine (forced WAND pruning so every query pins a block
     set) return exactly the serial results, and the instrumented
     PersistPool records ZERO evictions — no in-flight query's pinned
     blocks are unpersisted by another."""
-    qe = QueryEngine(spark, built_index["storage"], wand_prune=True)
+    force_prune()
+    qe = QueryEngine(spark, built_index["storage"])
     shapes = [
         'searching "engines retrieval"',
         "posting merge",
@@ -137,16 +138,9 @@ def test_search_concurrent_with_refresh(spark, tmp_path):
     assert qe.n_docs == 2 + len(upserts)
 
 
-def test_candidate_block_skipping_lossless_and_engaged(spark, tmp_path):
-    """Directive r4-4: with a selective phrase candidate set in hand, WAND
-    skips blocks whose [first_doc_id, last_doc_id] span holds no candidate
-    BEFORE decode — decoded_blocks shrinks, results bit-identical.
-
-    Corpus: every doc contains the hot term, only 4 docs contain the
-    phrase.  The containment semi-join bounds decoded blocks per term at
-    |candidates| regardless of where doc ids landed, so the shrink
-    assertion is deterministic: decoded <= 4 * n_terms << candidate
-    blocks (~200/8 per term)."""
+def _needle_index(spark, tmp_path) -> ParquetIndexStorage:
+    """200 docs that all hold the hot term ``common``; only 4 of them
+    (every 50th) hold the phrase "needle haystack"."""
     rows = []
     for i in range(200):
         needle = "needle haystack" if i % 50 == 0 else "filler"
@@ -154,6 +148,20 @@ def test_candidate_block_skipping_lossless_and_engaged(spark, tmp_path):
                      f"common token{i % 17} {needle} common"))
     storage = ParquetIndexStorage(tmp_path / "idx")
     IndexBuilder(spark, storage, _CFG).build(_mini(spark, rows))
+    return storage
+
+
+def test_candidate_block_skipping_lossless_and_engaged(spark, tmp_path, force_prune):
+    """Directive r4-4: with a selective phrase candidate set in hand, WAND
+    skips blocks whose [first_doc_id, last_doc_id] span holds no candidate
+    BEFORE decode — decoded_blocks shrinks, results bit-identical.
+
+    Corpus (``_needle_index``): every doc contains the hot term, only 4
+    docs contain the phrase.  The containment semi-join bounds decoded
+    blocks per term at |candidates| regardless of where doc ids landed,
+    so the shrink assertion is deterministic: decoded <= 4 * n_terms <<
+    candidate blocks (~200/8 per term)."""
+    storage = _needle_index(spark, tmp_path)
 
     stats: dict = {}
     qe = QueryEngine(spark, storage)
@@ -167,7 +175,8 @@ def test_candidate_block_skipping_lossless_and_engaged(spark, tmp_path):
     # lossless: identical (doc_id, score) to scoring every block of the
     # query terms and filtering to the phrase docs AFTERWARDS, with no
     # block skipping at all
-    qx = QueryEngine(spark, storage, wand_prune=False)
+    force_prune(False)
+    qx = QueryEngine(spark, storage)
     phrase_ids = {r["doc_id"] for r in qx.phrase_search(
         ["needle", "haystack"], k=1000, assemble=False).collect()}
     unfiltered = qx.search_terms(
@@ -179,7 +188,8 @@ def test_candidate_block_skipping_lossless_and_engaged(spark, tmp_path):
 
     # forced-prune path takes the same skip (stats report the pruned shape)
     stats_p: dict = {}
-    qp = QueryEngine(spark, storage, wand_prune=True)
+    force_prune()
+    qp = QueryEngine(spark, storage)
     assert got_rows == _rows(
         qp.search('common "needle haystack"', k=20, assemble=False,
                   wand_stats=stats_p)
@@ -188,7 +198,59 @@ def test_candidate_block_skipping_lossless_and_engaged(spark, tmp_path):
     assert stats_p["decoded_blocks"] < stats_p["candidate_blocks"]
 
 
-def test_wide_prune_with_candidates_seeds_from_surviving_blocks(spark, tmp_path):
+def test_candidate_range_skip_above_exact_cap(spark, tmp_path, force_prune, monkeypatch):
+    """Above CANDIDATE_EXACT_SKIP_CAP only the [first_doc_id, last_doc_id]
+    range filter skips blocks.  With the cap at 0, the 4-doc phrase set of
+    ``_needle_index`` takes that path on both the exhaustive and the
+    forced-prune decode: the rows equal the exact-skip run's and those of
+    scoring every block and filtering afterwards, and the exhaustive
+    decode reads every block whose span overlaps the set's id range — at
+    least as many as the exact skip, and every block holding a candidate."""
+    from web_based_search_engine_spark.operators import wand as W
+
+    storage = _needle_index(spark, tmp_path)
+    q = 'common "needle haystack"'
+    qe = QueryEngine(spark, storage)
+    keywords = parse_query(q).keywords
+    phrase_ids = {r["doc_id"] for r in qe.phrase_search(
+        ["needle", "haystack"], k=1000, assemble=False).collect()}
+    force_prune(False)
+    filtered = sorted(
+        (r["doc_id"], round(r["score"], 9))
+        for r in qe.search_terms(keywords, k=1000, assemble=False).collect()
+        if r["doc_id"] in phrase_ids
+    )
+    assert len(filtered) == 4
+
+    def run(cap: int) -> tuple[list, dict]:
+        monkeypatch.setattr(W, "CANDIDATE_EXACT_SKIP_CAP", cap)
+        stats: dict = {}
+        return _rows(qe.search(q, k=20, assemble=False, wand_stats=stats)), stats
+
+    exact_cap = W.CANDIDATE_EXACT_SKIP_CAP
+    assert len(phrase_ids) <= exact_cap
+    for prune in (True, False):
+        force_prune(prune)
+        exact_rows, exact = run(exact_cap)
+        range_rows, ranged = run(0)
+        assert range_rows == exact_rows == filtered, prune
+        assert exact["pruned"] is ranged["pruned"] is prune
+
+    tids = {r["term_id"] for r in qe._lookup_cached(keywords)}
+    lo, hi = min(phrase_ids), max(phrase_ids)
+    term_blocks = [
+        r for r in storage.read_table(spark, "blocks")
+        .select("term_id", "first_doc_id", "last_doc_id", "doc_ids").collect()
+        if r["term_id"] in tids
+    ]
+    overlapping = sum(r["last_doc_id"] >= lo and r["first_doc_id"] <= hi for r in term_blocks)
+    holding = sum(bool(phrase_ids & set(r["doc_ids"])) for r in term_blocks)
+    # the exhaustive decode (the last loop pass) skips no block the
+    # candidates touch
+    assert holding <= exact["decoded_blocks"] <= ranged["decoded_blocks"] == overlapping
+
+
+def test_wide_prune_with_candidates_seeds_from_surviving_blocks(spark, tmp_path, force_prune):
     """ADVICE r5 high: the pruned (metadata-only) layout picked its seed
     blocks among those holding each term's GLOBAL max_wtf, after candidate
     skipping had removed them, and returned 0 rows.  Here every query
@@ -207,10 +269,11 @@ def test_wide_prune_with_candidates_seeds_from_surviving_blocks(spark, tmp_path)
     IndexBuilder(spark, storage, _CFG).build(_mini(spark, rows))
     q = 'common "needle haystack"'
 
-    exhaustive = _rows(QueryEngine(spark, storage, wand_prune=False)
-                       .search(q, k=20, assemble=False))
+    force_prune(False)
+    exhaustive = _rows(QueryEngine(spark, storage).search(q, k=20, assemble=False))
     stats: dict = {}
-    pruned = _rows(QueryEngine(spark, storage, wand_prune=True)
+    force_prune()
+    pruned = _rows(QueryEngine(spark, storage)
                    .search(q, k=20, assemble=False, wand_stats=stats))
     assert len(exhaustive) == 4
     assert pruned == exhaustive

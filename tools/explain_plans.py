@@ -9,12 +9,18 @@ EXPLAIN.md, annotated with what to look for at 100 TB scale:
   partial->final HashAggregate (map-side combine).
 
 Run: python tools/explain_plans.py  (writes EXPLAIN.md at the repository root)
+
+The output is reproducible: run-specific tokens (expression, lambda
+variable, plan and RDD ids, RDD call sites, temp-dir paths) are replaced
+with stable placeholders, so two runs on the same code write the same
+file.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
 import sys
 import tempfile
 from pathlib import Path
@@ -25,11 +31,44 @@ sys.path.insert(0, str(REPO_ROOT))
 SF_DIR = "/root/testdata/sf0.001"
 
 
+# (pattern, placeholder) for every token that differs between two runs
+# of the same plan: ids drawn from JVM-wide counters, and the temp dirs
+# the indexes are built in
+_RUN_TOKENS = [
+    (re.compile(r"(?<=[\w)\]])#\d+L?"), "#n"),                 # expression ids
+    (re.compile(r"(?<=lambda )([a-z])_\d+"), r"\1_n"),            # lambda variables
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=n]"),
+    (re.compile(r"(\w*RDD)\[\d+\] at [^,]+"), r"\1[n]"),      # RDD ids, call sites
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/tmp\w+"), "<tmp>"),
+]
+
+
+def stable(plan: str) -> str:
+    for pattern, placeholder in _RUN_TOKENS:
+        plan = pattern.sub(placeholder, plan)
+    return plan
+
+
 def plan_of(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain(mode)
-    return buf.getvalue()
+    return stable(buf.getvalue())
+
+
+def canonical_datacard_plan(build) -> str:
+    """q40's plan with its two count-distinct columns in query order.
+
+    Spark's distinct-aggregate rewrite orders the Expand's `_fp` and
+    `_lang` groups by expression-id hashes, so the order flips from one
+    planning to the next.  Each ``build()`` mints fresh ids: re-plan until
+    `_fp` comes first."""
+    for _ in range(64):
+        plan = plan_of(build())
+        expand = re.search(r"\(\d+\) Expand\n[^\n]*\n(Arguments: [^\n]*)", plan).group(1)
+        if expand.index("_fp#") < expand.index("_lang#"):
+            return plan
+    raise RuntimeError("q40 never planned _fp before _lang")
 
 
 def trim(plan: str, max_lines: int = 120) -> str:
@@ -321,7 +360,11 @@ def main() -> None:
          "the ANN index's partition column, so pairing is per-partition "
          "work."),
     ]:
-        sections.append((f"Driver query: {name}", blurb, plan_of(qs[name](spark, SF_DIR))))
+        if name == "q40_datacard":
+            plan = canonical_datacard_plan(lambda: qs["q40_datacard"](spark, SF_DIR))
+        else:
+            plan = plan_of(qs[name](spark, SF_DIR))
+        sections.append((f"Driver query: {name}", blurb, plan))
 
     # --- pagerank: one representative ITERATION plan ------------------------
     # (the full 10-iteration frame is checkpoint-truncated per round — the

@@ -27,6 +27,7 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from web_based_search_engine_spark.config import IndexConfig, ScoringConfig  # noqa: E402
+from web_based_search_engine_spark.operators import wand as W  # noqa: E402
 from web_based_search_engine_spark.plans.build import IndexBuilder  # noqa: E402
 from web_based_search_engine_spark.plans.query import QueryEngine  # noqa: E402
 from web_based_search_engine_spark.session import get_spark  # noqa: E402
@@ -130,8 +131,11 @@ def main() -> None:
         floor.append(time.time() - t0)
     report["noop_collect_floor_sec"] = round(min(floor), 4)
 
+    auto_cap = W.AUTO_PRUNE_POSTINGS
     for prune in ("auto", True):
-        qe = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"), wand_prune=prune)
+        # a zero AUTO_PRUNE_POSTINGS makes "auto" prune every bm25 query
+        W.AUTO_PRUNE_POSTINGS = auto_cap if prune == "auto" else 0
+        qe = QueryEngine(spark, storage, ScoringConfig(scorer="bm25"))
         key = f"blocks[prune={prune}]"
         per_shape = {}
         for name, q in SHAPES.items():
@@ -153,6 +157,7 @@ def main() -> None:
             / len(SHAPES), 2
         )
         report["modes"][key] = per_shape
+    W.AUTO_PRUNE_POSTINGS = auto_cap
 
     out_path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                             "bench", "jobs_per_query_r5.json")

@@ -446,18 +446,17 @@ def _binary_concat_view(arr) -> tuple[np.ndarray, np.ndarray]:
     return data, np.diff(offsets).astype(np.int64)
 
 
-def decode_blocks_arrow(tbl, with_positions: bool = False,
-                        with_block_ids: bool = False):
-    """Arrow block rows -> flat posting rows, vectorized across ALL blocks
-    in the batch (zero per-block Python — the decoder twin of
+def decode_blocks_arrow(tbl):
+    """Arrow block rows -> flat positional posting rows, vectorized across
+    ALL blocks in the batch (zero per-block Python — the decoder twin of
     encode_group_arrow; equivalence-tested against decode_blocks_pdf).
+    It serves only the positional decode: score-only and doc-id-only
+    decodes run in Catalyst (``decode_blocks``, ``decode_doc_ids``).
 
-    Each logical stream (doc ids, tfs, position lens, positions) is
-    varint-decoded ONCE over the batch-concatenated buffer; per-block
-    structure is recovered from the known counts via segmented cumsums.
-    Position lists are emitted as zero-copy Arrow ListArrays.
-    ``with_block_ids`` repeats each block's ``block_id`` onto its posting
-    rows (the provenance column ``decode_doc_ids`` emits in Spark)."""
+    Each position stream (position lens, positions) is varint-decoded ONCE
+    over the batch-concatenated buffer; per-block structure is recovered
+    from the known counts via segmented cumsums.  Position lists are
+    emitted as zero-copy Arrow ListArrays."""
     import pyarrow as pa
 
     import pyarrow.compute as pc
@@ -468,10 +467,6 @@ def decode_blocks_arrow(tbl, with_positions: bool = False,
     out_cols["term_id"] = pa.array(
         np.repeat(tbl["term_id"].to_numpy(), counts), type=pa.int64()
     )
-    if with_block_ids:
-        out_cols["block_id"] = pa.array(
-            np.repeat(tbl["block_id"].to_numpy(), counts), type=pa.int32()
-        )
     # scoring streams are plain list columns now: decode == flatten
     docs_flat = pc.list_flatten(tbl["doc_ids"])
     assert len(docs_flat) == total, (len(docs_flat), total)
@@ -479,20 +474,19 @@ def decode_blocks_arrow(tbl, with_positions: bool = False,
     for name, col in (("title_tf", "title_tfs"), ("body_tf", "body_tfs")):
         out_cols[name] = pc.list_flatten(tbl[col]).combine_chunks().cast(pa.int32())
 
-    if with_positions:
-        for name, lens_col, pos_col in (
-            ("title_pos", "title_pos_lens", "title_pos"),
-            ("body_pos", "body_pos_lens", "body_pos"),
-        ):
-            lens_data, _ = _binary_concat_view(tbl[lens_col])
-            lens = varint_decode(lens_data).astype(np.int64)
-            assert lens.size == total
-            pos_data, _ = _binary_concat_view(tbl[pos_col])
-            flat = _segmented_delta_decode(varint_decode(pos_data), lens)
-            out_cols[name] = pa.ListArray.from_arrays(
-                pa.array(_cumsum0(lens).astype(np.int32), type=pa.int32()),
-                pa.array(flat.astype(np.int32), type=pa.int32()),
-            )
+    for name, lens_col, pos_col in (
+        ("title_pos", "title_pos_lens", "title_pos"),
+        ("body_pos", "body_pos_lens", "body_pos"),
+    ):
+        lens_data, _ = _binary_concat_view(tbl[lens_col])
+        lens = varint_decode(lens_data).astype(np.int64)
+        assert lens.size == total
+        pos_data, _ = _binary_concat_view(tbl[pos_col])
+        flat = _segmented_delta_decode(varint_decode(pos_data), lens)
+        out_cols[name] = pa.ListArray.from_arrays(
+            pa.array(_cumsum0(lens).astype(np.int32), type=pa.int32()),
+            pa.array(flat.astype(np.int32), type=pa.int32()),
+        )
     return pa.table(out_cols)
 
 
@@ -597,7 +591,7 @@ def decode_blocks(blocks: DataFrame, with_positions: bool = False) -> DataFrame:
     def gen(it):
         for batch in it:
             if batch.num_rows:
-                out = decode_blocks_arrow(pa.Table.from_batches([batch]), True)
+                out = decode_blocks_arrow(pa.Table.from_batches([batch]))
                 yield from out.to_batches()
 
     return blocks.select(*cols).mapInArrow(gen, schema)

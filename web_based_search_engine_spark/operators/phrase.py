@@ -24,7 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import blocks as B
 from .scoring import lookup_terms
+from .wand import _BROADCAST_SURVIVOR_CAP
 
 
 def _term_blocks(blocks: DataFrame, term_row: dict) -> DataFrame:
@@ -33,17 +35,6 @@ def _term_blocks(blocks: DataFrame, term_row: dict) -> DataFrame:
     return blocks.where(
         (F.col("bucket") == term_row["bucket"])
         & (F.col("term_id") == term_row["term_id"])
-    )
-
-
-def _term_positions(blocks: DataFrame, term_row: dict) -> DataFrame:
-    """One phrase term's positional postings decoded from the compressed
-    block index (bucket partition-pruned + term_id pushed to parquet; the
-    vectorized decoder reads only this term's blocks)."""
-    from . import blocks as B
-
-    return B.decode_blocks(_term_blocks(blocks, term_row), with_positions=True).select(
-        "doc_id", "title_pos", "body_pos"
     )
 
 
@@ -90,9 +81,6 @@ def _adjacency_fold(
 TWO_PASS_MIN_POSTINGS = 20_000      # below this, always single-pass
 TWO_PASS_ASYMMETRY = 16             # rarest df < total/this -> two-pass
 TWO_PASS_ABS_POSTINGS = 2_000_000   # above this, always two-pass
-# survivor sets up to this size broadcast into the pass-2 semi-joins; above
-# it (two hot terms with massive overlap) fall back to shuffle joins
-_BROADCAST_SURVIVOR_CAP = 200_000
 
 
 def phrase_doc_ids(
@@ -106,68 +94,73 @@ def phrase_doc_ids(
 
     ``phrase_terms`` are analyzed terms in phrase order (stop/stem already
     applied by the query parser, Indexer.java:260-269).  ``term_rows``:
-    pre-resolved vocab rows (QueryEngine dictionary cache).
-
-    Two-pass position decode (SURVEY §7 M3: "positions decoded only for
-    survivors"; VERDICT r2 item 3).  Pass 1 decodes DOC IDS ONLY per
-    phrase term (only the ``doc_ids`` stream is read — column
-    pruning reaches the parquet scan) and intersects the per-term doc
-    sets.  Pass 2 re-decodes WITH positions only the blocks that contain a
-    surviving doc — block provenance rides the pass-1 rows
-    (``with_block_ids``), so the block prune is a plain equi-semi-join on
-    block_id, not a range join — then runs the adjacency fold on the
-    surviving postings.  For a selective phrase over a hot term this skips
-    position decode for almost every block of the hot term's posting list,
-    which is exactly the cost that dominated the single-pass plan.  Cheap
-    phrases (small total df) keep the single-pass plan: one job beats
-    three tiny ones."""
-    empty = blocks.sparkSession.createDataFrame([], "doc_id long")
-    if not phrase_terms:
-        return empty
-    rows = term_rows if term_rows is not None else lookup_terms(vocab, phrase_terms)
-    by_term = {r["term"]: r for r in rows}
-    if any(t not in by_term for t in phrase_terms):
-        return empty
-
-    from . import blocks as B
-
-    uniq = list(dict.fromkeys(phrase_terms))
-
-    # a 1-term "phrase" is just term presence: doc ids only, positions
-    # never decoded at all
-    if len(phrase_terms) == 1:
-        return B.decode_doc_ids(_term_blocks(blocks, by_term[uniq[0]])).select("doc_id")
-
-    if len(uniq) == 1 or not _want_two_pass(uniq, by_term):
-        pos_by_term = {t: _term_positions(blocks, by_term[t]) for t in uniq}
-        return _adjacency_fold(phrase_terms, pos_by_term)
-
-    pos_by_term = _pruned_positions_by_term(blocks, uniq, by_term)
+    pre-resolved vocab rows (QueryEngine dictionary cache).  A 1-term
+    "phrase" is just term presence: doc ids only, positions never decoded
+    at all."""
+    pos_by_term = _positions_by_term(
+        blocks, vocab, phrase_terms, term_rows, with_positions=len(phrase_terms) > 1
+    )
     if pos_by_term is None:
-        return empty
+        return blocks.sparkSession.createDataFrame([], "doc_id long")
     return _adjacency_fold(phrase_terms, pos_by_term)
 
 
-def _want_two_pass(uniq: list[str], by_term: dict[str, dict]) -> bool:
+def _positions_by_term(
+    blocks: DataFrame,
+    vocab: DataFrame,
+    terms: list[str],
+    term_rows: list[dict] | None = None,
+    with_positions: bool = True,
+) -> dict[str, DataFrame] | None:
+    """The positional setup phrase and proximity share: resolve the
+    distinct ``terms`` against the vocab, then decode each term's postings
+    -> {term: DataFrame(doc_id, title_pos, body_pos)} in first-seen term
+    order (doc ids without positions when ``with_positions`` is off,
+    which only a 1-term phrase asks for).  None when the result is empty: no terms, a term
+    absent from the vocabulary (an unseen term has no postings), or no
+    doc holding every term.
+
+    Both callers need EVERY term present in a doc, so for several terms
+    the two-pass position decode applies (SURVEY §7 M3: "positions
+    decoded only for survivors"; VERDICT r2 item 3) when the vocab dfs
+    say it pays (the TWO_PASS_* crossover).  Pass 1 decodes DOC IDS ONLY per
+    term (only the ``doc_ids`` stream is read — column pruning reaches
+    the parquet scan) and intersects the per-term doc sets.  Pass 2
+    re-decodes WITH positions only the blocks that contain a surviving
+    doc — block provenance rides the pass-1 rows (``with_block_ids``), so
+    the block prune is a plain equi-semi-join on block_id, not a range
+    join.  For a selective phrase over a hot term this skips position
+    decode for almost every block of the hot term's posting list, which
+    is exactly the cost that dominated the single-pass plan.  Cheap
+    queries (small total df) keep the single-pass plan: one job beats
+    three tiny ones."""
+    uniq = list(dict.fromkeys(terms))
+    if not uniq:
+        return None
+    rows = term_rows if term_rows is not None else lookup_terms(vocab, uniq)
+    by_term = {r["term"]: r for r in rows}
+    if any(t not in by_term for t in uniq):
+        return None
     dfs = [int(by_term[t]["df"]) for t in uniq]
     total_df = sum(dfs)
-    return total_df >= TWO_PASS_MIN_POSTINGS and (
-        total_df >= TWO_PASS_ABS_POSTINGS
-        or min(dfs) * TWO_PASS_ASYMMETRY < total_df
-    )
+    if len(uniq) > 1 and total_df >= TWO_PASS_MIN_POSTINGS and (
+        total_df >= TWO_PASS_ABS_POSTINGS or min(dfs) * TWO_PASS_ASYMMETRY < total_df
+    ):
+        return _pruned_positions_by_term(blocks, uniq, by_term)
+    blk = {t: _term_blocks(blocks, by_term[t]) for t in uniq}
+    if not with_positions:
+        return {t: B.decode_doc_ids(blk[t]) for t in uniq}
+    return {t: B.decode_blocks(blk[t], with_positions=True).select("doc_id", "title_pos", "body_pos")
+            for t in uniq}
 
 
 def _pruned_positions_by_term(
     blocks: DataFrame, uniq: list[str], by_term: dict[str, dict]
 ) -> dict[str, DataFrame] | None:
-    """Two-pass survivor-pruned positional decode, shared by phrase and
-    proximity (both require EVERY query term present in a doc, so the
-    doc-set intersection is the same pass-1).  Returns None when the
-    intersection is empty (caller returns its empty frame), else
-    {term: DataFrame(doc_id, title_pos, body_pos)} where positions were
-    decoded ONLY for blocks holding a surviving doc."""
-    from . import blocks as B
-
+    """Two-pass survivor-pruned positional decode (see
+    ``_positions_by_term``).  Returns None when the pass-1 intersection
+    is empty, else {term: DataFrame(doc_id, title_pos, body_pos)} where
+    positions were decoded ONLY for blocks holding a surviving doc."""
     # ---- pass 1: doc-id-only decode + intersection (rarest term first so
     # the join chain shrinks earliest; each term's block provenance rides
     # along as its own column)
@@ -264,36 +257,19 @@ def proximity_windows(
     k-way doc_id equi-join (docs missing any term drop out) -> per-doc
     merged position scan as ONE ``aggregate`` expression — no explode, no
     extra shuffle beyond the joins."""
-    empty = blocks.sparkSession.createDataFrame([], "doc_id long, min_window long")
-    uniq = list(dict.fromkeys(terms))
-    if not uniq:
-        return empty
-    rows = term_rows if term_rows is not None else lookup_terms(vocab, uniq)
-    by_term = {r["term"]: r for r in rows}
-    if any(t not in by_term for t in uniq):
-        return empty
+    pos_by_term = _positions_by_term(blocks, vocab, terms, term_rows)
+    if pos_by_term is None:
+        return blocks.sparkSession.createDataFrame([], "doc_id long, min_window long")
 
-    # proximity has the same all-terms-present requirement as phrase, so
-    # the two-pass survivor prune applies verbatim (same df-based
-    # crossover): positions decode only for surviving blocks
-    pruned: dict[str, DataFrame] | None = None
-    if len(uniq) > 1 and _want_two_pass(uniq, by_term):
-        pruned = _pruned_positions_by_term(blocks, uniq, by_term)
-        if pruned is None:
-            return empty
-
-    def term_df(term: str, i: int) -> DataFrame:
-        d = pruned[term] if pruned is not None else _term_positions(blocks, by_term[term])
-        return d.select(
+    state = None
+    for i, d in enumerate(pos_by_term.values()):
+        d = d.select(
             "doc_id",
             F.col("title_pos").alias(f"_t{i}"),
             F.col("body_pos").alias(f"_b{i}"),
         )
-
-    state = term_df(uniq[0], 0)
-    for i, term in enumerate(uniq[1:], start=1):
-        state = state.join(term_df(term, i), "doc_id")
-    k = len(uniq)
+        state = d if state is None else state.join(d, "doc_id")
+    k = len(pos_by_term)
     title_merged = F.flatten(
         F.array(*[tag_positions(F.col(f"_t{i}"), i) for i in range(k)])
     )

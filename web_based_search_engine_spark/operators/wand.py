@@ -43,6 +43,8 @@ reference-scorer query runs the exhaustive decode (``prune=False``).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -56,6 +58,10 @@ from .scoring import df_of_term, lookup_terms, score_postings, top_k
 # nested-loop over the candidate set) costs more than the decode it saves;
 # the min/max range filter still applies unconditionally.
 CANDIDATE_EXACT_SKIP_CAP = 8192
+# doc-id sets up to this size (candidate sets here, the two-pass phrase
+# survivors in phrase.py) are broadcast into their semi-joins; above it
+# (two hot terms with massive overlap) the joins shuffle
+_BROADCAST_SURVIVOR_CAP = 200_000
 
 # prune="auto" engages pruning only past this many candidate postings
 # (sum of the query terms' df, known driver-side from the vocab lookup).
@@ -66,6 +72,40 @@ CANDIDATE_EXACT_SKIP_CAP = 8192
 # blocks of 128).  Decode cost scales with postings, not blocks, so the
 # crossover is stated in postings and holds for any block size.
 AUTO_PRUNE_POSTINGS = 16384 * 128
+
+
+@dataclass(frozen=True)
+class Candidates:
+    """A materialized candidate doc-id set (the docs a phrase or proximity
+    filter keeps) plus the driver-side facts ``wand_top_k`` skips blocks
+    with: its exact size and doc-id range."""
+    frame: DataFrame      # broadcast-hinted when small
+    n: int
+    lo: int | None        # min doc_id (None iff n == 0)
+    hi: int | None
+
+
+def materialize_candidates(ids: DataFrame) -> Candidates:
+    """Materialize the doc-id frame ``ids`` (persisted by the caller, so
+    scoring never re-runs the filter) with ONE agg job that also returns
+    its count, min and max doc id (directive r4-4/r4-5: no extra job over
+    a bare count).  With the count in hand, small sets get a broadcast
+    hint: every downstream semi-join (the decoded stream's filter, the
+    block containment skip) then ships the set to the executors instead
+    of shuffling the big side (serving runs AQE-off, so there is no
+    runtime rescue)."""
+    row = ids.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("doc_id").alias("lo"),
+        F.max("doc_id").alias("hi"),
+    ).collect()[0]
+    n = int(row["n"])
+    return Candidates(
+        frame=F.broadcast(ids) if n <= _BROADCAST_SURVIVOR_CAP else ids,
+        n=n,
+        lo=int(row["lo"]) if row["lo"] is not None else None,
+        hi=int(row["hi"]) if row["hi"] is not None else None,
+    )
 
 
 class PersistPool:
@@ -138,14 +178,12 @@ def wand_top_k(
     avg_doc_len: float,
     cfg: ScoringConfig | None = None,
     prune: bool | str = "auto",
-    candidates: DataFrame | None = None,
+    candidates: Candidates | None = None,
     term_rows: list[dict] | None = None,
     bounds_cache: dict[int, tuple[float, int]] | None = None,
     persist_registry: PersistPool | None = None,
     k: int | None = None,
     stats: dict | None = None,
-    candidate_range: tuple[int, int] | None = None,
-    candidate_count: int | None = None,
 ) -> DataFrame:
     """Top-k (doc_id, score) for a disjunctive query over the block index,
     under either scorer.  ``docs`` is read only by the reference scorer
@@ -155,10 +193,19 @@ def wand_top_k(
     scorer); ``prune=True`` requires bm25, and
     ``"auto"`` prunes bm25 queries past AUTO_PRUNE_POSTINGS candidate
     postings.  ``candidates`` restricts the ranking to a doc subset
-    (phrase semi-join) BEFORE the top-k cut; pruning stays lossless —
-    block upper bounds still dominate candidate docs' true scores and the
-    seed threshold is computed on the restricted set.  ``term_rows``: pre-resolved vocab rows (QueryEngine
-    dictionary cache) — skips the per-query vocab-scan job.
+    (phrase / proximity semi-join) BEFORE the top-k cut; pruning stays
+    lossless — block upper bounds still dominate candidate docs' true
+    scores and the seed threshold is computed on the restricted set.  An
+    empty set returns at once.  Before decode, blocks whose stored
+    [first_doc_id, last_doc_id] span is disjoint from the set's [lo, hi]
+    are dropped (a literal metadata filter, zero extra jobs); when
+    ``n <= CANDIDATE_EXACT_SKIP_CAP`` a broadcast containment semi-join
+    also drops every block whose span holds NO candidate.  Both skips are
+    lossless: a skipped block's postings would all be removed by the
+    post-decode candidate semi-join anyway (block doc ids all lie in
+    [first_doc_id, last_doc_id]).
+    ``term_rows``: pre-resolved vocab rows (QueryEngine dictionary cache)
+    — skips the per-query vocab-scan job.
     ``bounds_cache``: term_id -> (gmax_wtf, gmin_len) memo, mutated in
     place — repeated terms skip the per-term metadata agg job.
     ``persist_registry``: the ``PersistPool`` a pruned query pins its
@@ -167,14 +214,6 @@ def wand_top_k(
     ``k``: result size (defaults to cfg.top_k) — both the pruning
     threshold (k-th seed score) and the final cut honor it, so callers
     requesting k > cfg.top_k are not silently capped.
-    ``candidate_range``: (min, max) doc id of the candidate set — blocks
-    whose stored [first_doc_id, last_doc_id] span is disjoint from it are
-    dropped BEFORE decode (a literal metadata filter, zero extra jobs).
-    ``candidate_count``: |candidates|; when <= CANDIDATE_EXACT_SKIP_CAP a
-    broadcast containment semi-join additionally drops every block whose
-    id span holds NO candidate.  Both are lossless: a skipped block's
-    postings would all be removed by the post-decode candidate semi-join
-    anyway (block doc ids all lie in [first_doc_id, last_doc_id]).
     ``stats``: pass a dict to receive pruning evidence —
     {"pruned": bool, "candidate_blocks", "decoded_blocks", "tau"} (block
     counts cost up to two extra count jobs, paid only when requested;
@@ -191,9 +230,10 @@ def wand_top_k(
                           "candidate_blocks": counted.count() if counted is not None else 0})
         return blocks.sparkSession.createDataFrame([], "doc_id long, score double")
 
-    if k <= 0:
-        # short-circuit BEFORE the prune path: with k=0 the seed pass
-        # collects an empty list and `kth[-1]` below would IndexError
+    if k <= 0 or (candidates is not None and candidates.n == 0):
+        # k=0 short-circuits BEFORE the prune path (the seed pass would
+        # collect an empty list and `kth[-1]` below would IndexError); an
+        # empty candidate set matches nothing
         return empty()
     qt = term_rows if term_rows is not None else lookup_terms(vocab, terms)
     if not qt:
@@ -203,19 +243,18 @@ def wand_top_k(
     buckets = sorted({r["bucket"] for r in qt})
     cand = blocks.where(F.col("bucket").isin(buckets) & F.col("term_id").isin(term_ids))
     cand_pre_skip = cand
-    if candidates is not None and candidate_range is not None:
+    if candidates is not None:
         # candidate block skipping (directive r4-4): the stored per-block
         # [first_doc_id, last_doc_id] span bounds every doc id in the
         # block, so a block disjoint from the candidate range — or, with
         # the exact semi-join, holding no candidate id at all — decodes to
         # postings the candidate semi-join would discard wholesale
-        lo, hi = candidate_range
         cand = cand.where(
-            (F.col("last_doc_id") >= F.lit(int(lo)))
-            & (F.col("first_doc_id") <= F.lit(int(hi)))
+            (F.col("last_doc_id") >= F.lit(candidates.lo))
+            & (F.col("first_doc_id") <= F.lit(candidates.hi))
         )
-        if candidate_count is not None and candidate_count <= CANDIDATE_EXACT_SKIP_CAP:
-            probe = candidates.select(F.col("doc_id").alias("_cand_doc"))
+        if candidates.n <= CANDIDATE_EXACT_SKIP_CAP:
+            probe = candidates.frame.select(F.col("doc_id").alias("_cand_doc"))
             cand = cand.join(
                 F.broadcast(probe),
                 (F.col("_cand_doc") >= F.col("first_doc_id"))
@@ -223,10 +262,11 @@ def wand_top_k(
                 "left_semi",
             )
     df_col = df_of_term(qt)
+    cand_frame = candidates.frame if candidates is not None else None
 
     def score(sel: DataFrame) -> DataFrame:
         return score_postings(
-            B.decode_blocks(sel), docs, df_col, n_docs, avg_doc_len, cfg, candidates
+            B.decode_blocks(sel), docs, df_col, n_docs, avg_doc_len, cfg, cand_frame
         )
 
     # Small-query shortcut ("auto" only; tests force True/False): the vocab

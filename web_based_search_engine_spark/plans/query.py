@@ -50,17 +50,6 @@ class ParsedQuery:
 
 
 @dataclass
-class _CandSet:
-    """A materialized candidate doc-id set plus the driver-side facts the
-    scorer uses to skip blocks: exact count and id range (both computed in
-    the same job that materializes the persist)."""
-    frame: DataFrame      # broadcast-hinted when small
-    n: int
-    lo: int | None        # min doc_id (None iff n == 0)
-    hi: int | None
-
-
-@dataclass
 class _SnapshotState:
     """Everything derived from ONE committed manifest version — table
     handles AND the caches keyed by them — bundled so a search captures a
@@ -92,7 +81,7 @@ class _SnapshotState:
         queries never see it."""
         with self.lock:
             entries, self.phrase_cache = self.phrase_cache, {}
-        for base, _hinted, _n, _lo, _hi in entries.values():
+        for base, _cand in entries.values():
             base.unpersist(blocking=False)
         if self.persist_pool is not None:
             self.persist_pool.release_all()
@@ -131,8 +120,9 @@ class QueryEngine:
     Scoring and phrase / proximity filters all run off the compressed
     block index (operators/wand.py, operators/phrase.py), the one index
     any query reads; the uncompressed ``postings`` table is never read.
-    ``wand_prune`` applies to the bm25 scorer only: a reference-scorer
-    query always decodes exhaustively.
+    WAND pruning is ``wand_top_k``'s own "auto" choice from the query
+    terms' stored dfs; a reference-scorer query always decodes
+    exhaustively.
 
     The engine runs on a PRIVATE ``newSession()`` clone of ``spark`` (same
     SparkContext + shared cache, separate SQLConf) with AQE off and 8
@@ -147,7 +137,6 @@ class QueryEngine:
         storage: ParquetIndexStorage,
         scoring: ScoringConfig | None = None,
         analysis: AnalysisConfig | None = None,
-        wand_prune: bool | str = "auto",
     ):
         spark = spark.newSession()
         # AQE off: a point query over partition-pruned, statistics-known
@@ -165,11 +154,6 @@ class QueryEngine:
         self.storage = storage
         self.scoring = scoring or ScoringConfig()
         self.analysis = analysis or AnalysisConfig.full()
-        # WAND pruning policy for bm25 scoring: "auto" (engage past the
-        # measured posting-count crossover — see wand.py), True (always —
-        # the cluster-scale posture, exercised by bench --wand-prune and
-        # the concurrency tests), False (exhaustive decode).
-        self.wand_prune: bool | str = wand_prune
         # phrase/near doc-set LRU size (the filter half of a query result
         # cache): entries are persisted DataFrames of the docs containing
         # the whole phrase, small and k-independent — the highest-value
@@ -300,7 +284,7 @@ class QueryEngine:
         ``assemble=False`` returns the lazy ranking plan of (doc_id,
         score) rows; nothing runs until it is collected.
         ``wand_stats``: optional dict receiving pruning evidence (see
-        wand_top_k) — bench's --wand-prune artifact."""
+        wand_top_k) — bench.py's forced-pruning artifact."""
         pq = parse_query(query, self.analysis)
         return self.search_terms(pq.keywords, pq.phrase, k=k, assemble=assemble,
                                  wand_stats=wand_stats)
@@ -336,105 +320,73 @@ class QueryEngine:
         wand_stats: dict | None = None,
     ) -> DataFrame:
         k = self.scoring.top_k if k is None else k
+        if phrase and near is not None:
+            raise ValueError("a query takes a phrase or a proximity window, not both")
         # capture ONE snapshot state for the whole query: a concurrent
         # refresh() swaps the engine's pointer but cannot mix snapshots
         # inside this search or leak its cache write-backs forward
         st = self._state
         # phrase/proximity filter BEFORE the top-k cut and never change
         # scores (Indexer.java:270-276); candidates restrict WAND's ranking
-        # set.  Both filters compose (intersection) when given together.
-        cand: _CandSet | None = None
+        # set.  `near is not None`: window=0 is a real (vacuously empty)
+        # proximity constraint — no doc has min_window <= 0 — not "no filter"
+        cand: W.Candidates | None = None
         if phrase:
-            cand = self._phrase_candidates(st, phrase)
-        # `is not None`: window=0 is a real (vacuously empty) proximity
-        # constraint — no doc has min_window <= 0 — not "no filter"
-        if near is not None:
-            prox = self._near_candidates(st, terms, near)
-            if cand is None:
-                cand = prox
-            else:
-                # intersection: count is only bounded (<= min), range is
-                # the overlap — both stay valid skip inputs
-                cand = _CandSet(
-                    frame=cand.frame.join(prox.frame, "doc_id", "left_semi"),
-                    n=min(cand.n, prox.n),
-                    lo=max(cand.lo, prox.lo) if cand.n and prox.n else None,
-                    hi=min(cand.hi, prox.hi) if cand.n and prox.n else None,
-                )
-        if cand is not None and cand.n == 0:
-            # empty filter set: nothing can match — skip scoring entirely
-            scored = self.spark.createDataFrame([], "doc_id long, score double")
-        else:
-            scored = self._score(st, terms, cand, k, wand_stats=wand_stats)
+            cand = self._cached_candidates(
+                st, ("p", *phrase),
+                lambda: phrase_doc_ids(st.blocks, st.vocab, phrase,
+                                       term_rows=self._lookup_cached(phrase, st)),
+            )
+        elif near is not None:
+            cand = self._cached_candidates(
+                st, ("n", str(near), *terms),
+                lambda: proximity_windows(st.blocks, st.vocab, terms, near,
+                                          term_rows=self._lookup_cached(terms, st))
+                .select("doc_id"),
+            )
+        # wand_top_k prunes and limits internally (honoring k — a
+        # k > cfg.top_k request must not be capped by the config
+        # default); the re-limit here is idempotent.  wand_top_k returns
+        # at once for an empty candidate set, which needs no term lookup.
+        scored = W.wand_top_k(
+            st.blocks, st.docs, st.vocab, terms,
+            st.n_docs, st.avg_doc_len, self.scoring,
+            candidates=cand,
+            term_rows=self._lookup_cached(terms, st) if cand is None or cand.n else [],
+            bounds_cache=st.bounds_cache,
+            persist_registry=st.persist_pool,
+            k=k,
+            stats=wand_stats,
+        )
         result = top_k(scored, k)
         return self._assemble(st, result) if assemble else result
 
     # ------------------------------------------------------------ internals
-    def _phrase_candidates(self, st: _SnapshotState, phrase: list[str]) -> _CandSet:
-        """Phrase doc-id set through the snapshot's LRU result cache.
+    def _cached_candidates(self, st: _SnapshotState, key: tuple, compute) -> W.Candidates:
+        """The phrase (key ``("p", *phrase)``) or proximity (key ``("n",
+        window, *terms)``) candidate set through the snapshot's LRU cache.
 
         A hit skips the whole positional pipeline (decode + adjacency
-        fold); a miss computes it once, materializes the (small) doc-id
-        set with one persist-populating agg job, and caches it.  Hot
-        phrases repeat heavily in real query logs, and the set is
-        k-independent, so this is the highest-value cacheable unit in the
-        serving path."""
-        key = ("p", *phrase)
-        hit = self._cache_get(st, key)
-        if hit is not None:
-            return hit
-        ids = phrase_doc_ids(
-            st.blocks, st.vocab, phrase, term_rows=self._lookup_cached(phrase, st)
-        ).persist()
-        return self._cache_candidates(st, key, ids)
-
-    def _near_candidates(self, st: _SnapshotState, terms: list[str], window: int) -> _CandSet:
-        """Proximity doc-id set through the same LRU cache (keyed by the
-        term set + window; like phrase, k-independent and score-free)."""
-        key = ("n", str(window), *terms)
-        hit = self._cache_get(st, key)
-        if hit is not None:
-            return hit
-        ids = proximity_windows(
-            st.blocks, st.vocab, terms, window, term_rows=self._lookup_cached(terms, st)
-        ).select("doc_id").persist()
-        return self._cache_candidates(st, key, ids)
-
-    def _cache_get(self, st: _SnapshotState, key: tuple) -> _CandSet | None:
+        fold or minimal-cover scan); a miss runs ``compute()`` for the
+        doc-id frame, persists it and materializes it once.  Hot phrases
+        repeat heavily in real query logs, and the set is k-independent
+        and score-free, so this is the highest-value cacheable unit in
+        the serving path."""
         with st.lock:
             hit = st.phrase_cache.pop(key, None)
-            if hit is None:
-                return None
-            st.phrase_cache[key] = hit  # re-insert: LRU recency
-        _base, hinted, n, lo, hi = hit
-        return _CandSet(frame=hinted, n=n, lo=lo, hi=hi)
+            if hit is not None:
+                st.phrase_cache[key] = hit  # re-insert: LRU recency
+                return hit[1]
+        return self._cache_candidates(st, key, compute().persist())
 
-    def _cache_candidates(self, st: _SnapshotState, key: tuple, ids: DataFrame) -> _CandSet:
+    def _cache_candidates(self, st: _SnapshotState, key: tuple, ids: DataFrame) -> W.Candidates:
         # materialize now (the scoring job must not re-run the positional
-        # pipeline) with ONE agg job that also returns the driver-side
-        # facts the scorer skips blocks with: count, min and max doc id
-        # (directive r4-4/r4-5: no extra job over the old bare count).
-        # With the count in hand, pin a broadcast hint on small sets:
-        # every downstream semi-join (WAND's decoded stream, the
-        # phrase∩near intersection, the block containment skip)
-        # ships the candidate set to the executors instead of shuffling
-        # the big side (serving runs AQE-off, so there is no runtime
-        # rescue).  Same cap as phrase.py's survivor broadcast.
-        from ..operators.phrase import _BROADCAST_SURVIVOR_CAP
-
-        row = ids.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-        ).collect()[0]
-        n = int(row["n"])
-        lo = int(row["lo"]) if row["lo"] is not None else None
-        hi = int(row["hi"]) if row["hi"] is not None else None
-        entry = F.broadcast(ids) if n <= _BROADCAST_SURVIVOR_CAP else ids
-        # cache (persisted base, hinted frame, n, lo, hi): unpersist
-        # resolves by plan identity, so eviction must go through the base —
-        # the hint wrapper's plan is not the one that was persisted.  The
-        # lock covers the LRU mutation only; evicted bases are unpersisted
+        # pipeline): one agg job, see wand.materialize_candidates
+        cand = W.materialize_candidates(ids)
+        # cache (persisted base, Candidates): unpersist resolves by plan
+        # identity, so eviction must go through the base — the broadcast
+        # hint wrapper's plan is not the one that was persisted.  The lock
+        # covers the LRU mutation only; evicted bases are unpersisted
         # outside it.
         evicted = None
         with st.lock:
@@ -444,43 +396,15 @@ class QueryEngine:
                 # first-inserted entry (its frame may already back another
                 # in-flight query) and drop ours — without this, the loser's
                 # persisted base would stay pinned with no owner
-                evicted = ids
-                _base, hinted, n2, lo2, hi2 = dup
-                out = _CandSet(frame=hinted, n=n2, lo=lo2, hi=hi2)
+                evicted, cand = ids, dup[1]
             else:
                 if len(st.phrase_cache) >= self._phrase_cache_cap:
                     oldest = next(iter(st.phrase_cache))
                     evicted = st.phrase_cache.pop(oldest)[0]
-                st.phrase_cache[key] = (ids, entry, n, lo, hi)
-                out = _CandSet(frame=entry, n=n, lo=lo, hi=hi)
+                st.phrase_cache[key] = (ids, cand)
         if evicted is not None:
             evicted.unpersist(blocking=False)
-        return out
-
-    def _score(self, st: _SnapshotState, terms: list[str],
-               cand: _CandSet | None = None, k: int | None = None,
-               wand_stats: dict | None = None) -> DataFrame:
-        # wand_top_k prunes and limits internally (honoring k — a
-        # k > cfg.top_k request must not be capped by the config
-        # default); re-limit happens in search_terms (idempotent).
-        # Pruning needs bm25's additive bounds, so a reference query
-        # decodes exhaustively.
-        return W.wand_top_k(
-            st.blocks, st.docs, st.vocab, terms,
-            st.n_docs, st.avg_doc_len, self.scoring,
-            candidates=cand.frame if cand is not None else None,
-            term_rows=self._lookup_cached(terms, st),
-            bounds_cache=st.bounds_cache,
-            persist_registry=st.persist_pool,
-            k=k,
-            prune=self.wand_prune if self.scoring.scorer == "bm25" else False,
-            stats=wand_stats,
-            candidate_range=(
-                (cand.lo, cand.hi)
-                if cand is not None and cand.lo is not None else None
-            ),
-            candidate_count=cand.n if cand is not None else None,
-        )
+        return cand
 
     def _collect_concurrently(self, frames: dict[str, DataFrame]) -> dict[str, list]:
         """Collect every frame at once: the first on the calling thread,

@@ -170,8 +170,11 @@ def make_handler(engine):
                     self._html(200, render_index_page())
                     return
                 try:
+                    # one parse serves the page header and the search
                     pq = parse_query(query, engine.analysis)
-                    rows = engine.search(query, k=MAX_SEARCH_RESULTS).collect()
+                    rows = engine.search_terms(
+                        pq.keywords, pq.phrase, k=MAX_SEARCH_RESULTS
+                    ).collect()
                     self._html(200, render_result_page(pq.keywords, pq.phrase, rows))
                 except Exception as e:  # noqa: BLE001 — surface as HTTP 500
                     self._html(
